@@ -927,23 +927,28 @@ class OntologyCatalog:
     def get_ancestors(self, prefix: str, identifier: str) -> set[str]:
         """Returns CURIE strings (reference returns set[Reference],
         api/hierarchy.py:205-214) — curie-keyed so multi-ontology
-        catalogs with colliding numeric locals can't merge hierarchies."""
-        clos = hierarchy.ancestors(hierarchy.curie_edges(self.parents, prefix))
+        catalogs with colliding numeric locals can't merge hierarchies.
+
+        Walks outward from the one node (hierarchy.reachable): a
+        bounded hierarchy (≤ BROADCAST_CLOSURE_MAX_EDGES edges,
+        $PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES) costs one capped edge
+        collect and a driver-side sweep; a larger one falls back to the
+        all-pairs closure filtered to the node. At most 51 levels; the
+        node is its own ancestor only when a cycle leads back to it."""
         node = self._as_curie(prefix, identifier)
-        return {
-            r["ancestor"]
-            for r in clos.where(F.col("identifier") == node).collect()
-        }
+        return hierarchy.reachable(
+            hierarchy.curie_edges(self.parents, prefix), [node]
+        )[node]
 
     def get_descendants(self, prefix: str, identifier: str) -> set[str]:
-        clos = hierarchy.descendants(
-            hierarchy.curie_edges(self.parents, prefix)
-        )
+        """CURIE strings of every node below ``identifier``
+        (api/hierarchy.py:140-148). Same rooted path, gate, fallback and
+        cycle and level-cap semantics as :meth:`get_ancestors`, walking
+        parent → child."""
         node = self._as_curie(prefix, identifier)
-        return {
-            r["descendant"]
-            for r in clos.where(F.col("identifier") == node).collect()
-        }
+        return hierarchy.reachable(
+            hierarchy.curie_edges(self.parents, prefix), [node], down=True
+        )[node]
 
     def get_children(self, prefix: str, identifier: str) -> set[str]:
         node = self._as_curie(prefix, identifier)
@@ -1024,22 +1029,21 @@ class OntologyCatalog:
         ancestors THEMSELVES are excluded. Closure runs on full-CURIE
         edge keys (bare locals collide across ontologies in a
         multi-ontology catalog — hierarchy.curie_edges)."""
-        from .operators import hierarchy as H
-
         anc = [ancestors] if isinstance(ancestors, str) else list(ancestors)
         p = prefix.lower()
         anc_curies = [self._as_curie(p, a) for a in anc]
-        closure = H.descendants(H.curie_edges(self.parents, p)).where(
-            F.col("identifier").isin(anc_curies)
+        reached = hierarchy.reachable(
+            hierarchy.curie_edges(self.parents, p), anc_curies, down=True
         )
-        members = (
-            closure.where(F.col("descendant").startswith(f"{p}:"))
-            .select(
-                F.regexp_replace("descendant", f"^{p}:", "").alias(
-                    "identifier"
-                )
-            )
-            .distinct()
+        members = hierarchy.node_frame(
+            self._spark,
+            {
+                c[len(p) + 1:]
+                for below in reached.values()
+                for c in below
+                if c.startswith(f"{p}:")
+            },
+            "identifier",
         )
         return self.get_literal_mappings_df(p).join(
             members, on="identifier", how="left_semi"

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import env_edge_bound
+
 #: Collect bound for the driver-side union-find fast path (same
 #: reasoning — and same default — as hierarchy.BROADCAST_CLOSURE_MAX_
 #: EDGES): ontology xref/equivalence graphs are bounded artifacts that
@@ -31,12 +33,8 @@ CC_BROADCAST_MAX_EDGES = 3_000_000
 
 
 def _cc_broadcast_bound() -> int:
-    import os
-
-    return int(
-        os.environ.get(
-            "PYOBO_SPARK_CC_BROADCAST_MAX_EDGES", CC_BROADCAST_MAX_EDGES
-        )
+    return env_edge_bound(
+        "PYOBO_SPARK_CC_BROADCAST_MAX_EDGES", CC_BROADCAST_MAX_EDGES
     )
 
 

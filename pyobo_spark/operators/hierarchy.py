@@ -3,14 +3,35 @@
 ancestors/descendants via nx traversal struct.py:1473-1496,
 api/hierarchy.py:140-227).
 
-Spark-first design: the hierarchy is an edge DataFrame (child, parent);
-transitive closure is an iterative frontier self-join (BFS). Each
-iteration localCheckpoints to cut lineage (otherwise the plan doubles per
-hop and Catalyst analysis time blows up). Edge tables are re-used across
-iterations, so on a cluster you'd persist the (hash-partitioned-by-child)
-edges once and every join co-locates on that partitioning — one shuffle
-total for the whole closure, not one per hop. Depth is O(DAG depth), ~5
-for the fixture tree, ~15 for real ontologies (GO max depth ≈ 16).
+The hierarchy is an edge DataFrame (child, parent). Two kinds of
+question are asked of it, and each has its own operator:
+
+- **Rooted** — the ancestors or descendants of one or a few nodes
+  (get_ancestors, get_descendants, has_ancestor, subhierarchy; the
+  reference walks outward from the node, api/hierarchy.py:205-214).
+  :func:`reachable` answers these. For bounded graphs (raw edge count
+  ≤ BROADCAST_CLOSURE_MAX_EDGES, overridable via
+  $PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES) it runs ONE capped Arrow
+  collect of the edges — that collect is both the size gate and the
+  input — and sweeps outward from each root over a driver-side CSR
+  adjacency. Above the bound it falls back to the all-pairs closure
+  below, filtered to the roots.
+- **All-pairs** — the full closure, (identifier, ancestor) for every
+  node: :func:`ancestors` / :func:`descendants`. Bounded graphs take a
+  broadcast map-side closure (_ancestors_broadcast); larger ones an
+  iterative frontier self-join (BFS). Each BFS iteration
+  localCheckpoints to cut lineage (otherwise the plan doubles per hop
+  and Catalyst analysis time blows up). Edge tables are re-used across
+  iterations, so on a cluster you'd persist the
+  (hash-partitioned-by-child) edges once and every join co-locates on
+  that partitioning — one shuffle total for the whole closure, not one
+  per hop. Depth is O(DAG depth), ~5 for the fixture tree, ~15 for
+  real ontologies (GO max depth ≈ 16).
+
+Every path has the same semantics: a per-node level BFS with a
+seen-set, at most ``max_iter + 1`` levels deep. Duplicate edges and
+self-loops are absorbed; a node is its own ancestor only when a cycle
+leads back to it; a node with no outgoing edge has none.
 """
 
 from __future__ import annotations
@@ -18,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import env_edge_bound
 
 #: Diagnostics from the most recent ancestors()/descendants() BFS in this
 #: process: {"hops": iterations run, "hop_plan": formatted plan of the
@@ -112,18 +135,14 @@ def curie_edges(parents: DataFrame, prefix: str | None = None) -> DataFrame:
 #: grounding dictionary's documented collect bound (dictionary.py). The
 #: CSR adjacency for 3e6 edges broadcasts at ~50 MB pickled / ~300 MB
 #: resident per Python worker; above the bound ancestors() falls back to
-#: the distributed frontier BFS unchanged.
+#: the distributed frontier BFS unchanged. reachable() uses the same
+#: bound as its driver-side collect gate.
 BROADCAST_CLOSURE_MAX_EDGES = 3_000_000
 
 
 def _broadcast_bound() -> int:
-    import os
-
-    return int(
-        os.environ.get(
-            "PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES",
-            BROADCAST_CLOSURE_MAX_EDGES,
-        )
+    return env_edge_bound(
+        "PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES", BROADCAST_CLOSURE_MAX_EDGES
     )
 
 
@@ -321,6 +340,118 @@ def descendants(
     )
 
 
+def reachable(
+    edges: DataFrame,
+    roots: list[str],
+    max_iter: int = 50,
+    broadcast_edge_bound: int | None = None,
+    down: bool = False,
+) -> dict[str, set[str]]:
+    """Rooted closure: {root: nodes reachable from root} for each of a
+    few ``roots``, following child → parent (ancestors), or parent →
+    child with ``down=True`` (descendants). Equals :func:`ancestors` /
+    :func:`descendants` filtered to the roots, with the same semantics:
+    at most ``max_iter + 1`` levels; a root is in its own set only when
+    a cycle leads back to it; a root with no outgoing edge, or not in
+    the graph, maps to an empty set.
+
+    Graphs whose raw edge count fits ``broadcast_edge_bound`` (default
+    BROADCAST_CLOSURE_MAX_EDGES; pass 0 to force the fallback) are
+    answered with ONE Spark job: a capped Arrow collect that is both
+    the size gate and the input of a driver-side sweep (_sweep).
+    Larger graphs fall back to the all-pairs closure, filtered to the
+    roots."""
+    roots = list(dict.fromkeys(roots))
+    if not roots:
+        return {}
+    bound = (
+        _broadcast_bound()
+        if broadcast_edge_bound is None
+        else broadcast_edge_bound
+    )
+    src, dst = ("parent", "child") if down else ("child", "parent")
+    cap = min(bound, 2**31 - 2)  # Spark's limit is a 32-bit int
+    if cap > 0:
+        tbl = edges.select(src, dst).limit(cap + 1).toArrow()
+        if tbl.num_rows <= cap:
+            return _sweep(tbl, roots, max_iter + 1)
+    # over the bound: the capped collect already proved it, so skip the
+    # closure's own count and go straight to the distributed BFS
+    closure, col = (
+        (descendants, "descendant") if down else (ancestors, "ancestor")
+    )
+    out: dict[str, set[str]] = {r: set() for r in roots}
+    for r in (
+        closure(edges, max_iter=max_iter, broadcast_edge_bound=0)
+        .where(F.col("identifier").isin(roots))
+        .collect()
+    ):
+        out[r["identifier"]].add(r[col])
+    return out
+
+
+def _sweep(tbl, roots: list[str], levels: int) -> dict[str, set[str]]:
+    """Per-root level BFS over a CSR adjacency of the (src, dst) edge
+    table ``tbl``. Endpoint strings are dictionary-encoded to dense
+    int32 ids once (pyarrow), the CSR is an argsort + bincount (numpy),
+    and each level gathers the frontier's adjacency slices in one
+    vectorized step; only the reached ids are decoded back to strings.
+    Same sets as _ancestors_broadcast's per-node kernel: the seen-set
+    starts empty (a root enters it only around a cycle), so duplicate
+    edges and self-loops are absorbed and cycles terminate."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    u, v = tbl.column(0), tbl.column(1)
+    # a NULL endpoint never matches a join key: the closure drops it too
+    ok = pc.and_(pc.is_valid(u), pc.is_valid(v))
+    u, v = u.filter(ok), v.filter(ok)
+    enc = pa.chunked_array(u.chunks + v.chunks, type=u.type)
+    enc = enc.combine_chunks().dictionary_encode()
+    names = enc.dictionary
+    ids = enc.indices.to_numpy()
+    n_edges, n_nodes = len(u), len(names)
+    cu, pv = ids[:n_edges], ids[n_edges:]
+    nbrs = pv[np.argsort(cu, kind="stable")]
+    indptr = np.zeros(n_nodes + 1, dtype=np.int64)
+    np.cumsum(np.bincount(cu, minlength=n_nodes), out=indptr[1:])
+    root_ids = pc.index_in(pa.array(roots, type=names.type), value_set=names)
+
+    seen = np.zeros(n_nodes, dtype=bool)
+    out: dict[str, set[str]] = {}
+    for root, rid in zip(roots, root_ids.to_pylist()):
+        reached = []
+        frontier = np.array([] if rid is None else [rid], dtype=np.int64)
+        for _ in range(levels):
+            starts = indptr[frontier]
+            cnt = indptr[frontier + 1] - starts
+            total = int(cnt.sum())
+            if not total:
+                break
+            # concatenated adjacency slices of every frontier node
+            gather = np.repeat(starts - np.cumsum(cnt) + cnt, cnt)
+            nxt = np.unique(nbrs[gather + np.arange(total)])
+            nxt = nxt[~seen[nxt]]
+            if not len(nxt):
+                break
+            seen[nxt] = True
+            reached.append(nxt)
+            frontier = nxt
+        hit = np.concatenate(reached) if reached else np.empty(0, np.int32)
+        seen[hit] = False  # reset for the next root
+        out[root] = set(names.take(pa.array(hit)).to_pylist())
+    return out
+
+
+def node_frame(spark, nodes: set[str], col: str) -> DataFrame:
+    """A small one-column DataFrame of ``nodes`` (for a semi-join)."""
+    return spark.createDataFrame(
+        [(n,) for n in sorted(nodes)],
+        T.StructType([T.StructField(col, T.StringType())]),
+    )
+
+
 def children(edges: DataFrame, node: str) -> DataFrame:
     """1-hop predecessors (get_children, api/hierarchy.py:140-149)."""
     return edges.where(F.col("parent") == node).select(
@@ -329,25 +460,28 @@ def children(edges: DataFrame, node: str) -> DataFrame:
 
 
 def has_ancestor(edges: DataFrame, nodes: DataFrame, ancestor: str) -> DataFrame:
-    """Membership in the upward closure (struct.py:1483-1496): semi-join
-    nodes against closure rows ending at `ancestor`."""
-    clos = ancestors(edges).where(F.col("ancestor") == ancestor)
-    return nodes.join(clos.select("identifier"), on="identifier", how="left_semi")
+    """Membership in the upward closure (struct.py:1483-1496): the nodes
+    with ``ancestor`` among their ancestors are exactly its descendants,
+    so sweep down from it (reachable) and semi-join nodes against that
+    set."""
+    below = reachable(edges, [ancestor], down=True)[ancestor]
+    return nodes.join(
+        node_frame(nodes.sparkSession, below, "identifier"),
+        on="identifier",
+        how="left_semi",
+    )
 
 
 def subhierarchy(edges: DataFrame, root: str) -> DataFrame:
     """Induced subgraph of descendants(root) ∪ {root}
-    (api/hierarchy.py:216-227): closure → semi-join both edge endpoints."""
-    desc = descendants(edges).where(F.col("identifier") == root)
-    members = desc.select(F.col("descendant").alias("node")).unionByName(
-        desc.sparkSession.createDataFrame(
-            [(root,)], T.StructType([T.StructField("node", T.StringType())])
-        )
-    ).distinct()
+    (api/hierarchy.py:216-227): rooted sweep → semi-join both edge
+    endpoints."""
+    members = reachable(edges, [root], down=True)[root] | {root}
+    m = node_frame(edges.sparkSession, members, "node")
     e = edges.join(
-        members.withColumnRenamed("node", "child"), on="child", how="left_semi"
+        m.withColumnRenamed("node", "child"), on="child", how="left_semi"
     ).join(
-        members.withColumnRenamed("node", "parent"), on="parent", how="left_semi"
+        m.withColumnRenamed("node", "parent"), on="parent", how="left_semi"
     )
     return e.select("child", "parent")
 

@@ -824,10 +824,10 @@ def q_literal_mappings_subset(spark, sf_dir):
     """get_literal_mappings_subset (api/combine.py:19-39): semi-join the
     dictionary against the descendant set of a given ancestor."""
     syn = tp.synonyms(spark, sf_dir)
-    desc = hierarchy.descendants(tp.parents(spark, sf_dir)).where(
-        F.col("identifier") == "0000001"
-    )
-    members = desc.select(F.col("descendant").alias("identifier"))
+    desc = hierarchy.reachable(
+        tp.parents(spark, sf_dir), ["0000001"], down=True
+    )["0000001"]
+    members = hierarchy.node_frame(spark, desc, "identifier")
     return syn.join(members, on="identifier", how="left_semi").select(
         "prefix", "identifier", "text", "predicate"
     )

@@ -4,6 +4,7 @@ helpers, pipeline checkpoint/resume, multimodal plumbing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyobo_spark.operators import dedup, hierarchy, multimodal, similarity
@@ -159,6 +160,49 @@ def test_closure_broadcast_matches_bfs(spark):
     assert len(fast_rows) == len(fast)
     assert ("x", "x") in fast  # cycle: self-reachable
     assert ("d", "a") in fast
+
+
+@pytest.mark.parametrize("raw", ["3e6", "-5"])
+def test_bfs_bound_env_malformed_falls_back(spark, monkeypatch, raw):
+    """A malformed or negative $PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES
+    warns and uses the default bound; the query still answers."""
+    monkeypatch.setenv("PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES", raw)
+    with pytest.warns(UserWarning, match="PYOBO_SPARK_BFS_BROADCAST"):
+        assert (
+            hierarchy._broadcast_bound()
+            == hierarchy.BROADCAST_CLOSURE_MAX_EDGES
+        )
+    edges = spark.createDataFrame(
+        [("b", "a"), ("c", "b")], "child string, parent string"
+    )
+    with pytest.warns(UserWarning):
+        assert hierarchy.reachable(edges, ["c"]) == {"c": {"a", "b"}}
+
+
+@pytest.mark.parametrize("raw", ["many", "-1"])
+def test_cc_bound_env_malformed_falls_back(spark, monkeypatch, raw):
+    """Same for $PYOBO_SPARK_CC_BROADCAST_MAX_EDGES."""
+    from pyobo_spark.operators import components as C
+
+    monkeypatch.setenv("PYOBO_SPARK_CC_BROADCAST_MAX_EDGES", raw)
+    with pytest.warns(UserWarning, match="PYOBO_SPARK_CC_BROADCAST"):
+        assert C._cc_broadcast_bound() == C.CC_BROADCAST_MAX_EDGES
+    df = spark.createDataFrame([("a", "b"), ("c", "b")], "src string, dst string")
+    with pytest.warns(UserWarning):
+        got = {
+            (r["curie"], r["component"])
+            for r in C.connected_components(df).collect()
+        }
+    assert got == {("a", "a"), ("b", "a"), ("c", "a")}
+
+
+def test_env_edge_bound_accepts_zero_and_unset(monkeypatch):
+    from pyobo_spark.operators import env_edge_bound
+
+    monkeypatch.delenv("PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES", raising=False)
+    assert env_edge_bound("PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES", 7) == 7
+    monkeypatch.setenv("PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES", "0")
+    assert env_edge_bound("PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES", 7) == 0
 
 
 def test_connected_components_path_graph(spark):

@@ -261,6 +261,38 @@ def test_descendants_bfs_shuffle_work_linear_in_depth(spark, sf_dir):
     assert stages <= 12 + 14 * hops, (stages, hops)
 
 
+def test_rooted_hierarchy_lookups_run_one_job(spark, tmp_path):
+    """A bounded get_ancestors / get_descendants is ONE capped edge
+    collect plus a driver-side sweep (hierarchy.reachable) — not the
+    all-pairs closure, which runs 8 jobs for the same answer. Parquet
+    backed, as a served catalog is, so every scan is a real job."""
+    from pyobo_spark.api import catalog_from_parquet
+    from pyobo_spark.fixtures import generator
+
+    tables = generator.to_spark(spark, generator.generate(n_terms=40, n_docs=5))
+    for name in ("terms", "parents"):
+        tables[name].write.parquet(str(tmp_path / f"{name}.parquet"))
+    cat = catalog_from_parquet(spark, str(tmp_path))
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    calls = {
+        "anc": lambda: cat.get_ancestors("fixo", "0000016"),
+        "desc": lambda: cat.get_descendants("fixo", "0000004"),
+    }
+    got = {}
+    for name, call in calls.items():
+        group = f"rooted_guard_{name}"
+        sc.setJobGroup(group, "rooted hierarchy job-count guard")
+        try:
+            got[name] = call()
+        finally:
+            sc.setJobGroup("tests", "post")
+        assert len(st.getJobIdsForGroup(group)) == 1, name
+    # parents tree over 40 terms: i -> i // 4
+    assert got["anc"] == {"fixo:0000004", "fixo:0000001"}
+    assert got["desc"] == {f"fixo:{i:07d}" for i in range(16, 20)}
+
+
 def test_ann_cosine_lsh_shuffle_budget(spark, sf_dir):
     """Multi-table hyperplane LSH must shuffle on exactly two HASH
     exchanges — candidate dedup (distinct) and the per-query top-k

@@ -211,3 +211,56 @@ def test_expasy_chunk_parser_total(lines):
     recs = _parse_records_in_chunk("\n".join(lines))
     for rec in recs:
         assert rec[0]  # identifier present and non-empty
+
+
+_NODES = [f"n{i}" for i in range(10)]
+# fixed features every drawn graph carries besides its random edges: a
+# self-loop, a duplicate edge, a 3-cycle, a hub with many children and
+# a part disconnected from the rest
+_FIXED_EDGES = [
+    ("n0", "n0"), ("n1", "n2"), ("n1", "n2"),
+    ("c0", "c1"), ("c1", "c2"), ("c2", "c0"),
+    *[(f"h{i}", "hub") for i in range(6)], ("hub", "n3"),
+    ("z0", "z1"), ("z1", "z2"),
+]
+
+
+@given(
+    extra=st.lists(
+        st.tuples(st.sampled_from(_NODES), st.sampled_from(_NODES)),
+        max_size=30,
+    ),
+    roots=st.lists(
+        st.sampled_from(_NODES + ["c0", "hub", "h1", "z0", "z2", "absent"]),
+        min_size=1,
+        max_size=4,
+    ),
+    max_iter=st.sampled_from([0, 1, 2, 50]),
+)
+@settings(max_examples=10, deadline=None)
+def test_rooted_reachable_equals_filtered_closure(spark, extra, roots, max_iter):
+    """hierarchy.reachable (the rooted sweep, and its fallback with
+    broadcast_edge_bound=0) equals the all-pairs closure filtered to
+    the roots, upward and downward, at every level cap."""
+    from pyobo_spark.operators import hierarchy as H
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 8
+    edges = spark.createDataFrame(
+        spark.sparkContext.parallelize(_FIXED_EDGES + extra, 3),
+        "child string, parent string",
+    )
+    assert edges.rdd.getNumPartitions() >= 2
+    for down, closure, col in (
+        (False, H.ancestors, "ancestor"),
+        (True, H.descendants, "descendant"),
+    ):
+        want: dict[str, set[str]] = {r: set() for r in roots}
+        for r in closure(edges, max_iter=max_iter).collect():
+            if r["identifier"] in want:
+                want[r["identifier"]].add(r[col])
+        for bound in (None, 0):
+            got = H.reachable(
+                edges, roots, max_iter=max_iter,
+                broadcast_edge_bound=bound, down=down,
+            )
+            assert got == want, (down, bound)
