@@ -13,6 +13,10 @@ Hub-skew (a node with ~30% of edges — NCBITaxon-style) is absorbed by
 re-attaches a hub's neighbors directly to the minimum — the classic
 pointer-halving that makes the star graphs shallow. localCheckpoint per
 round cuts lineage.
+
+Bounded graphs (the usual case: ontology xref graphs do not grow with
+the corpus) skip the rounds: one capped collect brings the edges to the
+driver, where graph_local's union-find solves them.
 """
 
 from __future__ import annotations
@@ -20,15 +24,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import env_edge_bound
+from . import env_edge_bound, graph_local
 
 #: Collect bound for the driver-side union-find fast path (same
 #: reasoning — and same default — as hierarchy.BROADCAST_CLOSURE_MAX_
 #: EDGES): ontology xref/equivalence graphs are bounded artifacts that
 #: do not scale with the corpus, and the fuzzy-dedup candidate graph is
-#: the (small) LSH-survivor set, not the corpus. 3e6 int64 edge pairs
-#: collect at ~50 MB via Arrow. Above the bound the alternating-star
-#: rounds below run unchanged.
+#: the (small) LSH-survivor set, not the corpus. The collect is two
+#: Arrow string columns: with 12-character curies and 8-byte offsets,
+#: 40 B per edge, 120 MB at the bound. A graph above the bound pays
+#: that collect too (bound + 1 rows, then dropped) before the
+#: alternating-star rounds below: about 3 s and 100 MB of driver
+#: memory at the default bound on 4 cores.
 CC_BROADCAST_MAX_EDGES = 3_000_000
 
 
@@ -60,11 +67,14 @@ def _partitioned_dedup(df: DataFrame) -> DataFrame:
     return df.repartition("src").dropDuplicates(["src", "dst"])
 
 
-def _canonical_undirected(edges: DataFrame) -> DataFrame:
-    """Make edges undirected & canonical: keep both directions, drop
-    self-loops and dupes. Symmetrized by a map-side explode (one scan
-    of the edge source, not one per direction)."""
-    both = edges.select(
+def _sym_dedup(df: DataFrame) -> DataFrame:
+    """Symmetrize + dedup in a single src-clustered shuffle.
+
+    Symmetrization is an EXPLODE of each row into its two directions,
+    not a union of the subtree with its own reversal: the union form
+    plans the star's aggregate+join subtree TWICE per half-round (one
+    copy per union branch), doubling the per-round compute."""
+    both = df.select(
         F.explode(
             F.array(
                 F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
@@ -72,7 +82,7 @@ def _canonical_undirected(edges: DataFrame) -> DataFrame:
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-    return _partitioned_dedup(both.where(F.col("src") != F.col("dst")))
+    return _partitioned_dedup(both)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -106,87 +116,28 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.where(F.col("src") != F.col("dst"))
 
 
-def _cc_broadcast(edges: DataFrame) -> DataFrame:
-    """Driver-side union-find for bounded graphs: a CONSTANT number of
-    jobs instead of O(log n) star rounds at 3 exchanges each (guide
-    §1.2: fix the distributed algorithm first).
+def _cc_local(spark, tbl) -> DataFrame:
+    """Driver-side union-find over the collected (src, dst) Arrow table
+    ``tbl``. Endpoints are dictionary-encoded in value order
+    (graph_local.encode), so each component's minimum id IS its minimum
+    curie in Spark's string order; min-label propagation
+    (graph_local.min_labels) finds it, and the (curie, component)
+    table goes back to Spark as Arrow, one row per node in curie order.
+    Self-loops only make their node; an edge with a NULL endpoint
+    still makes its other endpoint a node, and a NULL endpoint is one
+    node, (NULL, NULL), as in the star rounds."""
+    import pyarrow as pa
 
-    Strings never cross the Python driver boundary (the lesson from
-    hierarchy._ancestors_broadcast's string-keyed prototype): node ids
-    become JVM surrogate ids assigned AFTER a global sort of the node
-    column — monotonically_increasing_id over range-partitioned sorted
-    nodes is order-preserving (partition index in the high bits, row
-    offset in the low bits), so gid order == node order and the min-gid
-    root of a component IS its min-node representative. The driver
-    collects only int64 edge pairs (Arrow), runs vectorized min-label
-    propagation with pointer-jumping compression (numpy — converges in
-    O(log n) rounds), ships back an int64 (gid, root) table, and the
-    id→string translation at both ends is a JVM broadcast hash join.
-
-    The eager localCheckpoint pins the nondeterministic gid expression
-    so every consumer (sn/dn translation sides, the result joins) sees
-    ONE id assignment.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = edges.sparkSession
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .orderBy("node")
-        .withColumn("gid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
+    names, u, v = graph_local.encode(tbl, sort=True)
+    ok = (u >= 0) & (v >= 0) & (u != v)
+    lab = graph_local.min_labels(len(names), u[ok], v[ok])
+    curie, component = names, names.take(pa.array(lab))
+    if (u < 0).any() or (v < 0).any():
+        curie = pa.concat_arrays([curie, pa.nulls(1, curie.type)])
+        component = pa.concat_arrays([component, pa.nulls(1, curie.type)])
+    return spark.createDataFrame(
+        pa.table({"curie": curie, "component": component})
     )
-    sn = nodes.select(F.col("node").alias("_sn"), F.col("gid").alias("sgid"))
-    dn = nodes.select(F.col("node").alias("_dn"), F.col("gid").alias("dgid"))
-    ne = edges.where(F.col("src") != F.col("dst"))
-    e_idx = (
-        ne.join(F.broadcast(sn), ne.src == sn._sn)
-        .join(F.broadcast(dn), ne.dst == dn._dn)
-        .select("sgid", "dgid")
-    )
-    pdf = e_idx.toPandas()  # bounded ints: caller checked the edge count
-    sg = pdf["sgid"].to_numpy(dtype=np.int64)
-    dg = pdf["dgid"].to_numpy(dtype=np.int64)
-    if len(sg):
-        uniq = np.unique(np.concatenate([sg, dg]))  # sorted: dense ids
-        u = np.searchsorted(uniq, sg)  # keep gid (== node) order
-        v = np.searchsorted(uniq, dg)
-        lab = np.arange(len(uniq), dtype=np.int64)
-        while True:
-            # each endpoint adopts the smaller current label; labels
-            # only ever flow along edges, so they stay in-component and
-            # decrease monotonically toward the component's min dense
-            # id (== min gid == min node, by the order-preserving maps)
-            m = np.minimum(lab[u], lab[v])
-            np.minimum.at(lab, u, m)
-            np.minimum.at(lab, v, m)
-            while True:  # pointer-jumping compression
-                ll = lab[lab]
-                if np.array_equal(ll, lab):
-                    break
-                lab = ll
-            if np.array_equal(lab[u], lab[v]):
-                break  # every edge internally agreed -> converged
-        map_pdf = pd.DataFrame({"gid": uniq, "root": uniq[lab]})
-    else:  # only self-loops (or no edges at all)
-        map_pdf = pd.DataFrame(
-            {
-                "gid": pd.Series(dtype="int64"),
-                "root": pd.Series(dtype="int64"),
-            }
-        )
-    map_df = spark.createDataFrame(map_pdf, schema="gid long, root long")
-    # isolated nodes (self-loop-only) have no map row: they label
-    # themselves via the coalesce
-    labeled = nodes.join(F.broadcast(map_df), on="gid", how="left").select(
-        F.col("node").alias("curie"),
-        F.coalesce(F.col("root"), F.col("gid")).alias("_rg"),
-    )
-    rep = nodes.select(F.col("gid").alias("_rg"), F.col("node").alias("component"))
-    return labeled.join(F.broadcast(rep), on="_rg").select("curie", "component")
 
 
 def connected_components(
@@ -194,30 +145,34 @@ def connected_components(
     max_iter: int = 30,
     broadcast_edge_bound: int | None = None,
 ) -> DataFrame:
-    """Return (curie, component) where component = min curie of the class.
+    """Return (curie, component) where component = min curie of the
+    class, in Spark's string order. One row per distinct endpoint.
 
     edges: DataFrame(src, dst) — direction irrelevant.
 
-    Graphs whose RAW edge count (an over-estimate: direction dupes and
-    self-loops included, so the check never under-counts) fits
+    Graphs whose RAW edge count (direction dupes and self-loops
+    included, so the check never under-counts) fits
     ``broadcast_edge_bound`` (default CC_BROADCAST_MAX_EDGES,
     env-overridable via PYOBO_SPARK_CC_BROADCAST_MAX_EDGES; pass 0 to
-    force the distributed rounds) are solved by a driver-side
-    union-find — see :func:`_cc_broadcast`. Larger graphs run the
-    alternating large-star/small-star rounds unchanged.
+    force the distributed rounds) are solved with ONE Spark job: a
+    capped Arrow collect of the edges that is both the size gate and
+    the input of a driver-side union-find (:func:`_cc_local`); the
+    result is a driver-built DataFrame. Larger graphs, once that
+    collect has shown them to be larger, run the alternating
+    large-star/small-star rounds.
     """
     bound = (
         _cc_broadcast_bound()
         if broadcast_edge_bound is None
         else broadcast_edge_bound
     )
-    if bound > 0 and edges.count() <= bound:
+    tbl = graph_local.collect_bounded(edges, "src", "dst", bound)
+    if tbl is not None:
         LAST_CC_STATS.clear()
         LAST_CC_STATS["rounds"] = 0
         LAST_CC_STATS["edges_per_round"] = []
         LAST_CC_STATS["mode"] = "broadcast"
-        return _cc_broadcast(edges)
-    spark = edges.sparkSession
+        return _cc_local(edges.sparkSession, tbl)
     nodes = (
         edges.select(F.col("src").alias("curie"))
         .unionByName(edges.select(F.col("dst").alias("curie")))
@@ -227,7 +182,9 @@ def connected_components(
     # materializes the checkpoint inside its own job (r7 A/B: one job
     # per round saved vs eager, ~5-8% per round at both scales in the
     # src-clustered round structure)
-    e = _canonical_undirected(edges).localCheckpoint(eager=False)
+    e = _sym_dedup(edges.where(F.col("src") != F.col("dst"))).localCheckpoint(
+        eager=False
+    )
 
     def _fingerprint(df: DataFrame) -> tuple[int, int]:
         """Cheap set fingerprint: (count, XOR of row hashes). One job
@@ -239,28 +196,6 @@ def connected_components(
             F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
         ).first()
         return (row["n"], row["h"])
-
-    def _sym_dedup(df: DataFrame) -> DataFrame:
-        """Symmetrize + dedup in a single src-clustered shuffle.
-
-        r7: symmetrization is an EXPLODE of each row into its two
-        directions, not a union of the subtree with its own reversal —
-        the union form planned the star's aggregate+join subtree TWICE
-        per half-round (one copy per union branch), doubling the
-        per-round compute."""
-        both = df.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("src").alias("src"), F.col("dst").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("dst").alias("src"), F.col("src").alias("dst")
-                    ),
-                )
-            ).alias("_e")
-        ).select("_e.src", "_e.dst")
-        return _partitioned_dedup(both)
 
     LAST_CC_STATS.clear()
     LAST_CC_STATS["rounds"] = 0

@@ -1,0 +1,124 @@
+"""Driver-side kernels for bounded graphs — one implementation shared by
+the rooted hierarchy sweep (:func:`hierarchy.reachable`) and connected
+components (:func:`components.connected_components`).
+
+Both operators collect a bounded edge table once, as Arrow (a capped
+collect that is also their size gate), and solve it here: endpoint
+values are dictionary-encoded to dense int32 ids once (pyarrow), the
+graph work is vectorized numpy over those ids, and only the answer is
+decoded back to values. Dense integer keys with vectorized probes
+instead of hashing strings per step (*Analyzing Vectorized Hash Tables
+Across CPU Architectures*, VLDB 2023).
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+
+def collect_bounded(edges, src: str, dst: str, bound: int) -> pa.Table | None:
+    """Columns ``src``, ``dst`` of the DataFrame ``edges`` as one Arrow
+    table when it has at most ``bound`` rows, else None. One capped
+    collect — ``limit(bound + 1)`` — is both the size gate and the
+    input, so no count job runs first; ``bound`` 0 collects nothing."""
+    cap = min(bound, 2**31 - 2)  # Spark's limit is a 32-bit int
+    if cap <= 0:
+        return None
+    tbl = edges.select(src, dst).limit(cap + 1).toArrow()
+    return tbl if tbl.num_rows <= cap else None
+
+
+def encode(tbl: pa.Table, sort: bool = False):
+    """Dictionary-encode the two endpoint columns of the edge table
+    ``tbl`` to dense int32 node ids. Returns ``(names, u, v)``:
+    ``names[i]`` is node i's value, ``u``/``v`` the per-row endpoint
+    ids, -1 where an endpoint is NULL. Every non-NULL endpoint is a
+    node, also one whose partner is NULL.
+
+    ``sort=True`` numbers the nodes in value order — for strings the
+    unsigned byte order Spark compares them by — so the smallest id of
+    any node set is its smallest value."""
+    a, b = tbl.column(0), tbl.column(1)
+    enc = pa.chunked_array(a.chunks + b.chunks, type=a.type)
+    enc = enc.combine_chunks().dictionary_encode()
+    names = enc.dictionary
+    ids = pc.fill_null(enc.indices, -1).to_numpy().copy()
+    if sort:
+        order = pc.array_sort_indices(names).to_numpy()
+        rank = np.empty(len(order), dtype=ids.dtype)
+        rank[order] = np.arange(len(order), dtype=ids.dtype)
+        names = names.take(pa.array(order))
+        valid = ids >= 0
+        ids[valid] = rank[ids[valid]]
+    return names, ids[: len(a)], ids[len(a):]
+
+
+def sweep(tbl: pa.Table, roots: list[str], levels: int) -> dict[str, set]:
+    """Per-root level BFS over a CSR adjacency of the (src, dst) edge
+    table ``tbl``, at most ``levels`` levels: {root: reached values}.
+    The CSR is an argsort + bincount, and each level gathers the
+    frontier's adjacency slices in one vectorized step. The seen-set
+    starts empty (a root enters it only around a cycle), so duplicate
+    edges and self-loops are absorbed and cycles terminate; a row with
+    a NULL endpoint is dropped, as a join on it would drop it."""
+    names, u, v = encode(tbl)
+    ok = (u >= 0) & (v >= 0)
+    cu, pv = u[ok], v[ok]
+    n_nodes = len(names)
+    nbrs = pv[np.argsort(cu, kind="stable")]
+    indptr = np.zeros(n_nodes + 1, dtype=np.int64)
+    np.cumsum(np.bincount(cu, minlength=n_nodes), out=indptr[1:])
+    root_ids = pc.index_in(pa.array(roots, type=names.type), value_set=names)
+
+    seen = np.zeros(n_nodes, dtype=bool)
+    out: dict[str, set] = {}
+    for root, rid in zip(roots, root_ids.to_pylist()):
+        reached = []
+        frontier = np.array([] if rid is None else [rid], dtype=np.int64)
+        for _ in range(levels):
+            starts = indptr[frontier]
+            cnt = indptr[frontier + 1] - starts
+            total = int(cnt.sum())
+            if not total:
+                break
+            # concatenated adjacency slices of every frontier node
+            gather = np.repeat(starts - np.cumsum(cnt) + cnt, cnt)
+            nxt = np.unique(nbrs[gather + np.arange(total)])
+            nxt = nxt[~seen[nxt]]
+            if not len(nxt):
+                break
+            seen[nxt] = True
+            reached.append(nxt)
+            frontier = nxt
+        hit = np.concatenate(reached) if reached else np.empty(0, np.int32)
+        seen[hit] = False  # reset for the next root
+        out[root] = set(names.take(pa.array(hit)).to_pylist())
+    return out
+
+
+def min_labels(n_nodes: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """``lab[i]`` = the smallest node id in node i's connected component
+    of the undirected edges (u, v). Min-hooking with pointer-jumping
+    compression: each round the ROOT of every edge's endpoint tree
+    hooks onto the smaller of the two roots, then every node jumps to
+    its root. Labels only move to a node of the same component and only
+    fall, so they settle on its minimum. Hooking roots rather than the
+    endpoints themselves merges whole trees at once, so a long path or
+    cycle takes a few rounds (14 for a 3.2M-node path with shuffled
+    ids), not one round per hop."""
+    lab = np.arange(n_nodes, dtype=np.int64)
+    while len(u):
+        ru, rv = lab[u], lab[v]  # roots: lab is fully compressed here
+        m = np.minimum(ru, rv)
+        np.minimum.at(lab, ru, m)
+        np.minimum.at(lab, rv, m)
+        while True:  # pointer jumping
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+        if np.array_equal(lab[u], lab[v]):
+            break  # every edge agrees: converged
+    return lab

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import env_edge_bound
+from . import env_edge_bound, graph_local
 
 #: Diagnostics from the most recent ancestors()/descendants() BFS in this
 #: process: {"hops": iterations run, "hop_plan": formatted plan of the
@@ -358,7 +358,8 @@ def reachable(
     Graphs whose raw edge count fits ``broadcast_edge_bound`` (default
     BROADCAST_CLOSURE_MAX_EDGES; pass 0 to force the fallback) are
     answered with ONE Spark job: a capped Arrow collect that is both
-    the size gate and the input of a driver-side sweep (_sweep).
+    the size gate and the input of a driver-side sweep
+    (:func:`graph_local.sweep`).
     Larger graphs fall back to the all-pairs closure, filtered to the
     roots."""
     roots = list(dict.fromkeys(roots))
@@ -370,11 +371,9 @@ def reachable(
         else broadcast_edge_bound
     )
     src, dst = ("parent", "child") if down else ("child", "parent")
-    cap = min(bound, 2**31 - 2)  # Spark's limit is a 32-bit int
-    if cap > 0:
-        tbl = edges.select(src, dst).limit(cap + 1).toArrow()
-        if tbl.num_rows <= cap:
-            return _sweep(tbl, roots, max_iter + 1)
+    tbl = graph_local.collect_bounded(edges, src, dst, bound)
+    if tbl is not None:
+        return graph_local.sweep(tbl, roots, max_iter + 1)
     # over the bound: the capped collect already proved it, so skip the
     # closure's own count and go straight to the distributed BFS
     closure, col = (
@@ -387,60 +386,6 @@ def reachable(
         .collect()
     ):
         out[r["identifier"]].add(r[col])
-    return out
-
-
-def _sweep(tbl, roots: list[str], levels: int) -> dict[str, set[str]]:
-    """Per-root level BFS over a CSR adjacency of the (src, dst) edge
-    table ``tbl``. Endpoint strings are dictionary-encoded to dense
-    int32 ids once (pyarrow), the CSR is an argsort + bincount (numpy),
-    and each level gathers the frontier's adjacency slices in one
-    vectorized step; only the reached ids are decoded back to strings.
-    Same sets as _ancestors_broadcast's per-node kernel: the seen-set
-    starts empty (a root enters it only around a cycle), so duplicate
-    edges and self-loops are absorbed and cycles terminate."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    u, v = tbl.column(0), tbl.column(1)
-    # a NULL endpoint never matches a join key: the closure drops it too
-    ok = pc.and_(pc.is_valid(u), pc.is_valid(v))
-    u, v = u.filter(ok), v.filter(ok)
-    enc = pa.chunked_array(u.chunks + v.chunks, type=u.type)
-    enc = enc.combine_chunks().dictionary_encode()
-    names = enc.dictionary
-    ids = enc.indices.to_numpy()
-    n_edges, n_nodes = len(u), len(names)
-    cu, pv = ids[:n_edges], ids[n_edges:]
-    nbrs = pv[np.argsort(cu, kind="stable")]
-    indptr = np.zeros(n_nodes + 1, dtype=np.int64)
-    np.cumsum(np.bincount(cu, minlength=n_nodes), out=indptr[1:])
-    root_ids = pc.index_in(pa.array(roots, type=names.type), value_set=names)
-
-    seen = np.zeros(n_nodes, dtype=bool)
-    out: dict[str, set[str]] = {}
-    for root, rid in zip(roots, root_ids.to_pylist()):
-        reached = []
-        frontier = np.array([] if rid is None else [rid], dtype=np.int64)
-        for _ in range(levels):
-            starts = indptr[frontier]
-            cnt = indptr[frontier + 1] - starts
-            total = int(cnt.sum())
-            if not total:
-                break
-            # concatenated adjacency slices of every frontier node
-            gather = np.repeat(starts - np.cumsum(cnt) + cnt, cnt)
-            nxt = np.unique(nbrs[gather + np.arange(total)])
-            nxt = nxt[~seen[nxt]]
-            if not len(nxt):
-                break
-            seen[nxt] = True
-            reached.append(nxt)
-            frontier = nxt
-        hit = np.concatenate(reached) if reached else np.empty(0, np.int32)
-        seen[hit] = False  # reset for the next root
-        out[root] = set(names.take(pa.array(hit)).to_pylist())
     return out
 
 

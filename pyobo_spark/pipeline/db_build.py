@@ -21,6 +21,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .footers import written_stats
+from .stages import counters as stage_counters
+
 
 def build_artifact(
     spark: SparkSession,
@@ -59,16 +62,11 @@ def build_artifact(
     df.na.drop(how="all").orderBy(*df.columns).write.mode("overwrite").parquet(
         data_path
     )
-    out = spark.read.parquet(data_path)
-    n_rows = out.count()
-    counters = {
-        r[df.columns[0]]: r["n"]
-        for r in out.groupBy(df.columns[0])
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(df.columns[0])
-        .collect()
-    }
-    sample = [r.asDict(recursive=True) for r in out.limit(10).collect()]
+    out = spark.read.schema(df.schema).parquet(data_path)
+    n_rows, sample = written_stats(out, data_path)
+    # counted by the first column, the source prefix: one value per
+    # source, so no limit
+    counters = stage_counters(out, (df.columns[0],), limit=None)[df.columns[0]]
     report = {
         "artifact": artifact,
         "n_rows": n_rows,

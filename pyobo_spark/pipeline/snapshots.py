@@ -55,6 +55,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .footers import summarize_files
+
 
 class SnapshotTable:
     """A versioned parquet table at ``root`` (any Hadoop-FS URI)."""
@@ -173,23 +175,6 @@ class SnapshotTable:
         ptr = f"{self._meta_dir}/_last_id"
         return int(self._read_text(ptr).strip()) if self._exists(ptr) else 0
 
-    @staticmethod
-    def _footer_row_count(paths) -> int | None:
-        """Sum `num_rows` from each file's parquet footer — pure
-        metadata, no Spark job. Returns None when any footer cannot be
-        read this way (e.g. a non-local filesystem the pyarrow default
-        handler cannot open), signalling the caller to fall back."""
-        try:
-            import pyarrow.parquet as pq
-
-            total = 0
-            for p in paths:
-                local = p[len("file:"):] if p.startswith("file:") else p
-                total += pq.ParquetFile(local).metadata.num_rows
-            return total
-        except Exception:  # noqa: BLE001 — fall back to the count job
-            return None
-
     def _commit(
         self,
         df: DataFrame,
@@ -231,10 +216,10 @@ class SnapshotTable:
         # that count job was the sink's dominant fixed cost; the footer
         # sum is the same number (parquet footers are authoritative).
         # Non-local filesystems fall back to the count job.
-        footer_rows = self._footer_row_count(f["path"] for f in files)
+        footer = summarize_files(f["path"] for f in files)
         n_rows = (
-            footer_rows
-            if footer_rows is not None
+            footer[0]
+            if footer is not None
             else self.spark.read.parquet(data_dir).count()
         )
         if operation == "append" and parent is not None:

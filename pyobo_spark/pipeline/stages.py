@@ -21,6 +21,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .footers import written_stats
+
 
 @dataclass
 class StageResult:
@@ -31,10 +33,45 @@ class StageResult:
     wall_sec: float
 
 
+#: Most distinct values one counter column reports (smallest first).
+COUNTER_LIMIT = 1000
+
+
+def counters(
+    df: DataFrame, cols: tuple[str, ...], limit: int | None = COUNTER_LIMIT
+) -> dict[str, dict]:
+    """{col: {value: rows}} for each of ``cols``, values ascending (nulls
+    first), at most ``limit`` per column: one aggregate per column."""
+    out = {}
+    for col in cols:
+        q = df.groupBy(col).agg(F.count(F.lit(1)).alias("n")).orderBy(col)
+        rows = (q if limit is None else q.limit(limit)).collect()
+        out[col] = {r[col]: r["n"] for r in rows}
+    return out
+
+
 class PipelineRunner:
-    """Run named stages; each writes parquet + a manifest with row counts,
-    per-partition lineage counters, and a 10-row sample (the reference's
-    db_output_helper contract)."""
+    """Run named stages; each writes parquet plus a ``_MANIFEST.json``
+    (the reference's db_output_helper Counter/sample/metadata trio).
+
+    Where each manifest field comes from, for a stage that runs:
+
+    - ``n_rows``: the parquet footers of the written data files, read
+      on the driver (:mod:`.footers`) — no count job;
+    - ``sample``: the first ≤10 rows of those files, read with pyarrow;
+    - ``counters``: one aggregate per counter column over the written
+      snapshot (:func:`counters`), ≤ ``COUNTER_LIMIT`` values per
+      column — the only Spark jobs a stage adds to its write;
+    - ``n_partitions``: the read-back's scan planning (no job);
+    - ``wall_sec`` / ``committed_at``: the driver clock.
+
+    The read-back is planned with the built DataFrame's schema, so it
+    skips the schema-inference job. When pyarrow cannot open the files
+    (a non-local filesystem), ``n_rows`` and ``sample`` fall back to a
+    ``count()`` and a ``limit(10)`` collect.
+
+    A stage whose manifest exists is skipped: its data is read back and
+    its manifest's ``n_rows`` reported."""
 
     def __init__(self, spark: SparkSession, root: str, force: bool = False):
         self.spark = spark
@@ -65,32 +102,24 @@ class PipelineRunner:
         df = build()
         data_path = str(out_dir / "data")
         df.write.mode("overwrite").parquet(data_path)
-        out = self.spark.read.parquet(data_path)
-        n_rows = out.count()
-
-        counters = {}
-        for col in counter_cols:
-            counters[col] = {
-                r[col]: r["n"]
-                for r in out.groupBy(col).agg(F.count(F.lit(1)).alias("n"))
-                .orderBy(col).limit(1000).collect()
-            }
-        sample = [r.asDict(recursive=True) for r in out.limit(10).collect()]
-        wall = time.time() - t0
+        out = self.spark.read.schema(df.schema).parquet(data_path)
+        n_rows, sample = written_stats(out, data_path)
         meta = {
             "stage": name,
             "n_rows": n_rows,
             "n_partitions": out.rdd.getNumPartitions(),
-            "counters": counters,
+            "counters": counters(out, counter_cols),
             "sample": sample,
-            "wall_sec": round(wall, 3),
+            "wall_sec": round(time.time() - t0, 3),
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         manifest.parent.mkdir(parents=True, exist_ok=True)
         # commit-then-mark: manifest written only after a successful write,
         # so a crashed stage re-runs from scratch (no torn snapshots)
         manifest.write_text(json.dumps(meta, default=str, indent=1))
-        self.results.append(StageResult(name, str(out_dir), False, n_rows, wall))
+        self.results.append(
+            StageResult(name, str(out_dir), False, n_rows, meta["wall_sec"])
+        )
         return out
 
     def write_partitioned(

@@ -236,3 +236,72 @@ def test_staged_pipeline_versioned_triples(spark, tables, tmp_path):
     assert tbl.read(snapshot_id=1).count() == n1
     tbl.rollback(1)
     assert tbl.current_snapshot_id() == 1
+
+
+def test_stage_manifest_contract(spark, tables, tmp_path, monkeypatch):
+    """Every stage manifest of a staged build: n_rows is the snapshot's
+    row count, counters equal a Spark groupBy, the sample is ≤10
+    JSON-serialisable rows, and the fresh read-back has the schema a
+    resumed run reads back. With the pyarrow footer read failing, the
+    Spark fallback reports the same n_rows and counters."""
+    import json
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from pyobo_spark.pipeline.footers import written_stats
+    from pyobo_spark.pipeline.kg_build import run_kg_pipeline_staged
+    from pyobo_spark.pipeline.stages import PipelineRunner
+
+    schemas: dict[str, list] = {}
+    stage = PipelineRunner.stage
+
+    def recording_stage(self, name, build, counter_cols=()):
+        out = stage(self, name, build, counter_cols)
+        schemas.setdefault(name, []).append(out.schema)
+        return out
+
+    monkeypatch.setattr(PipelineRunner, "stage", recording_stage)
+
+    def manifests(root):
+        return {
+            p.parent.name: json.loads(p.read_text())
+            for p in Path(root).glob("*/_MANIFEST.json")
+        }
+
+    root = str(tmp_path / "fresh")
+    run_kg_pipeline_staged(spark, tables, root)
+    fresh = manifests(root)
+    assert len(fresh) == 5
+    for name, meta in fresh.items():
+        data = spark.read.parquet(str(Path(root) / name / "data"))
+        assert meta["n_rows"] == data.count(), name
+        for col, got in meta["counters"].items():
+            want = {
+                r[col]: r["count"] for r in data.groupBy(col).count().collect()
+            }
+            # keys as the manifest JSON spells them
+            assert got == json.loads(json.dumps(want, default=str)), name
+        assert 0 < len(meta["sample"]) <= 10
+        assert all(set(row) == set(data.columns) for row in meta["sample"])
+        # the footer sample is plain JSON: no default= conversion needed
+        _, sample = written_stats(data, str(Path(root) / name / "data"))
+        assert json.loads(json.dumps(sample)) == meta["sample"], name
+    assert fresh["xrefs_parsed"]["counters"]["parse_status"]["ok"] > 0
+
+    # resume: every stage skipped, schema inferred from the files
+    runner = run_kg_pipeline_staged(spark, tables, root)
+    assert all(r.skipped for r in runner.results)
+    for name, (fresh_schema, resumed_schema) in schemas.items():
+        assert fresh_schema == resumed_schema, name
+
+    def no_pyarrow(*args, **kwargs):
+        raise OSError("no pyarrow filesystem for this path")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_pyarrow)
+    fallback_root = str(tmp_path / "fallback")
+    run_kg_pipeline_staged(spark, tables, fallback_root)
+    for name, meta in manifests(fallback_root).items():
+        assert meta["n_rows"] == fresh[name]["n_rows"], name
+        assert meta["counters"] == fresh[name]["counters"], name
+        assert 0 < len(meta["sample"]) <= 10

@@ -293,6 +293,66 @@ def test_rooted_hierarchy_lookups_run_one_job(spark, tmp_path):
     assert got["desc"] == {f"fixo:{i:07d}" for i in range(16, 20)}
 
 
+def _jobs_in_group(spark, group: str, call):
+    """(result of call(), number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        out = call()
+    finally:
+        sc.setJobGroup("tests", "post")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bounded_components_run_one_job(spark, tmp_path):
+    """A bounded connected_components is ONE capped edge collect (the
+    size gate and the input at once) plus a driver-side union-find —
+    no pre-flight count, no global sort, no surrogate-id table. The
+    result DataFrame is built on the driver: it runs nothing until
+    consumed. Parquet backed, so the scan is a real job."""
+    from pyobo_spark.operators import components as C
+
+    spark.createDataFrame(
+        [(f"n:{i}", f"n:{i // 3}") for i in range(60)], "src string, dst string"
+    ).write.parquet(str(tmp_path / "edges"))
+    edges = spark.read.parquet(str(tmp_path / "edges"))
+    comp, n_jobs = _jobs_in_group(
+        spark, "cc_guard", lambda: C.connected_components(edges)
+    )
+    assert C.LAST_CC_STATS["mode"] == "broadcast"
+    assert n_jobs == 1
+    assert {r["component"] for r in comp.collect()} == {"n:0"}
+
+
+def test_stage_bookkeeping_jobs(spark, tmp_path):
+    """A PipelineRunner stage runs its write and, only when it has a
+    counter column, that column's counter aggregate: n_rows and the
+    sample come from the written files' parquet footers, and the
+    read-back skips schema inference."""
+    from pyobo_spark.pipeline.stages import PipelineRunner, counters
+
+    spark.range(300).selectExpr(
+        "id", "cast(id % 7 AS string) AS a"
+    ).write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    runner = PipelineRunner(spark, str(tmp_path / "stages"))
+
+    def stage_jobs(name, cols):
+        _, n = _jobs_in_group(
+            spark, f"stage_guard_{name}",
+            lambda: runner.stage(name, lambda: src, counter_cols=cols),
+        )
+        return n
+
+    stage_jobs("warm", ())
+    assert stage_jobs("plain", ()) == 1  # the write
+    _, agg = _jobs_in_group(
+        spark, "counter_guard", lambda: counters(src, ("a",))
+    )
+    assert stage_jobs("one", ("a",)) == 1 + agg
+    assert [r.n_rows for r in runner.results] == [300] * 3
+
+
 def test_ann_cosine_lsh_shuffle_budget(spark, sf_dir):
     """Multi-table hyperplane LSH must shuffle on exactly two HASH
     exchanges — candidate dedup (distinct) and the per-query top-k

@@ -264,3 +264,121 @@ def test_rooted_reachable_equals_filtered_closure(spark, extra, roots, max_iter)
                 broadcast_edge_bound=bound, down=down,
             )
             assert got == want, (down, bound)
+
+
+#: Mixed-case and non-ASCII curies: Spark orders strings by their UTF-8
+#: bytes, so "B" < "a", "Z" < "é", and U+FF21 < U+1D538 (UTF-16 order
+#: would put the surrogate pair first).
+_CC_NODES = ["A:1", "a:1", "B:2", "b:10", "b:9", "Z:0", "é:1", "e:1",
+             "Ａ:1", "\U0001d538:1", "日本:1", "α:2"]
+_CC_FIXED_EDGES = [
+    ("s:0", "s:0"),  # self-loop-only node
+    ("c:1", "c:2"), ("c:2", "c:0"), ("c:0", "c:1"),  # cycle
+    ("d:1", "d:2"), ("d:1", "d:2"), ("d:2", "d:1"),  # duplicate, reversed
+    *[(f"h:{i}", "hub:0") for i in range(8)],  # hub
+    ("x:1", "x:2"),  # disconnected part
+    # pairs whose minimum by byte order differs from their UTF-16,
+    # accent-folded, numeric or case-folded order
+    ("\U0001d538:1", "Ａ:1"), ("é:1", "Z:0"), ("b:9", "b:10"), ("a:1", "B:2"),
+]
+
+
+@given(
+    extra=st.lists(
+        st.tuples(st.sampled_from(_CC_NODES), st.sampled_from(_CC_NODES)),
+        max_size=25,
+    ),
+)
+@settings(max_examples=6, deadline=None)
+def test_local_components_equal_star_rounds(spark, extra):
+    """The bounded connected_components path (capped collect + driver
+    union-find) returns exactly the star rounds' (curie, component)
+    rows, whose min representative is Spark's string order."""
+    from pyobo_spark.operators import components as C
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 8
+    edges = spark.createDataFrame(
+        spark.sparkContext.parallelize(_CC_FIXED_EDGES + extra, 3),
+        "src string, dst string",
+    )
+    assert edges.rdd.getNumPartitions() >= 2
+    local = sorted(tuple(r) for r in C.connected_components(edges).collect())
+    assert C.LAST_CC_STATS["mode"] == "broadcast"
+    stars = sorted(
+        tuple(r)
+        for r in C.connected_components(edges, broadcast_edge_bound=0).collect()
+    )
+    assert C.LAST_CC_STATS["mode"] == "stars"
+    assert local == stars
+
+
+def test_components_null_endpoint(spark):
+    """An edge with a NULL endpoint joins nothing, but its other endpoint
+    is still a node, and NULL itself is one (NULL, NULL) row — on both
+    paths."""
+    from pyobo_spark.operators import components as C
+
+    edges = spark.createDataFrame(
+        [("a", None), (None, "b"), ("b", "c"), (None, None)],
+        "src string, dst string",
+    )
+    want = [("a", "a"), ("b", "b"), ("c", "b"), (None, None)]
+    for bound in (None, 0):
+        got = C.connected_components(edges, broadcast_edge_bound=bound)
+        assert sorted(
+            (tuple(r) for r in got.collect()), key=lambda t: (t[0] is None, t)
+        ) == want, bound
+
+
+def _min_labels_reference(n, edges):
+    """Smallest node of each node's component: plain union-find."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return [find(x) for x in range(n)]
+
+
+@given(
+    n=st.integers(1, 40),
+    data=st.data(),
+)
+@settings(max_examples=200, deadline=None)
+def test_min_labels_equal_union_find(n, data):
+    """graph_local.min_labels gives every node its component's smallest
+    id, for any undirected edge list (cycles, self-loops, duplicates)."""
+    import numpy as np
+
+    from pyobo_spark.operators import graph_local
+
+    node = st.integers(0, n - 1)
+    edges = data.draw(st.lists(st.tuples(node, node), max_size=60))
+    u = np.array([a for a, _ in edges], dtype=np.int64)
+    v = np.array([b for _, b in edges], dtype=np.int64)
+    got = graph_local.min_labels(n, u, v)
+    assert got.tolist() == _min_labels_reference(n, edges)
+
+
+def test_min_labels_long_path_and_cycle():
+    """A 200k-node path and cycle with shuffled ids converge in a few
+    rounds. Hooking endpoints instead of roots moves a label one hop
+    per round and does not finish this in minutes."""
+    import time
+
+    import numpy as np
+
+    from pyobo_spark.operators import graph_local
+
+    n = 200_000
+    ids = np.random.default_rng(7).permutation(n)
+    t0 = time.perf_counter()
+    path = graph_local.min_labels(n, ids[:-1], ids[1:])
+    cycle = graph_local.min_labels(n, ids, np.roll(ids, 1))
+    assert time.perf_counter() - t0 < 10
+    assert not path.any() and not cycle.any()  # one component: label 0
