@@ -10,17 +10,24 @@ semantics; *_df variants return DataFrames (the scalable form),
 cached-mapping API (safe: per-ontology exports are dictionary-sized,
 never corpus-sized).
 
+Point lookups and mapping exports over terms, alts, xrefs and the
+is_a hierarchy answer from a per-(table, prefix) driver index (see
+`OntologyCatalog`), built on first use from one capped Arrow collect
+and reused by every later call, so a repeated lookup runs no Spark job.
+
 Reference citations per method point into /root/reference/src/pyobo/.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .grounding import dictionary as _dict
 from .grounding import matcher as _matcher
-from .operators import exports, hierarchy
+from .operators import exports, graph_local, hierarchy
 from .pipeline.kg_build import build_literal_mappings
 
 
@@ -248,8 +255,119 @@ def _fold_prefix_methods(cls):
     return cls
 
 
+def _min_by_key(tbl) -> dict:
+    """{key: smallest non-NULL value} of a two-column (key, value) Arrow
+    table, in the byte order Spark compares strings by. A NULL key, or
+    a key whose values are all NULL, is left out: no argument equals
+    it, and Spark's ``min`` of only NULLs is NULL."""
+    key, val = tbl.column_names
+    g = tbl.group_by(key).aggregate([(val, "min")])
+    return {
+        k: v
+        for k, v in zip(graph_local.values(g.column(key)),
+                        graph_local.values(g.column(f"{val}_min")))
+        if k is not None and v is not None
+    }
+
+
+class _Terms(NamedTuple):
+    ids: set  # every identifier of the prefix, as get_ids returns them
+    names: dict  # identifier -> smallest non-NULL name
+
+
+def _terms_index(tbl) -> _Terms:
+    return _Terms(
+        set(graph_local.values(tbl.column("identifier"))), _min_by_key(tbl)
+    )
+
+
+def _xrefs_index(tbl) -> dict:
+    """identifier -> sorted distinct target CURIEs: the distinct pairs,
+    sorted in byte order by pyarrow, then one pass to group them."""
+    pairs = tbl.group_by(["identifier", "t"]).aggregate([]).sort_by(
+        [("identifier", "ascending"), ("t", "ascending")]
+    )
+    out: dict = {}
+    for i, t in zip(graph_local.values(pairs.column("identifier")),
+                    graph_local.values(pairs.column("t"))):
+        if i is not None:
+            out.setdefault(i, []).append(t)
+    return out
+
+
+class _Hierarchy:
+    """One prefix's CURIE edges (hierarchy.curie_edges) encoded once
+    (graph_local.Digraph), with a node-id dict so each lookup is a dict
+    probe and a sweep."""
+
+    #: hierarchy.reachable's levels: its default max_iter=50, plus one
+    LEVELS = 51
+
+    def __init__(self, tbl):
+        self.graph = graph_local.Digraph(tbl)
+        names = graph_local.values(self.graph.names)
+        self.ids = dict(zip(names, range(len(names))))
+
+    def reach(self, roots: list[str], down: bool = False, levels: int = LEVELS):
+        hits = self.graph.sweep(
+            [self.ids.get(r) for r in roots], levels, reverse=down
+        )
+        return dict(zip(roots, hits))
+
+
+#: per indexed table: (the rows of one prefix the index is built from,
+#: the function that builds it from them). Every key resolves to its smallest value, in the index
+#: and in the per-call Spark path alike, so neither depends on
+#: partition order.
+_INDEXED = {
+    "terms": (
+        lambda df, p: df.where(F.col("prefix") == p).select("identifier", "name"),
+        _terms_index,
+    ),
+    "alts": (
+        lambda df, p: df.where(F.col("prefix") == p).select("alt_id", "identifier"),
+        _min_by_key,
+    ),
+    "xrefs": (
+        lambda df, p: df.where(F.col("prefix") == p).select(
+            "identifier",
+            F.concat_ws(":", "target_prefix", "target_id").alias("t"),
+        ),
+        _xrefs_index,
+    ),
+    "parents": (hierarchy.curie_edges, _Hierarchy),
+}
+
+
 @_fold_prefix_methods
 class OntologyCatalog:
+    """The lookup API over one set of long tables (see the module
+    docstring).
+
+    **Driver index.** Lookups against terms, alts, xrefs and the is_a
+    hierarchy (parents) are answered from an index per (table, prefix),
+    held on the catalog like its grounders: terms become id -> name
+    plus the id set, alts alt_id -> identifier, xrefs id -> sorted
+    target CURIEs, and the prefix's CURIE edges one int32-encoded CSR
+    per direction (graph_local.Digraph). Each part costs ONE capped
+    Arrow collect, built on the first call that needs it; that collect
+    is both the size gate and the input (graph_local.collect_bounded).
+    The bounds are the existing ones: ``max_collect_rows`` for the
+    tables and ``BROADCAST_CLOSURE_MAX_EDGES``
+    ($PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES) for the edges.
+
+    - *Above the bound* point lookups keep a per-call Spark path and
+      mapping exports raise; the verdict is remembered, so later calls
+      do not repeat the capped collect.
+    - *Invalidation:* an entry is valid only while ``getattr(self,
+      table)`` is the object it was built from, so reassigning e.g.
+      ``catalog.parents`` rebuilds it on the next call.
+      ``clear_caches()`` drops every entry.
+
+    The gain relies on repeated lookups against the same prefix within
+    one catalog's lifetime; a one-off lookup pays the collect of the
+    whole prefix instead of a filtered scan."""
+
     #: catalog table attributes backed by the canonical long-table
     #: schemas (obo_reader.table_schemas) — any table a source doesn't
     #: emit is filled with a schema-typed empty so EVERY lookup works
@@ -275,24 +393,56 @@ class OntologyCatalog:
             setattr(self, name, df)
         self._grounders: dict[tuple[tuple[str, ...], bool], object] = {}
         self._dict_entries: dict[tuple[str, bool], list] = {}
+        #: (table, prefix) -> (table object it was built from, rows — or
+        #: bound + 1 when the capped collect found more —, index or None)
+        self._indexes: dict[tuple[str, str], tuple] = {}
+
+    def _index(self, table: str, prefix: str):
+        """The driver index of ``table``'s rows for ``prefix`` (see the
+        class docstring), or None when they are above the table's
+        bound. Rebuilt when the table attribute was reassigned, or when
+        an over-bound verdict was reached under a lower bound than
+        today's; the row count is re-checked against today's bound, so
+        lowering it turns a built index off again."""
+        df = getattr(self, table)
+        bound = (
+            hierarchy._broadcast_bound()
+            if table == "parents"
+            else self.max_collect_rows
+        )
+        entry = self._indexes.get((table, prefix))
+        if (entry is None or entry[0] is not df
+                or (entry[2] is None and entry[1] <= bound)):
+            rows, build = _INDEXED[table]
+            tbl = graph_local.collect_bounded(rows(df, prefix), bound)
+            entry = (
+                (df, bound + 1, None)
+                if tbl is None
+                else (df, tbl.num_rows, build(tbl))
+            )
+            self._indexes[(table, prefix)] = entry
+        return entry[2] if entry[1] <= bound else None
+
+    def _indexed_export(self, table: str, prefix: str, what: str):
+        """The index a mapping export is read from; above the bound the
+        export raises, as _bounded_rows does."""
+        idx = self._index(table, prefix)
+        if idx is None:
+            raise self._over_bound(what)
+        return idx
 
     # ---- names (api/names.py) ----
+
     def get_ids(self, prefix: str) -> set[str]:
         """api/names.py:127-141."""
-        return {
-            r["identifier"]
-            for r in self._bounded_rows(
-                self.terms.where(F.col("prefix") == prefix).select(
-                    "identifier"
-                ),
-                "get_ids",
-            )
-        }
+        return set(self._indexed_export("terms", prefix, "get_ids").ids)
 
     def get_id_name_mapping(self, prefix: str) -> dict[str, str]:
-        """api/names.py:201-234."""
-        df = exports.names(self.terms.where(F.col("prefix") == prefix))
-        return {r["identifier"]: r["name"] for r in self._bounded_rows(df, "this mapping export")}
+        """api/names.py:201-234 — a duplicated identifier maps to its
+        smallest name."""
+        return dict(
+            self._indexed_export("terms", prefix, "this mapping export").names
+        )
 
     def get_name_id_mapping(self, prefix: str) -> dict[str, str]:
         """api/names.py:239-245 (deterministic min-id on collision)."""
@@ -300,15 +450,18 @@ class OntologyCatalog:
         return {r["name"]: r["identifier"] for r in self._bounded_rows(df, "this mapping export")}
 
     def get_name(self, prefix: str, identifier: str) -> str | None:
-        """api/names.py:68-122 — with alt-id upgrade fallback."""
+        """api/names.py:68-122 — with alt-id upgrade fallback; a
+        duplicated identifier has its smallest name."""
         primary = self.get_primary_identifier(prefix, identifier)
-        rows = (
+        terms = self._index("terms", prefix)
+        if terms is not None:
+            return terms.names.get(primary)
+        return (
             self.terms.where(
                 (F.col("prefix") == prefix)
                 & (F.col("identifier") == primary)
-            ).select("name").collect()
+            ).agg(F.min("name")).first()[0]
         )
-        return rows[0]["name"] if rows else None
 
     def get_name_by_curie(self, curie: str) -> str | None:
         """api/names.py get_name_by_curie — CURIE-shaped name lookup
@@ -385,14 +538,17 @@ class OntologyCatalog:
         is within the guard's own definition of driver tolerance."""
         rows = df.limit(self.max_collect_rows + 1).collect()
         if len(rows) > self.max_collect_rows:
-            raise ValueError(
-                f"{what} would collect more than "
-                f"{self.max_collect_rows:,} rows to the driver; this "
-                "is corpus-shaped data — use the *_df form, or raise "
-                "catalog.max_collect_rows if the dimension really is "
-                "this large"
-            )
+            raise self._over_bound(what)
         return rows
+
+    def _over_bound(self, what: str) -> ValueError:
+        return ValueError(
+            f"{what} would collect more than "
+            f"{self.max_collect_rows:,} rows to the driver; this "
+            "is corpus-shaped data — use the *_df form, or raise "
+            "catalog.max_collect_rows if the dimension really is "
+            "this large"
+        )
 
     def get_subsets_df(self, prefix: str) -> DataFrame:
         """subset membership rows (struct.py subsets field / nodes-export
@@ -517,26 +673,22 @@ class OntologyCatalog:
         return {r["identifier"]: list(r["alt_ids"]) for r in self._bounded_rows(df, "this mapping export")}
 
     def get_alts_to_id(self, prefix: str) -> dict[str, str]:
-        """api/alts.py:52-63 — alt id → primary id."""
-        rows = self._bounded_rows(
-            self.alts.where(F.col("prefix") == prefix.lower()).select(
-                "alt_id", "identifier"
-            ),
-            "get_alts_to_id",
-        )
-        return {r["alt_id"]: r["identifier"] for r in rows}
+        """api/alts.py:52-63 — alt id → primary id; an alt id under
+        several primaries maps to the smallest."""
+        return dict(self._indexed_export("alts", prefix, "get_alts_to_id"))
 
     def get_primary_identifier(self, prefix: str, identifier: str) -> str:
         """api/alts.py:89-105 — alts_to_id.get(id, id)."""
-        rows = (
-            # case-folded like get_alts_to_id: tables store lowercase
-            # prefixes, so a raw uppercase arg must not miss silently
+        alts = self._index("alts", prefix)
+        if alts is not None:
+            return alts.get(identifier, identifier)
+        primary = (
             self.alts.where(
-                (F.col("prefix") == prefix.lower())
+                (F.col("prefix") == prefix)
                 & (F.col("alt_id") == identifier)
-            ).select("identifier").collect()
+            ).agg(F.min("identifier")).first()[0]
         )
-        return rows[0]["identifier"] if rows else identifier
+        return identifier if primary is None else primary
 
     def get_primary_curie(self, curie: str) -> str:
         """api/alts.py:110-122 — CURIE-shaped alt upgrade."""
@@ -551,7 +703,9 @@ class OntologyCatalog:
         to the catalog (the reference returns None on an invalid
         prefix in non-strict mode)."""
         p = prefix.lower()
-        if not self.terms.where(F.col("prefix") == p).head(1):
+        terms = self._index("terms", p)
+        if not (terms.ids if terms is not None
+                else self.terms.where(F.col("prefix") == p).head(1)):
             return None
         return (p, self.get_primary_identifier(p, identifier))
 
@@ -720,6 +874,9 @@ class OntologyCatalog:
 
     def get_xrefs(self, prefix: str, identifier: str) -> list[str]:
         """api/xrefs.py get_xrefs — one term's xref target CURIEs."""
+        xrefs = self._index("xrefs", prefix)
+        if xrefs is not None:
+            return list(xrefs.get(identifier, ()))
         rows = (
             self.xrefs.where(
                 (F.col("prefix") == prefix.lower())
@@ -929,16 +1086,15 @@ class OntologyCatalog:
         api/hierarchy.py:205-214) — curie-keyed so multi-ontology
         catalogs with colliding numeric locals can't merge hierarchies.
 
-        Walks outward from the one node (hierarchy.reachable): a
-        bounded hierarchy (≤ BROADCAST_CLOSURE_MAX_EDGES edges,
-        $PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES) costs one capped edge
-        collect and a driver-side sweep; a larger one falls back to the
-        all-pairs closure filtered to the node. At most 51 levels; the
-        node is its own ancestor only when a cycle leads back to it."""
+        Walks outward from the one node (hierarchy.reachable's
+        semantics): a bounded hierarchy (≤ BROADCAST_CLOSURE_MAX_EDGES
+        edges, $PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES) is swept over the
+        prefix's hierarchy index, with no Spark job once the index is
+        built; a larger one falls back to the all-pairs closure
+        filtered to the node. At most 51 levels; the node is its own
+        ancestor only when a cycle leads back to it."""
         node = self._as_curie(prefix, identifier)
-        return hierarchy.reachable(
-            hierarchy.curie_edges(self.parents, prefix), [node]
-        )[node]
+        return self._reach(prefix, [node])[node]
 
     def get_descendants(self, prefix: str, identifier: str) -> set[str]:
         """CURIE strings of every node below ``identifier``
@@ -946,18 +1102,37 @@ class OntologyCatalog:
         cycle and level-cap semantics as :meth:`get_ancestors`, walking
         parent → child."""
         node = self._as_curie(prefix, identifier)
-        return hierarchy.reachable(
-            hierarchy.curie_edges(self.parents, prefix), [node], down=True
-        )[node]
+        return self._reach(prefix, [node], down=True)[node]
 
     def get_children(self, prefix: str, identifier: str) -> set[str]:
+        """CURIEs one level below ``identifier``: a 1-level sweep down
+        the hierarchy index, or a filter on the edges above its bound.
+        An edge with a NULL endpoint is ignored, as by the sweeps."""
         node = self._as_curie(prefix, identifier)
+        h = self._index("parents", prefix)
+        if h is not None:
+            return h.reach([node], down=True, levels=1)[node]
         return {
             r["identifier"]
             for r in hierarchy.children(
                 hierarchy.curie_edges(self.parents, prefix), node
             ).collect()
-        }
+        } - {None}
+
+    def _reach(
+        self, prefix: str, roots: list[str], down: bool = False
+    ) -> dict[str, set[str]]:
+        """hierarchy.reachable over ``prefix``'s CURIE edges: from the
+        hierarchy index, or above its bound by the distributed closure
+        (edge bound 0: the capped collect already ran)."""
+        roots = list(dict.fromkeys(roots))
+        h = self._index("parents", prefix)
+        if h is not None:
+            return h.reach(roots, down=down)
+        return hierarchy.reachable(
+            hierarchy.curie_edges(self.parents, prefix), roots,
+            broadcast_edge_bound=0, down=down,
+        )
 
     def has_ancestor(self, prefix: str, identifier: str, anc: str) -> bool:
         return self._as_curie(prefix, anc) in self.get_ancestors(
@@ -1032,9 +1207,7 @@ class OntologyCatalog:
         anc = [ancestors] if isinstance(ancestors, str) else list(ancestors)
         p = prefix.lower()
         anc_curies = [self._as_curie(p, a) for a in anc]
-        reached = hierarchy.reachable(
-            hierarchy.curie_edges(self.parents, p), anc_curies, down=True
-        )
+        reached = self._reach(p, anc_curies, down=True)
         members = hierarchy.node_frame(
             self._spark,
             {
@@ -1073,7 +1246,7 @@ class OntologyCatalog:
         if key not in self._grounders:
             # entry lists cached per SINGLE prefix so a combined-prefix
             # grounder re-collects nothing; matcher broadcasts are still
-            # per requested combination — call clear_grounders() to
+            # per requested combination — call clear_caches() to
             # unpersist them all when a long-lived catalog rotates
             # dictionaries
             entries: list = []
@@ -1089,9 +1262,10 @@ class OntologyCatalog:
             )
         return self._grounders[key]
 
-    def clear_grounders(self) -> None:
-        """Unpersist every cached broadcast matcher (memory release for
-        long-lived multi-ontology catalogs)."""
+    def clear_caches(self) -> None:
+        """Unpersist every cached broadcast matcher and drop every
+        driver index (memory release for long-lived multi-ontology
+        catalogs)."""
         for bc in self._grounders.values():
             try:
                 bc.unpersist()
@@ -1099,6 +1273,7 @@ class OntologyCatalog:
                 pass
         self._grounders.clear()
         self._dict_entries.clear()
+        self._indexes.clear()
 
     def ground(
         self,

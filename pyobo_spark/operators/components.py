@@ -166,7 +166,7 @@ def connected_components(
         if broadcast_edge_bound is None
         else broadcast_edge_bound
     )
-    tbl = graph_local.collect_bounded(edges, "src", "dst", bound)
+    tbl = graph_local.collect_bounded(edges.select("src", "dst"), bound)
     if tbl is not None:
         LAST_CC_STATS.clear()
         LAST_CC_STATS["rounds"] = 0

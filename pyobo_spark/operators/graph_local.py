@@ -1,9 +1,10 @@
 """Driver-side kernels for bounded graphs — one implementation shared by
-the rooted hierarchy sweep (:func:`hierarchy.reachable`) and connected
+the rooted hierarchy sweep (:func:`hierarchy.reachable`, and the
+catalog's per-prefix hierarchy index in ``api.py``) and connected
 components (:func:`components.connected_components`).
 
-Both operators collect a bounded edge table once, as Arrow (a capped
-collect that is also their size gate), and solve it here: endpoint
+Each collects a bounded table once, as Arrow (a capped collect that is
+also its size gate, :func:`collect_bounded`), and solves it here: endpoint
 values are dictionary-encoded to dense int32 ids once (pyarrow), the
 graph work is vectorized numpy over those ids, and only the answer is
 decoded back to values. Dense integer keys with vectorized probes
@@ -18,16 +19,23 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 
-def collect_bounded(edges, src: str, dst: str, bound: int) -> pa.Table | None:
-    """Columns ``src``, ``dst`` of the DataFrame ``edges`` as one Arrow
-    table when it has at most ``bound`` rows, else None. One capped
-    collect — ``limit(bound + 1)`` — is both the size gate and the
-    input, so no count job runs first; ``bound`` 0 collects nothing."""
+def collect_bounded(df, bound: int) -> pa.Table | None:
+    """The DataFrame ``df`` as one Arrow table when it has at most
+    ``bound`` rows, else None. One capped collect — ``limit(bound + 1)``
+    — is both the size gate and the input, so no count job runs first;
+    ``bound`` 0 collects nothing."""
     cap = min(bound, 2**31 - 2)  # Spark's limit is a 32-bit int
     if cap <= 0:
         return None
-    tbl = edges.select(src, dst).limit(cap + 1).toArrow()
+    tbl = df.limit(cap + 1).toArrow()
     return tbl if tbl.num_rows <= cap else None
+
+
+def values(arr) -> list:
+    """The Python values of the Arrow (chunked) array ``arr``, NULL as
+    None — through numpy's object conversion, ~10x faster than
+    ``to_pylist`` for strings."""
+    return arr.to_numpy(zero_copy_only=False).tolist()
 
 
 def encode(tbl: pa.Table, sort: bool = False):
@@ -55,47 +63,71 @@ def encode(tbl: pa.Table, sort: bool = False):
     return names, ids[: len(a)], ids[len(a):]
 
 
-def sweep(tbl: pa.Table, roots: list[str], levels: int) -> dict[str, set]:
-    """Per-root level BFS over a CSR adjacency of the (src, dst) edge
-    table ``tbl``, at most ``levels`` levels: {root: reached values}.
-    The CSR is an argsort + bincount, and each level gathers the
-    frontier's adjacency slices in one vectorized step. The seen-set
-    starts empty (a root enters it only around a cycle), so duplicate
-    edges and self-loops are absorbed and cycles terminate; a row with
-    a NULL endpoint is dropped, as a join on it would drop it."""
-    names, u, v = encode(tbl)
-    ok = (u >= 0) & (v >= 0)
-    cu, pv = u[ok], v[ok]
-    n_nodes = len(names)
-    nbrs = pv[np.argsort(cu, kind="stable")]
+def csr(n_nodes: int, src: np.ndarray, dst: np.ndarray):
+    """CSR adjacency ``(indptr, nbrs)`` of the edges ``src`` → ``dst``
+    over node ids ``0..n_nodes-1``: an argsort + bincount. A row with a
+    -1 (NULL) endpoint is dropped, as a join on it would drop it."""
+    ok = (src >= 0) & (dst >= 0)
+    s, d = src[ok], dst[ok]
+    nbrs = d[np.argsort(s, kind="stable")]
     indptr = np.zeros(n_nodes + 1, dtype=np.int64)
-    np.cumsum(np.bincount(cu, minlength=n_nodes), out=indptr[1:])
-    root_ids = pc.index_in(pa.array(roots, type=names.type), value_set=names)
+    np.cumsum(np.bincount(s, minlength=n_nodes), out=indptr[1:])
+    return indptr, nbrs
 
-    seen = np.zeros(n_nodes, dtype=bool)
-    out: dict[str, set] = {}
-    for root, rid in zip(roots, root_ids.to_pylist()):
-        reached = []
-        frontier = np.array([] if rid is None else [rid], dtype=np.int64)
-        for _ in range(levels):
-            starts = indptr[frontier]
-            cnt = indptr[frontier + 1] - starts
-            total = int(cnt.sum())
-            if not total:
-                break
-            # concatenated adjacency slices of every frontier node
-            gather = np.repeat(starts - np.cumsum(cnt) + cnt, cnt)
-            nxt = np.unique(nbrs[gather + np.arange(total)])
-            nxt = nxt[~seen[nxt]]
-            if not len(nxt):
-                break
-            seen[nxt] = True
-            reached.append(nxt)
-            frontier = nxt
-        hit = np.concatenate(reached) if reached else np.empty(0, np.int32)
-        seen[hit] = False  # reset for the next root
-        out[root] = set(names.take(pa.array(hit)).to_pylist())
-    return out
+
+class Digraph:
+    """The (src, dst) edge table ``tbl`` encoded once (:func:`encode`)
+    with a CSR adjacency in each direction, so any number of rooted
+    sweeps reuse one encoding."""
+
+    def __init__(self, tbl: pa.Table):
+        self.names, u, v = encode(tbl)
+        n = len(self.names)
+        self._adj = (csr(n, u, v), csr(n, v, u))
+
+    def node_ids(self, nodes: list[str]) -> list[int | None]:
+        """Node id of each of ``nodes`` (None: not a node), by one hash
+        probe over all node values — for a one-off sweep; a caller
+        looking nodes up again and again keeps its own dict."""
+        return pc.index_in(
+            pa.array(nodes, type=self.names.type), value_set=self.names
+        ).to_pylist()
+
+    def sweep(
+        self, root_ids: list[int | None], levels: int, reverse: bool = False
+    ) -> list[set]:
+        """Per-root level BFS along src → dst (dst → src with
+        ``reverse``), at most ``levels`` levels: the set of values
+        reached from each root id. Each level gathers the frontier's
+        adjacency slices in one vectorized step. The seen-set starts
+        empty (a root enters it only around a cycle), so duplicate edges
+        and self-loops are absorbed and cycles terminate; a None root
+        reaches nothing."""
+        indptr, nbrs = self._adj[reverse]
+        seen = np.zeros(len(self.names), dtype=bool)
+        out: list[set] = []
+        for rid in root_ids:
+            reached = []
+            frontier = np.array([] if rid is None else [rid], dtype=np.int64)
+            for _ in range(levels):
+                starts = indptr[frontier]
+                cnt = indptr[frontier + 1] - starts
+                total = int(cnt.sum())
+                if not total:
+                    break
+                # concatenated adjacency slices of every frontier node
+                gather = np.repeat(starts - np.cumsum(cnt) + cnt, cnt)
+                nxt = np.unique(nbrs[gather + np.arange(total)])
+                nxt = nxt[~seen[nxt]]
+                if not len(nxt):
+                    break
+                seen[nxt] = True
+                reached.append(nxt)
+                frontier = nxt
+            hit = np.concatenate(reached) if reached else np.empty(0, np.int32)
+            seen[hit] = False  # reset for the next root
+            out.append(set(values(self.names.take(pa.array(hit)))))
+        return out
 
 
 def min_labels(n_nodes: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:

@@ -15,7 +15,9 @@ question are asked of it, and each has its own operator:
   collect of the edges — that collect is both the size gate and the
   input — and sweeps outward from each root over a driver-side CSR
   adjacency. Above the bound it falls back to the all-pairs closure
-  below, filtered to the roots.
+  below, filtered to the roots. ``OntologyCatalog`` keeps the same
+  encoded graph (:class:`graph_local.Digraph`) per prefix and sweeps it
+  again on every lookup, with the same semantics.
 - **All-pairs** — the full closure, (identifier, ancestor) for every
   node: :func:`ancestors` / :func:`descendants`. Bounded graphs take a
   broadcast map-side closure (_ancestors_broadcast); larger ones an
@@ -359,7 +361,7 @@ def reachable(
     BROADCAST_CLOSURE_MAX_EDGES; pass 0 to force the fallback) are
     answered with ONE Spark job: a capped Arrow collect that is both
     the size gate and the input of a driver-side sweep
-    (:func:`graph_local.sweep`).
+    (:class:`graph_local.Digraph`).
     Larger graphs fall back to the all-pairs closure, filtered to the
     roots."""
     roots = list(dict.fromkeys(roots))
@@ -370,10 +372,11 @@ def reachable(
         if broadcast_edge_bound is None
         else broadcast_edge_bound
     )
-    src, dst = ("parent", "child") if down else ("child", "parent")
-    tbl = graph_local.collect_bounded(edges, src, dst, bound)
+    tbl = graph_local.collect_bounded(edges.select("child", "parent"), bound)
     if tbl is not None:
-        return graph_local.sweep(tbl, roots, max_iter + 1)
+        g = graph_local.Digraph(tbl)
+        hits = g.sweep(g.node_ids(roots), max_iter + 1, reverse=down)
+        return dict(zip(roots, hits))
     # over the bound: the capped collect already proved it, so skip the
     # closure's own count and go straight to the distributed BFS
     closure, col = (

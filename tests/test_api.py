@@ -483,6 +483,40 @@ def test_collect_guard(spark, catalog):
     assert len(catalog.get_id_name_mapping("fixo")) == 40
 
 
+def test_duplicate_keys_resolve_to_smallest_value(spark):
+    """A key with several values resolves to its smallest, whatever the
+    partition order: an alt id under two primaries, a duplicated term
+    id with two names (and a NULL one). The point lookups and the
+    mapping exports agree, on the driver index and on the per-call
+    Spark path (max_collect_rows 0). The larger value comes first, so
+    taking the first or last collected row fails."""
+    from pyobo_spark.api import build_ontology
+
+    cat = build_ontology(
+        spark, "dup",
+        terms=[{"identifier": "1", "name": "b"},
+               {"identifier": "1", "name": None},
+               {"identifier": "1", "name": "a"},
+               {"identifier": "P1", "name": "p"}],
+        alts=[{"identifier": "P2", "alt_id": "A1"},
+              {"identifier": "P1", "alt_id": "A1"},
+              {"identifier": "P3", "alt_id": "A1"}],
+    )
+    assert cat.terms.rdd.getNumPartitions() >= 2
+    assert cat.get_primary_identifier("dup", "A1") == "P1"
+    assert cat.get_alts_to_id("dup") == {"A1": "P1"}
+    assert cat.get_name("dup", "1") == "a"
+    assert cat.get_id_name_mapping("dup") == {"1": "a", "P1": "p"}
+    assert cat.get_name("dup", "A1") == "p"
+
+    spark_path = OntologyCatalog({"terms": cat.terms, "alts": cat.alts})
+    spark_path.max_collect_rows = 0
+    assert spark_path.get_primary_identifier("dup", "A1") == "P1"
+    assert spark_path.get_primary_curie("dup:A1") == "dup:P1"
+    assert spark_path.get_name("dup", "1") == "a"
+    assert spark_path.get_name("dup", "absent") is None
+
+
 def test_semantic_mapping_metadata(spark, catalog):
     """Mapping-set metadata mirrors the reference's MappingSet shape
     (constants.py:293-322): fallback w3id IRI, preferred-case title,

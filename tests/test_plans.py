@@ -7,7 +7,10 @@ promises must survive refactors:
 
 from __future__ import annotations
 
+import pytest
+
 from pyobo_spark import queries as Q
+from pyobo_spark.fixtures.generator import _label
 
 
 def _formatted_plan(df):
@@ -262,10 +265,12 @@ def test_descendants_bfs_shuffle_work_linear_in_depth(spark, sf_dir):
 
 
 def test_rooted_hierarchy_lookups_run_one_job(spark, tmp_path):
-    """A bounded get_ancestors / get_descendants is ONE capped edge
-    collect plus a driver-side sweep (hierarchy.reachable) — not the
-    all-pairs closure, which runs 8 jobs for the same answer. Parquet
-    backed, as a served catalog is, so every scan is a real job."""
+    """A bounded get_ancestors is ONE capped edge collect, which builds
+    the prefix's hierarchy index, plus a driver-side sweep — not the
+    all-pairs closure, which runs 8 jobs for the same answer. The
+    get_descendants after it on the same catalog sweeps the same index
+    and runs no job. Parquet backed, as a served catalog is, so every
+    scan is a real job."""
     from pyobo_spark.api import catalog_from_parquet
     from pyobo_spark.fixtures import generator
 
@@ -273,24 +278,133 @@ def test_rooted_hierarchy_lookups_run_one_job(spark, tmp_path):
     for name in ("terms", "parents"):
         tables[name].write.parquet(str(tmp_path / f"{name}.parquet"))
     cat = catalog_from_parquet(spark, str(tmp_path))
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    calls = {
-        "anc": lambda: cat.get_ancestors("fixo", "0000016"),
-        "desc": lambda: cat.get_descendants("fixo", "0000004"),
-    }
-    got = {}
-    for name, call in calls.items():
-        group = f"rooted_guard_{name}"
-        sc.setJobGroup(group, "rooted hierarchy job-count guard")
-        try:
-            got[name] = call()
-        finally:
-            sc.setJobGroup("tests", "post")
-        assert len(st.getJobIdsForGroup(group)) == 1, name
+    anc, n_anc = _jobs_in_group(
+        spark, "rooted_guard_anc", lambda: cat.get_ancestors("fixo", "0000016")
+    )
+    desc, n_desc = _jobs_in_group(
+        spark, "rooted_guard_desc",
+        lambda: cat.get_descendants("fixo", "0000004"),
+    )
+    assert (n_anc, n_desc) == (1, 0)
     # parents tree over 40 terms: i -> i // 4
-    assert got["anc"] == {"fixo:0000004", "fixo:0000001"}
-    assert got["desc"] == {f"fixo:{i:07d}" for i in range(16, 20)}
+    assert anc == {"fixo:0000004", "fixo:0000001"}
+    assert desc == {f"fixo:{i:07d}" for i in range(16, 20)}
+
+
+def _fixture_catalog(spark, root):
+    """A parquet-backed catalog over the 40-term fixture: fixo terms,
+    alt ids 8xxxxxx on every 6th term, xrefs to fixp, parents i -> i // 4."""
+    from pyobo_spark.api import catalog_from_parquet
+    from pyobo_spark.fixtures import generator
+
+    tables = generator.to_spark(spark, generator.generate(n_terms=40, n_docs=5))
+    for name in ("terms", "synonyms", "alts", "xrefs", "parents"):
+        tables[name].write.parquet(str(root / f"{name}.parquet"))
+    return catalog_from_parquet(spark, str(root))
+
+
+def test_catalog_index_job_counts(spark, tmp_path):
+    """The first lookup per (table, prefix) runs exactly one job — the
+    capped collect that builds that table's index; every later indexed
+    lookup runs none. Reassigning a table rebuilds its index with one
+    job, from the new table; clear_caches() drops every index."""
+    cat = _fixture_catalog(spark, tmp_path)
+    first = {
+        "terms": lambda: cat.get_ids("fixo"),
+        "alts": lambda: cat.get_primary_identifier("fixo", "8000007"),
+        "xrefs": lambda: cat.get_xrefs("fixo", "0000002"),
+        "parents": lambda: cat.get_children("fixo", "0000001"),
+    }
+    for table, call in first.items():
+        assert _jobs_in_group(spark, f"index_{table}", call)[1] == 1, table
+    repeated = {
+        "get_name": (lambda: cat.get_name("FIXO", "8000007"), _label(7)),
+        "get_name_by_curie": (
+            lambda: cat.get_name_by_curie("FIXO:0000002"), _label(2)),
+        "get_primary_identifier": (
+            lambda: cat.get_primary_identifier("fixo", "8000013"), "0000013"),
+        "get_primary_curie": (
+            lambda: cat.get_primary_curie("fixo:8000013"), "fixo:0000013"),
+        "get_primary_reference": (
+            lambda: cat.get_primary_reference("fixo", "8000013"),
+            ("fixo", "0000013")),
+        "get_xrefs": (lambda: cat.get_xrefs("fixo", "0000003"),
+                      ["fixp:0000003"]),
+        "get_ids": (lambda: len(cat.get_ids("fixo")), 40),
+        "get_id_name_mapping": (
+            lambda: cat.get_id_name_mapping("fixo")["0000040"],
+            _label(40)),
+        "get_alts_to_id": (lambda: cat.get_alts_to_id("fixo")["8000001"],
+                           "0000001"),
+        "get_children": (lambda: cat.get_children("fixo", "0000002"),
+                         {f"fixo:{i:07d}" for i in range(8, 12)}),
+        "get_ancestors": (lambda: cat.get_ancestors("fixo", "0000017"),
+                          {"fixo:0000004", "fixo:0000001"}),
+        "get_descendants": (lambda: len(cat.get_descendants("fixo", "0000001")),
+                            20),  # 4..7 and 16..31
+        "has_ancestor": (lambda: cat.has_ancestor("fixo", "0000017", "0000001"),
+                         True),
+        "is_descendent": (
+            lambda: cat.is_descendent("fixo", "0000001", "0000017"), True),
+        "get_literal_mappings_subset": (
+            lambda: type(cat.get_literal_mappings_subset("fixo", "0000009")),
+            type(cat.terms)),
+    }
+    for name, (call, want) in repeated.items():
+        got, n_jobs = _jobs_in_group(spark, f"indexed_{name}", call)
+        assert (got, n_jobs) == (want, 0), name
+
+    # a new parents table: one job, answered from it
+    spark.createDataFrame(
+        [("fixo", "0000017", "fixo", "0000003")], cat.parents.schema
+    ).write.parquet(str(tmp_path / "parents2.parquet"))
+    cat.parents = spark.read.parquet(str(tmp_path / "parents2.parquet"))
+    got, n_jobs = _jobs_in_group(
+        spark, "index_rebuilt", lambda: cat.get_ancestors("fixo", "0000017")
+    )
+    assert (got, n_jobs) == ({"fixo:0000003"}, 1)
+
+    cat.clear_caches()
+    assert _jobs_in_group(spark, "index_cleared",
+                          lambda: cat.get_ids("fixo"))[1] == 1
+
+
+def test_catalog_above_bound_keeps_spark_path(spark, tmp_path, monkeypatch):
+    """A prefix above its bound — max_collect_rows for the tables, the
+    edge bound for the hierarchy — is answered per call through Spark,
+    and the verdict is remembered: the capped collect that proved it
+    does not run again, so a repeated call runs one job per gated table
+    fewer. Mapping exports raise, the second time with no job."""
+    cat = _fixture_catalog(spark, tmp_path)
+    cat.max_collect_rows = 3  # 40 terms, 7 alts, 55 xrefs
+    monkeypatch.setenv("PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES", "5")  # 37 edges
+    calls = {
+        # alts and terms gated: two capped collects on the first call
+        "get_name": (lambda: cat.get_name("fixo", "8000007"),
+                     _label(7), 2),
+        "get_xrefs": (lambda: cat.get_xrefs("fixo", "0000003"),
+                      ["fixp:0000003"], 1),
+        "get_children": (lambda: cat.get_children("fixo", "0000002"),
+                         {f"fixo:{i:07d}" for i in range(8, 12)}, 1),
+    }
+    for name, (call, want, gated) in calls.items():
+        got1, n1 = _jobs_in_group(spark, f"over_{name}_1", call)
+        got2, n2 = _jobs_in_group(spark, f"over_{name}_2", call)
+        assert got1 == got2 == want, name
+        assert n2 >= 1 and n1 - n2 == gated, (name, n1, n2)
+    assert cat.get_ancestors("fixo", "0000017") == {"fixo:0000004",
+                                                   "fixo:0000001"}
+    with pytest.raises(ValueError, match="max_collect_rows"):
+        cat.get_ids("fixo")
+
+    def raises():
+        with pytest.raises(ValueError, match="max_collect_rows"):
+            cat.get_id_name_mapping("fixo")
+
+    assert _jobs_in_group(spark, "over_export", raises)[1] == 0
+    # a raised bound is tried again, and then holds the prefix
+    cat.max_collect_rows = 1000
+    assert len(cat.get_id_name_mapping("fixo")) == 40
 
 
 def _jobs_in_group(spark, group: str, call):

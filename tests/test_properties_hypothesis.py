@@ -382,3 +382,151 @@ def test_min_labels_long_path_and_cycle():
     cycle = graph_local.min_labels(n, ids, np.roll(ids, 1))
     assert time.perf_counter() - t0 < 10
     assert not path.any() and not cycle.any()  # one component: label 0
+
+
+#: two prefixes over the same local ids (a CURIE-keyed index must keep
+#: them apart), plus names and targets whose smallest value by bytes
+#: differs from other orders
+_LOCALS = ["1", "2", "3", "X", "x"]
+_NAMES = [None, "b", "a", "B", "é"]
+_CAT_FIXED = {
+    # a duplicated id with a NULL and two non-NULL names
+    "terms": [("pa", "1", None), ("pa", "1", "b"), ("pa", "1", "a"),
+              ("pb", "1", "other"), ("pa", "2", "two")],
+    # an alt id under two primaries, and an alt id that is a primary
+    "alts": [("pa", "a1", "3"), ("pa", "a1", "2"), ("pa", "1", "2")],
+    # NULL target prefix and NULL target id
+    "xrefs": [("pa", "1", None, "9"), ("pa", "1", "t", None),
+              ("pa", "1", "t", "9"), ("pa", "1", "t", "9"),
+              ("pb", "1", "t", "8")],
+    "synonyms": [("pa", "3", "three", "oboInOwl:hasExactSynonym")],
+    "parents": [
+        ("pa", "1", "pa", "1"),  # self-loop
+        ("pa", "2", "pa", "3"), ("pa", "3", "pa", "X"),
+        ("pa", "X", "pa", "2"),  # cycle
+        *[(p, loc, "pa", "x") for p in ("pa", "pb") for loc in "123"],  # hub
+        ("pb", "X", "pa", "1"),  # child in pb, parent in pa
+    ],
+}
+_PFX = st.sampled_from(["pa", "pb"])
+_LOC = st.sampled_from(_LOCALS)
+
+
+def _catalog_tables(spark, rows: dict) -> dict:
+    """Canonical-schema tables over ``rows`` (only the indexed columns
+    set), each dealt round-robin over 3 partitions. Built from pandas,
+    so a scan is a local relation, not a Python RDD (~10x cheaper per
+    job)."""
+    import pandas as pd
+
+    from pyobo_spark.sources.obo_reader import table_schemas
+
+    cols = {
+        "terms": ("prefix", "identifier", "name"),
+        "alts": ("prefix", "alt_id", "identifier"),
+        "xrefs": ("prefix", "identifier", "target_prefix", "target_id"),
+        "parents": ("child_prefix", "child", "parent_prefix", "parent"),
+        "synonyms": ("prefix", "identifier", "text", "predicate"),
+    }
+    canon = table_schemas()
+    out = {}
+    for name, given_cols in cols.items():
+        fields = canon[name].fieldNames()
+        full = [
+            [dict(zip(given_cols, r)).get(f) for f in fields]
+            for r in _CAT_FIXED[name] + rows.get(name, [])
+        ]
+        out[name] = spark.createDataFrame(
+            pd.DataFrame(full, columns=fields), canon[name]
+        ).repartition(3)
+    return out
+
+
+@given(
+    terms=st.lists(st.tuples(_PFX, _LOC, st.sampled_from(_NAMES)), max_size=12),
+    alts=st.lists(st.tuples(_PFX, st.sampled_from(_LOCALS + ["a1", "a2"]), _LOC),
+                  max_size=6),
+    xrefs=st.lists(
+        st.tuples(_PFX, _LOC, st.sampled_from([None, "t", "u"]),
+                  st.sampled_from([None, "9", "10"])),
+        max_size=8,
+    ),
+    parents=st.lists(st.tuples(_PFX, _LOC, _PFX, _LOC), max_size=8),
+    probes=st.lists(
+        st.tuples(st.sampled_from(["pa", "PA", "pb"]),
+                  st.sampled_from(_LOCALS + ["a1", "absent"])),
+        max_size=1,
+    ),
+)
+@settings(max_examples=3, deadline=None)
+def test_catalog_index_equals_spark_path(
+    spark, terms, alts, xrefs, parents, probes
+):
+    """Every lookup the catalog answers from its driver index equals
+    the per-call Spark path (a catalog whose max_collect_rows is 0) and
+    the rooted Spark formulation of the hierarchy lookups, on catalogs
+    with duplicate keys, NULL names and target prefixes, an alt id that
+    is also a primary id, self-loops, a cycle, a hub, two prefixes with
+    colliding local ids and uppercase arguments."""
+    from pyspark.sql import functions as F
+
+    from pyobo_spark.api import OntologyCatalog
+    from pyobo_spark.operators import hierarchy as H
+
+    tables = _catalog_tables(spark, {"terms": terms, "alts": alts,
+                                     "xrefs": xrefs, "parents": parents})
+    assert min(t.rdd.getNumPartitions() for t in tables.values()) >= 2
+    cat = OntologyCatalog(tables)
+    spark_path = OntologyCatalog(tables)
+    spark_path.max_collect_rows = 0
+    # pb:1 collides with pa:1 in every table
+    for k, (arg, ident) in enumerate([("PB", "1")] + probes):
+        p = arg.lower()
+        curie = f"{arg}:{ident}"
+        name = spark_path.get_name(arg, ident)
+        primary = spark_path.get_primary_identifier(arg, ident)
+        assert cat.get_name(arg, ident) == name
+        assert cat.get_name_by_curie(curie) == name
+        assert cat.get_primary_identifier(arg, ident) == primary
+        assert cat.get_primary_curie(curie) == f"{p}:{primary}"
+        assert (cat.get_primary_reference(arg, ident)
+                == spark_path.get_primary_reference(arg, ident))
+        assert cat.get_xrefs(arg, ident) == spark_path.get_xrefs(arg, ident)
+
+        edges = H.curie_edges(tables["parents"], p)
+        node = f"{p}:{ident}"
+        up = H.reachable(edges, [node])[node]
+        down = H.reachable(edges, [node], down=True)[node]
+        assert cat.get_ancestors(arg, ident) == up
+        assert cat.get_descendants(arg, curie) == down
+        assert cat.get_children(arg, ident) == {
+            r["identifier"] for r in H.children(edges, node).collect()
+        }
+        for other in _LOCALS:
+            assert cat.has_ancestor(arg, ident, other) == (f"{p}:{other}" in up)
+            assert cat.is_descendent(arg, ident, other) == (
+                f"{p}:{other}" in down)
+        if k == 0:  # two collects over joins: once per catalog
+            got = cat.get_literal_mappings_subset(arg, ident)
+            below = {c[len(p) + 1:] for c in down if c.startswith(f"{p}:")}
+            cols = ["identifier", "text", "predicate"]
+            assert sorted(map(tuple, got.select(cols).collect())) == sorted(
+                tuple(r) for r in cat.get_literal_mappings_df(p)
+                .select(cols).collect() if r["identifier"] in below
+            )
+
+    names: dict = {}
+    for r in tables["terms"].groupBy("prefix", "identifier").agg(
+            F.min("name")).collect():
+        names.setdefault(r[0], {})[r[1]] = r[2]
+    primaries: dict = {}
+    for r in tables["alts"].groupBy("prefix", "alt_id").agg(
+            F.min("identifier")).collect():
+        primaries.setdefault(r[0], {})[r[1]] = r[2]
+    for arg in ("pa", "PB"):
+        p = arg.lower()
+        assert cat.get_ids(arg) == set(names[p])
+        assert cat.get_id_name_mapping(arg) == {
+            i: n for i, n in names[p].items() if n is not None
+        }
+        assert cat.get_alts_to_id(arg) == primaries.get(p, {})
