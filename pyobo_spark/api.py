@@ -1287,17 +1287,15 @@ class OntologyCatalog:
         strict_match raises instead of returning None."""
         m = self.get_grounder(prefix).value
         tokens = _dict.fold_text(text).split(" ")
-        best = None
-        for start, end, curie, score in m.search(tokens):
-            key = (-score, -(end - start), curie)
-            if best is None or key < best[0]:
-                best = (key, curie)
+        best = min(m.search(tokens), key=_matcher.candidate_key, default=None)
         if best is None and strict_match:
             raise ValueError(
                 f"no match found for query: {text} against prefixes: {prefix}"
             )
-        return best[1] if best else None
+        return best[2] if best else None  # (start, end, curie, score)
 
     def ground_df(self, prefix: str, documents: DataFrame) -> DataFrame:
-        """Batch grounding: documents(doc_id, spans[]) → best mentions."""
+        """Batch grounding: documents(doc_id, spans[]) → best mentions.
+        A small batch already on the driver is grounded there, with no
+        Spark job (matcher.detect_mentions)."""
         return _matcher.detect_mentions(documents, self.get_grounder(prefix))

@@ -20,6 +20,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .footers import written_stats
 
@@ -70,8 +71,9 @@ class PipelineRunner:
     (a non-local filesystem), ``n_rows`` and ``sample`` fall back to a
     ``count()`` and a ``limit(10)`` collect.
 
-    A stage whose manifest exists is skipped: its data is read back and
-    its manifest's ``n_rows`` reported."""
+    A stage whose manifest exists is skipped: its data is read back
+    with the manifest's ``schema`` (the built DataFrame's; no inference
+    job) and its manifest's ``n_rows`` reported."""
 
     def __init__(self, spark: SparkSession, root: str, force: bool = False):
         self.spark = spark
@@ -91,8 +93,11 @@ class PipelineRunner:
         out_dir = self.root / name
         manifest = self._manifest_path(name)
         if manifest.exists() and not self.force:
-            df = self.spark.read.parquet(str(out_dir / "data"))
             meta = json.loads(manifest.read_text())
+            reader = self.spark.read
+            if "schema" in meta:  # older manifests: infer it (one job)
+                reader = reader.schema(T.StructType.fromJson(meta["schema"]))
+            df = reader.parquet(str(out_dir / "data"))
             self.results.append(
                 StageResult(name, str(out_dir), True, meta["n_rows"], 0.0)
             )
@@ -108,6 +113,7 @@ class PipelineRunner:
             "stage": name,
             "n_rows": n_rows,
             "n_partitions": out.rdd.getNumPartitions(),
+            "schema": df.schema.jsonValue(),
             "counters": counters(out, counter_cols),
             "sample": sample,
             "wall_sec": round(time.time() - t0, 3),

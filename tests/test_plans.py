@@ -1,11 +1,14 @@
 """Physical-plan regression guards — the scale properties the engine
 promises must survive refactors:
-- mention detection is map-only (zero Exchange),
+- mention detection is map-only (zero Exchange), and a small batch
+  already on the driver is grounded there with no job,
 - export scans push filters and prune columns,
 - dim joins broadcast (no sort-merge join on the alt-upgrade path).
 """
 
 from __future__ import annotations
+
+import json
 
 import pytest
 
@@ -22,16 +25,69 @@ def _formatted_plan(df):
     )
 
 
-def test_mention_detection_is_map_only(spark):
+def test_mention_detection_is_map_only(spark, tmp_path):
+    """A scanned corpus is matched on the executors, map-only. Parquet
+    backed: documents already on the driver take the driver path, which
+    has no MapInPandas plan to inspect."""
     from pyobo_spark.fixtures import generator
     from pyobo_spark.grounding import dictionary, matcher
 
     tables = generator.to_spark(spark, generator.generate(n_terms=5, n_docs=5))
+    tables["documents"].write.parquet(str(tmp_path / "documents"))
+    documents = spark.read.parquet(str(tmp_path / "documents"))
     bc = spark.sparkContext.broadcast(
         dictionary.build_matcher([("x", "a:1", "rdfs:label")])
     )
-    plan = _formatted_plan(matcher.detect_mentions(tables["documents"], bc))
+    plan = _formatted_plan(matcher.detect_mentions(documents, bc))
+    assert "MapInPandas" in plan
     assert "Exchange" not in plan
+
+
+def _local_documents(spark, n_docs):
+    """The fixture corpus's first ``n_docs`` documents as a DataFrame
+    on the driver (from an Arrow table: a local relation), plus a
+    catalog over the fixture ontology whose fixo grounder is built."""
+    from pyobo_spark.api import OntologyCatalog
+    from pyobo_spark.fixtures import generator
+
+    tables = generator.to_spark(
+        spark, generator.generate(n_terms=40, n_docs=n_docs)
+    )
+    cat = OntologyCatalog(tables)
+    cat.get_grounder("fixo")
+    docs = spark.createDataFrame(tables["documents"].toArrow())
+    assert docs.isLocal() and docs.count() == n_docs
+    return cat, docs
+
+
+def test_ground_df_local_batch_runs_no_job(spark):
+    """A 50-document batch on the driver is grounded there: ground_df
+    and the caller's collect of its result run no Spark job."""
+    cat, docs = _local_documents(spark, 50)
+    rows, n_jobs = _jobs_in_group(
+        spark, "ground_local",
+        lambda: cat.ground_df("fixo", docs).select(
+            "doc_id", "span_idx", "curie").collect(),
+    )
+    assert n_jobs == 0
+    assert rows and {r["doc_id"] for r in rows} <= {
+        r["doc_id"] for r in docs.collect()}
+
+
+def test_ground_df_above_cap_runs_map_in_pandas(spark):
+    """A driver-side batch of LOCAL_MAX_DOCS + 1 documents goes to the
+    executors: the mapInPandas job runs (the capped collect that found
+    the batch too large runs none)."""
+    from pyobo_spark.grounding import matcher
+
+    cat, docs = _local_documents(spark, matcher.LOCAL_MAX_DOCS + 1)
+    assert "MapInPandas" in _formatted_plan(cat.ground_df("fixo", docs))
+    rows, n_jobs = _jobs_in_group(
+        spark, "ground_above_cap",
+        lambda: cat.ground_df("fixo", docs).select(
+            "doc_id", "span_idx", "curie").collect(),
+    )
+    assert rows and n_jobs == 1
 
 
 def test_names_scan_pushes_filter_and_prunes(spark, sf_dir):
@@ -465,6 +521,32 @@ def test_stage_bookkeeping_jobs(spark, tmp_path):
     )
     assert stage_jobs("one", ("a",)) == 1 + agg
     assert [r.n_rows for r in runner.results] == [300] * 3
+
+
+def test_resumed_stage_reads_back_without_a_job(spark, tmp_path):
+    """A skipped stage reads its data back with the schema stored in
+    its manifest: no schema-inference job, and the fresh run's schema.
+    A manifest without a stored schema still resumes (inferred)."""
+    from pyobo_spark.pipeline.stages import PipelineRunner
+
+    src = spark.range(50).selectExpr(
+        "id", "cast(id AS string) AS s", "array(id) AS xs")
+    root = str(tmp_path / "stages")
+    fresh = PipelineRunner(spark, root).stage("one", lambda: src)
+    resumed, n_jobs = _jobs_in_group(
+        spark, "resume_guard",
+        lambda: PipelineRunner(spark, root).stage("one", lambda: src),
+    )
+    assert n_jobs == 0
+    assert resumed.schema == fresh.schema
+
+    manifest = tmp_path / "stages" / "one" / "_MANIFEST.json"
+    meta = json.loads(manifest.read_text())
+    del meta["schema"]
+    manifest.write_text(json.dumps(meta))
+    inferred = PipelineRunner(spark, root).stage("one", lambda: src)
+    assert inferred.columns == fresh.columns
+    assert inferred.count() == 50
 
 
 def test_ann_cosine_lsh_shuffle_budget(spark, sf_dir):

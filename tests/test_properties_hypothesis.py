@@ -530,3 +530,114 @@ def test_catalog_index_equals_spark_path(
             i: n for i, n in names[p].items() if n is not None
         }
         assert cat.get_alts_to_id(arg) == primaries.get(p, {})
+
+
+#: ties on score (a:0 / a:1), on score and length (b:1 "beta" vs b:3
+#: "beta gamma"), multi-token synonyms and a candidate that outscores a
+#: longer one ("alpha" label vs "alpha beta" synonym)
+_GROUND_ENTRIES = [
+    ("alpha", "a:1", "rdfs:label"),
+    ("Alpha", "a:0", "rdfs:label"),
+    ("alpha beta", "a:3", "oboInOwl:hasExactSynonym"),
+    ("alpha-beta", "z:9", "oboInOwl:hasRelatedSynonym"),
+    ("beta", "b:1", "oboInOwl:hasExactSynonym"),
+    ("beta gamma", "b:3", "oboInOwl:hasExactSynonym"),
+    ("beta gamma delta", "c:1", "oboInOwl:hasNarrowSynonym"),
+    ("gamma", "c:2", "oboInOwl:hasBroadSynonym"),
+    ("gamma", "c:0", "oboInOwl:hasNarrowSynonym"),
+]
+_GROUND_WORDS = ["alpha", "Beta", "gamma", "delta", "ALPHA-beta", "x", " "]
+
+
+def _span(kind, text):
+    return {"kind": kind, "text": text, "media_ref": None, "offset": 0}
+
+
+#: a NULL spans array, an empty one, NULL span elements and media spans
+#: before text spans (span_idx counts them), empty and NULL text
+_GROUND_FIXED = [
+    None,
+    [],
+    [None, _span("text", "alpha beta gamma delta")],
+    [_span("image", None), _span("text", "beta gamma alpha"), None,
+     _span("audio", "alpha"), _span("text", "Alpha-Beta x gamma")],
+    [_span("text", ""), _span("text", None), _span("text", "x  gamma")],
+]
+
+_ground_span = st.one_of(
+    st.none(),
+    st.builds(
+        _span,
+        st.sampled_from(["text", "text", "image"]),
+        st.one_of(st.none(),
+                  st.lists(st.sampled_from(_GROUND_WORDS), max_size=8)
+                  .map(" ".join)),
+    ),
+)
+
+
+@given(
+    docs=st.lists(st.one_of(st.none(), st.lists(_ground_span, max_size=4)),
+                  max_size=12),
+    int_ids=st.booleans(),
+)
+@settings(max_examples=4, deadline=None)
+def test_driver_grounding_equals_map_in_pandas(
+    spark, tmp_path_factory, docs, int_ids
+):
+    """detect_mentions on documents already on the driver (the driver
+    placement) equals the mapInPandas placement on a parquet copy, which
+    equals the mapInPandas candidates resolved by best_match's window —
+    and keep_all agrees across placements too. Integer doc_ids pin the
+    string cast on both paths."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pyobo_spark.grounding import matcher
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 8
+    span_t = T.StructType([
+        T.StructField("kind", T.StringType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("media_ref", T.StringType()),
+        T.StructField("offset", T.IntegerType()),
+    ])
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType() if int_ids else T.StringType()),
+        T.StructField("spans", T.ArrayType(span_t)),
+    ])
+    records = [
+        {"doc_id": i if int_ids else f"d{i}", "spans": spans}
+        for i, spans in enumerate(_GROUND_FIXED + docs)
+    ]
+    local = spark.createDataFrame(
+        pa.Table.from_pylist(records, schema=to_arrow_schema(schema)))
+    path = str(tmp_path_factory.mktemp("ground_docs"))
+    local.repartition(3).write.mode("overwrite").parquet(path)
+    scanned = spark.read.parquet(path)
+    assert local.isLocal() and not scanned.isLocal()
+    assert scanned.rdd.getNumPartitions() >= 2
+    bc = spark.sparkContext.broadcast(build_matcher(_GROUND_ENTRIES))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(
+            [f.name for f in matcher.MATCH_SCHEMA]).collect())
+
+    on_driver = matcher.detect_mentions(local, bc)
+    assert on_driver.isLocal()  # the driver placement ran
+    got = rows(on_driver)
+    assert got == rows(matcher.detect_mentions(scanned, bc))
+    every = matcher.detect_mentions(scanned, bc, keep_all=True)
+    assert got == rows(matcher.best_match(every))
+    assert rows(matcher.detect_mentions(local, bc, keep_all=True)) == rows(
+        every)
+    # a wider local frame, doc_id last: the driver placement selects and
+    # casts in Spark instead of collecting the frame as it is
+    wide_t = T.StructType([schema["spans"],
+                           T.StructField("note", T.StringType()),
+                           schema["doc_id"]])
+    wide = spark.createDataFrame(pa.Table.from_pylist(
+        [dict(r, note="x") for r in records], schema=to_arrow_schema(wide_t)))
+    on_driver = matcher.detect_mentions(wide, bc)
+    assert on_driver.isLocal() and rows(on_driver) == got
