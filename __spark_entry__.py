@@ -75,20 +75,13 @@ def entry(spark: SparkSession) -> DataFrame:
     → mention triples ∪ typedef-filtered ontology edges."""
     sf_dir = "/root/testdata/sf0.001"
     _ensure_executors_can_import(spark)
-    from pyspark.sql import functions as F
-
     from pyobo_spark.grounding import matcher
     from pyobo_spark.grounding.dictionary import broadcast_matcher, build_matcher
 
     ac = build_matcher(Q.MENTION_DICT)
     bc = broadcast_matcher(spark, ac)
     raw = matcher.match_text_spans(Q._docs_as_spans(spark, sf_dir), bc)
-    best = matcher.best_match(raw)
-    mention_triples = best.select(
-        F.concat(F.lit("doc:"), F.col("doc_id")).alias("subject_curie"),
-        F.lit("pyobo:mentions").alias("predicate_curie"),
-        F.col("curie").alias("object_curie"),
-    ).distinct()
+    mention_triples = matcher.mention_triples(matcher.best_match(raw))
     onto_edges = Q.q_edges(spark, sf_dir)
     return mention_triples.unionByName(onto_edges)
 

@@ -1,15 +1,19 @@
-"""spark-submit entrypoint for the full KG-construction pipeline.
+"""spark-submit entrypoint for the full KG-construction pipeline: a thin
+CLI over :func:`pyobo_spark.pipeline.kg_build.run_kg_pipeline_staged`.
 
 Usage (local sandbox):
     ./build_pyfiles.sh
-    spark-submit --master 'local[8]' --py-files dist/pyobo_spark.zip \\
+    spark-submit --master 'local[4]' --py-files dist/pyobo_spark.zip \\
         jobs/kg_pipeline_job.py --out /tmp/kg_out [--n-terms 200] \\
-        [--n-docs 1000] [--force]
+        [--n-docs 1000] [--force] [--snapshot-table /tmp/kg_triples]
 
 On a cluster the same invocation works with --master yarn/k8s — the
 pipeline has no driver-side data dependencies beyond the broadcast
-dictionary. Stages checkpoint to --out; re-running with the same --out
-RESUMES from the last committed stage (north-rule resumability).
+dictionary. The five stages (literal_mappings, mentions, xrefs_parsed,
+components, triples) checkpoint to --out; re-running with the same
+--out RESUMES from the last committed stage (north-rule resumability).
+Prints one JSON line: the stage lineage report and the id of the
+snapshot holding this build's triples.
 """
 
 from __future__ import annotations
@@ -19,7 +23,7 @@ import json
 import sys
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", required=True)
     ap.add_argument("--n-terms", type=int, default=200)
@@ -40,81 +44,59 @@ def main() -> None:
         "the last N snapshots and reclaim their unshared data files "
         "(bounds table storage across rebuilds)",
     )
-    args = ap.parse_args()
+    return ap.parse_args(argv)
 
+
+def run(spark, argv: list[str] | None = None) -> dict:
+    """Build (or resume) the KG at --out on ``spark``; returns the
+    printed JSON record. The session is left running."""
+    args = parse_args(argv)
+
+    from pyobo_spark.fixtures import generator
+    from pyobo_spark.pipeline import kg_build
+
+    # at real scale the inputs are Iceberg reads; here the seeded
+    # generator stands in for the 54 source converters
+    fx = generator.generate(n_terms=args.n_terms, n_docs=args.n_docs)
+    runner = kg_build.run_kg_pipeline_staged(
+        spark,
+        generator.to_spark(spark, fx),
+        args.out,
+        skip_obsolete=args.skip_obsolete,
+        force=args.force,
+        snapshot_table=args.snapshot_table,
+    )
+
+    snapshot_id = None
+    if args.snapshot_table:
+        if args.expire_keep_last:
+            from pyobo_spark.pipeline.snapshots import SnapshotTable
+
+            stats = SnapshotTable(spark, args.snapshot_table).expire_snapshots(
+                keep_last=args.expire_keep_last
+            )
+            print(json.dumps({"expire": stats}))
+        snapshot_id = kg_build.committed_snapshot_id(
+            spark, args.out, args.snapshot_table
+        )
+
+    record = {
+        "pipeline": "kg_build", "stages": runner.lineage_report(),
+        "triples_snapshot_id": snapshot_id,
+    }
+    print(json.dumps(record))
+    return record
+
+
+def main() -> None:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("kg_pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    from pyobo_spark.fixtures import generator
-    from pyobo_spark.pipeline import kg_build
-    from pyobo_spark.pipeline.stages import PipelineRunner
-
-    fx = generator.generate(n_terms=args.n_terms, n_docs=args.n_docs)
-    tables = generator.to_spark(spark, fx)
-
-    runner = PipelineRunner(spark, args.out, force=args.force)
-
-    # stage the INPUTS first (at real scale these are Iceberg reads; here
-    # the seeded generator stands in for the 54 source converters)
-    docs = runner.stage("documents", lambda: tables["documents"])
-    tables = dict(tables, documents=docs)
-
-    outputs = kg_build.run_kg_pipeline(
-        spark, tables, skip_obsolete=args.skip_obsolete
-    )
-    staged = {}
-    for name in ("names", "literal_mappings", "mentions", "components",
-                 "mappings", "parse_lineage", "media_features", "triples"):
-        counter = "prefix" if name in ("names", "literal_mappings") else ()
-        staged[name] = runner.stage(
-            name,
-            lambda n=name: outputs[n],
-            counter_cols=("prefix",) if counter else (),
-        )
-
-    snapshot_id = None
-    if args.snapshot_table:
-        # same semantics as run_kg_pipeline_staged(snapshot_table=...):
-        # commit the STAGE CHECKPOINT's bytes (already materialized —
-        # committing the lazy plan would re-execute the whole lineage),
-        # at most once per rebuild, marker-healed across crashes
-        from pyobo_spark.pipeline.kg_build import _commit_triples_snapshot
-
-        triples_rebuilt = not next(
-            r for r in runner.results if r.name == "triples"
-        ).skipped
-        _commit_triples_snapshot(
-            spark, staged["triples"], args.out, args.snapshot_table,
-            rebuilt=triples_rebuilt,
-        )
-        from pathlib import Path
-
-        marker = Path(args.out) / "triples" / "_SNAPSHOT_ID"
-        snapshot_id = int(marker.read_text()) if marker.exists() else None
-        if args.expire_keep_last:
-            from pyobo_spark.pipeline.snapshots import SnapshotTable
-
-            tbl = SnapshotTable(spark, args.snapshot_table)
-            stats = tbl.expire_snapshots(keep_last=args.expire_keep_last)
-            print(json.dumps({"expire": stats}))
-            # expiry can drop the snapshot a RESUMED run's marker points
-            # to; a stale marker would both report a dead id and suppress
-            # the recommit that heals it — clear it so the next rebuild
-            # (or marker-less resume) recommits
-            if snapshot_id is not None and not tbl._exists(
-                tbl._snapshot_path(snapshot_id)
-            ):
-                marker.unlink()
-                snapshot_id = None
-
-    report = runner.lineage_report()
-    print(json.dumps({
-        "pipeline": "kg_build", "stages": report,
-        "triples_snapshot_id": snapshot_id,
-    }))
-    spark.stop()
+    try:
+        run(spark, sys.argv[1:])
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -27,7 +27,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .registry import BLOCKLIST, REMAP_FULL, Registry
@@ -135,8 +134,3 @@ def normalize_curies(
             yield pdf[others + ["prefix", "identifier", "parse_status"]]
 
     return df.mapInPandas(run, schema=out_schema)
-
-
-def parse_metrics(parsed: DataFrame) -> DataFrame:
-    """Per-status counters (reference counter-logs, reference.py:213-258)."""
-    return parsed.groupBy("parse_status").agg(F.count(F.lit(1)).alias("n_rows"))

@@ -611,21 +611,3 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     return media.select("media_ref", "kind", "content").mapInPandas(
         run, schema=FRAME_SCHEMA
     )
-
-
-def media_from_documents(exploded_spans: DataFrame) -> DataFrame:
-    """Derive a media-table skeleton from non-text spans (content empty —
-    at scale this joins to the blob store's Iceberg table by media_ref)."""
-    return (
-        exploded_spans.where(F.col("kind") != "text")
-        .select(
-            "media_ref",
-            "kind",
-            F.lit(None).cast("binary").alias("content"),
-            F.lit(None).cast("string").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("duration_ms"),
-        )
-        .distinct()
-    )

@@ -5,18 +5,24 @@
   documents(doc_id, spans[]) → posexplode → Arrow matcher → best-match →
   alt-id canonicalization (broadcast join) → xref connected components →
   component-canonical CURIEs → (subj, pred, obj) triples ∪ ontology
-  edges, plus names/synonyms/mappings side tables.
+  edges.
 
-Each stage is checkpointable via PipelineRunner (resume-from-stage).
+:func:`run_kg_pipeline_staged` is the one composition of these stages,
+each checkpointed by PipelineRunner (resume-from-stage); the library,
+``jobs/kg_pipeline_job.py`` and kgbench all call it. Names are the
+``rdfs:label`` rows of ``literal_mappings``, mappings the ``ok`` rows of
+``xrefs_parsed``, and the parse counters that stage's manifest.
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..grounding import dictionary, matcher
-from ..normalize.curie import normalize_curies, parse_metrics
+from ..normalize.curie import normalize_curies
 from ..operators import components, exports
 
 
@@ -94,12 +100,6 @@ def ok_xrefs(parsed: DataFrame) -> DataFrame:
     )
 
 
-def normalized_xrefs(tables: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
-    """(ok_xrefs, parse_lineage) — the one-shot pipeline's view."""
-    parsed = parsed_xrefs(tables)
-    return ok_xrefs(parsed), parse_metrics(parsed)
-
-
 def xref_components(xr: DataFrame) -> DataFrame:
     """Stage body: xref equivalence graph → connected components."""
     cc_edges = xr.select(
@@ -138,57 +138,10 @@ def build_triples(
     )
     rel_ok = exports.relations_typedef_filtered(tables["relations"], typedefs)
     onto_edges = exports.edges(rel_ok, tables["parents"], prefix=prefix)
-    mention_triples = mentions_canonical.select(
-        F.concat(F.lit("doc:"), "doc_id").alias("subject_curie"),
-        F.lit("pyobo:mentions").alias("predicate_curie"),
-        F.col("canonical").alias("object_curie"),
-    ).distinct()
+    mention_triples = matcher.mention_triples(
+        mentions_canonical.select("doc_id", F.col("canonical").alias("curie"))
+    )
     return mention_triples.unionByName(onto_edges)
-
-
-def run_kg_pipeline(
-    spark: SparkSession,
-    tables: dict[str, DataFrame],
-    skip_obsolete: bool = True,
-) -> dict[str, DataFrame]:
-    """tables: fixture dict from fixtures.generator.to_spark. Returns the
-    materialized output DataFrames."""
-    terms = tables["terms"]
-    lm = build_literal_mappings(terms, tables["synonyms"])
-    mentions = detect_and_upgrade_mentions(
-        spark, tables, lm, skip_obsolete=skip_obsolete
-    )
-
-    xr, parse_lineage = normalized_xrefs(tables)
-    comp = xref_components(xr)
-    mentions = canonicalize_mentions(mentions, comp)
-    triples = build_triples(spark, tables, mentions)
-
-    # multimodal leg: non-text spans → media-table skeleton + (stubbed)
-    # feature extraction — the media plumbing runs in the same pipeline
-    from ..operators import multimodal
-
-    media = multimodal.media_from_documents(
-        matcher.explode_spans(tables["documents"])
-    )
-    media_features = multimodal.extract_media_features(media)
-
-    return {
-        "literal_mappings": lm,
-        "mentions": mentions,
-        "components": comp,
-        "media_features": media_features,
-        "names": exports.names(terms),
-        "mappings": xr.select(
-            F.concat("subj_prefix", F.lit(":"), "subj_identifier").alias(
-                "subject_id"
-            ),
-            F.col("predicate").alias("predicate_id"),
-            F.concat("target_prefix", F.lit(":"), "target_id").alias("object_id"),
-        ).dropDuplicates(),
-        "parse_lineage": parse_lineage,
-        "triples": triples,
-    }
 
 
 def run_kg_pipeline_staged(
@@ -214,9 +167,9 @@ def run_kg_pipeline_staged(
     snapshot carries both the equivalence-graph input (stage 4 filters
     ok rows FROM THE SNAPSHOT — the parse runs once, and a crash
     between stages 3 and 4 cannot drift: components are built from the
-    same bytes the lineage counters describe) and the observability the
-    one-shot pipeline returns as parse_lineage (the reference's
-    counter-logged warnings, reference.py:213-258).
+    same bytes the lineage counters describe) and the parse-status
+    counters (the reference's counter-logged warnings,
+    reference.py:213-258).
 
     A stage whose manifest exists is skipped on re-run and its output is
     read back from its parquet snapshot, so downstream stages consume
@@ -234,7 +187,9 @@ def run_kg_pipeline_staged(
     The commit is recorded in a ``_SNAPSHOT_ID`` marker next to the
     stage manifest, so a crash between the stage's manifest commit and
     the snapshot commit is healed on resume (the skipped stage's bytes
-    are committed then) instead of skipping the snapshot forever.
+    are committed then) instead of skipping the snapshot forever. A
+    resume also recommits when ``expire_snapshots`` has dropped the
+    marker's snapshot (:func:`committed_snapshot_id`).
 
     ``_fail_before`` simulates a crash (test hook): raise just before
     the named stage, AFTER earlier stages committed.
@@ -288,6 +243,26 @@ def run_kg_pipeline_staged(
     return runner
 
 
+def _marker(root: str) -> Path:
+    return Path(root) / "triples" / "_SNAPSHOT_ID"
+
+
+def committed_snapshot_id(
+    spark: SparkSession, root: str, snapshot_table: str
+) -> int | None:
+    """The id of the ``snapshot_table`` snapshot holding the triples of
+    the build at ``root``, or None when no commit is recorded or
+    ``expire_snapshots`` has since dropped that snapshot."""
+    from .snapshots import SnapshotTable
+
+    marker = _marker(root)
+    if not marker.exists():
+        return None
+    sid = int(marker.read_text())
+    tbl = SnapshotTable(spark, snapshot_table)
+    return sid if tbl._exists(tbl._snapshot_path(sid)) else None
+
+
 def _commit_triples_snapshot(
     spark, triples, root: str, snapshot_table: str, rebuilt: bool
 ) -> None:
@@ -296,13 +271,13 @@ def _commit_triples_snapshot(
     commit, so the crash cases resolve to: crash before the snapshot →
     resume recommits (marker absent); crash between snapshot and marker
     → resume commits a duplicate snapshot of identical content (benign
-    — snapshots are cheap and immutable) rather than ever LOSING one."""
-    from pathlib import Path
-
+    — snapshots are cheap and immutable) rather than ever LOSING one.
+    A resume whose recorded snapshot was expired recommits too."""
     from .snapshots import SnapshotTable
 
-    marker = Path(root) / "triples" / "_SNAPSHOT_ID"
-    if not rebuilt and marker.exists():
+    if not rebuilt and committed_snapshot_id(
+        spark, root, snapshot_table
+    ) is not None:
         return
     sid = SnapshotTable(spark, snapshot_table).overwrite(triples)
-    marker.write_text(str(sid))
+    _marker(root).write_text(str(sid))

@@ -1,7 +1,11 @@
-"""GMT gene-set reader — golden parity with the reference's own GMT
-fixtures (tests/test_utils/test_gmt.py over tests/resources/*.gmt)."""
+"""GMT gene-set reader — the reference's GMT golden checks
+(tests/test_utils/test_gmt.py), over two small files in
+tests/resources/: one MSigDB-style, one in the WikiPathways ``%``
+dialect."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 from pyobo_spark.sources.gmt_source import (
     gene_set_members,
@@ -9,8 +13,8 @@ from pyobo_spark.sources.gmt_source import (
     read_wikipathways_gmt,
 )
 
-MSIGDB = "/root/reference/tests/resources/test_msigdb.gmt"
-WP = "/root/reference/tests/resources/test_wikipathways.gmt"
+MSIGDB = str(Path(__file__).parent / "resources" / "test_msigdb.gmt")
+WP = str(Path(__file__).parent / "resources" / "test_wikipathways.gmt")
 
 
 def test_parse_standard_golden(spark):

@@ -30,8 +30,13 @@ def tables(spark, fx):
 
 
 @pytest.fixture(scope="module")
-def outputs(spark, tables):
-    return kg_build.run_kg_pipeline(spark, tables, skip_obsolete=False)
+def outputs(spark, tables, tmp_path_factory):
+    """{stage: its snapshot} of one staged build."""
+    root = tmp_path_factory.mktemp("kg_build")
+    runner = kg_build.run_kg_pipeline_staged(
+        spark, tables, str(root), skip_obsolete=False
+    )
+    return {r.name: spark.read.parquet(f"{r.path}/data") for r in runner.results}
 
 
 def _pr(pred_df, gold_df, keys):
@@ -236,6 +241,68 @@ def test_staged_pipeline_versioned_triples(spark, tables, tmp_path):
     assert tbl.read(snapshot_id=1).count() == n1
     tbl.rollback(1)
     assert tbl.current_snapshot_id() == 1
+
+
+def test_staged_pipeline_recommits_expired_snapshot(spark, tables, tmp_path):
+    """A resumed build whose recorded triples snapshot was dropped by
+    expire_snapshots commits its triples again, under a new id."""
+    from pyobo_spark.pipeline.kg_build import run_kg_pipeline_staged
+    from pyobo_spark.pipeline.snapshots import SnapshotTable
+
+    tbl_root = str(tmp_path / "triples_tbl")
+    root_a, root_b = str(tmp_path / "a"), str(tmp_path / "b")
+    run_kg_pipeline_staged(spark, tables, root_a, snapshot_table=tbl_root)
+    run_kg_pipeline_staged(
+        spark, tables, root_b, skip_obsolete=False, snapshot_table=tbl_root
+    )
+    triples_a = set(spark.read.parquet(f"{root_a}/triples/data").collect())
+    triples_b = set(spark.read.parquet(f"{root_b}/triples/data").collect())
+    assert triples_a != triples_b
+
+    tbl = SnapshotTable(spark, tbl_root)
+    tbl.expire_snapshots(keep_last=1)
+    assert [h["snapshot_id"] for h in tbl.history()] == [2]
+
+    runner = run_kg_pipeline_staged(spark, tables, root_a, snapshot_table=tbl_root)
+    assert all(r.skipped for r in runner.results)
+    assert tbl.current_snapshot_id() == 3
+    assert set(tbl.read().collect()) == triples_a
+
+
+def test_kg_pipeline_job_fresh_resume_expire(spark, tmp_path, capsys):
+    """The spark-submit job, run in-process: a fresh build commits
+    snapshot 1, the same arguments resume every stage, and a forced
+    rebuild with expiry commits snapshot 2 and drops snapshot 1."""
+    import json
+
+    from jobs import kg_pipeline_job
+    from pyobo_spark.pipeline.snapshots import SnapshotTable
+
+    tbl_root = str(tmp_path / "triples_tbl")
+    argv = ["--out", str(tmp_path / "kg"), "--n-terms", "60",
+            "--n-docs", "100", "--snapshot-table", tbl_root]
+
+    fresh = kg_pipeline_job.run(spark, argv)
+    assert [s["stage"] for s in fresh["stages"]] == [
+        "literal_mappings", "mentions", "xrefs_parsed", "components",
+        "triples",
+    ]
+    assert not any(s["skipped"] for s in fresh["stages"])
+    assert fresh["triples_snapshot_id"] == 1
+    assert json.loads(capsys.readouterr().out.splitlines()[-1]) == fresh
+
+    resumed = kg_pipeline_job.run(spark, argv)
+    assert all(s["skipped"] for s in resumed["stages"])
+    assert len(resumed["stages"]) == 5
+    assert resumed["triples_snapshot_id"] == 1
+
+    forced = kg_pipeline_job.run(
+        spark, argv + ["--force", "--expire-keep-last", "1"]
+    )
+    assert not any(s["skipped"] for s in forced["stages"])
+    assert forced["triples_snapshot_id"] == 2
+    history = SnapshotTable(spark, tbl_root).history()
+    assert [h["snapshot_id"] for h in history] == [2]
 
 
 def test_stage_manifest_contract(spark, tables, tmp_path, monkeypatch):
