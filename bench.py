@@ -48,19 +48,14 @@ HEADLINE = [
     "doc_fingerprint",
     "ann_cosine_topk",          # brute-force cosine top-k
     "ann_cosine_lsh",           # multi-table LSH ANN
-    "pricing_summary",          # scan-heavy groupBy agg
     "descendants",              # reverse BFS closure
     "hierarchy_edges",          # predicate-union edge set
-    "events_windowed",          # event-time tumbling windows
-    "events_sessionize",        # session windows (lag + running sum)
-    "salted_counts",            # two-phase skew aggregation
     "nodes_export",             # Neo4j nodes artifact (groupBy collect)
     "span_pipeline",            # interleaved spans: posexplode + matcher
     "clean_corpus",             # quality filter + dedup keep-first
     "simhash",                  # JVM xxhash64 tokens + numpy bit-majority
     "ngram_jaccard_planted",    # exact n-gram verify kernel
     "semantic_mappings",        # full SSSOM column set projection
-    "media_digest",             # multimodal Arrow decode-stub stage
     "hierarchy_nodes",          # node-set + literal-property join
     "term_embeddings",          # map-only term embedding artifact
     "embedding_nearest_terms",  # broadcast cosine top-k over terms
@@ -110,8 +105,8 @@ def main() -> None:
 
     # warm the JVM/parquet footers + page cache for EVERY input table +
     # Python workers once, so per-query numbers measure steady state,
-    # not JIT/import/first-scan cost (r03's 8.5 s pricing_summary was a
-    # verified cold-scan artifact: 0.94 s warm)
+    # not JIT/import/first-scan cost (a lineitem aggregate once
+    # measured 8.5 s cold against 0.94 s warm)
     n_docs = _warm_inputs(spark, sf_dir)
     if n_docs is None:  # fail loudly — a 0-doc denominator would print
         raise FileNotFoundError(  # a plausible-looking wrong docs/sec

@@ -13,7 +13,7 @@ Layout:
   sources/       tpch_adapter (testdata → KG tables), obo_reader (OBO parse)
   normalize/     vectorized CURIE normalization (identifier_utils semantics)
   operators/     exports, alt-upgrade joins, hierarchy closure, connected
-                 components, dedup, similarity search, text stats, multimodal
+                 components, dedup, similarity search, text stats
   grounding/     literal-mapping dictionary + broadcast Aho-Corasick matcher
   pipeline/      stage orchestration with checkpoint/resume + lineage metrics
   fixtures/      deterministic seed-42 fixture generator (FIXTURES.md)

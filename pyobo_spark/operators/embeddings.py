@@ -8,8 +8,7 @@ vectors, plus nearest-term lookup).
 
 The sentence-transformer model the reference loads is external ML and
 not available in this container, so the embedding kernel here is a
-deterministic sha256-derived stand-in (the same honest-stub pattern as
-the multimodal decoder, ``multimodal.py``): component ``i`` of a term's
+deterministic sha256-derived stand-in: component ``i`` of a term's
 vector is ``byte_i(sha256(name)) / 255`` rounded to 4 dp. Everything
 around the kernel — the (prefix, identifier, vector) artifact schema,
 JVM-side hashing (codegen'd sha2/conv, zero Python), the broadcast

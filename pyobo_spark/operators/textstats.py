@@ -1,6 +1,7 @@
-"""Text analysis operators — language-ID, quality scoring, token counting,
-document fingerprinting. All JVM-side (built-in functions) except the
-n-gram language heuristic, which is an Arrow-batched pandas pass.
+"""Text analysis operators — token counting, quality scoring, document
+fingerprinting and the Gopher repetition/quality rules. All JVM-side
+(built-in functions) except the Gopher n-gram repetition counter, which
+is an Arrow-batched pandas pass.
 """
 
 from __future__ import annotations
@@ -52,69 +53,6 @@ def document_fingerprint(documents: DataFrame, mod: int = 1 << 31) -> DataFrame:
         lambda acc, t: (acc * 31 + F.crc32(t.cast("binary"))) % F.lit(mod),
     )
     return documents.select("doc_id", fp.alias("fingerprint"))
-
-
-# character-trigram profiles for a tiny language-ID heuristic. Deliberately
-# minimal — the point is the Spark plumbing (broadcast profile, Arrow batch
-# scoring), not linguistic accuracy.
-_LANG_PROFILES: dict[str, tuple[str, ...]] = {
-    "en": ("the", "and", "ing", "ion", "ed ", " th", "er ", " wa"),
-    "es": ("de ", " la", "os ", "ión", " el", "ar ", "ció", "la "),
-    "fr": (" le", "es ", "de ", "ent", " de", "ion", "que", " la"),
-    "de": ("der", "ein", "ich", "sch", "und", " un", "die", "en "),
-    "zh": ("的", "了", "是", "在", "我", "有", "和", "人"),
-}
-
-
-PII_PATTERNS: tuple[tuple[str, str], ...] = (
-    # (pattern, replacement) — applied in order, all JVM regexp_replace
-    (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    (r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
-    (r"\b\+?\d[\d\s()-]{7,}\d\b", "<PHONE>"),
-)
-
-
-def redact_pii(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Regex PII redaction (emails, IPs, phone-like numbers) — standard
-    pre-training scrub, pure whole-stage-codegen regexp_replace chain."""
-    out = F.col(text_col)
-    for pat, rep in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, rep)
-    return documents.withColumn("text_redacted", out)
-
-
-def language_id(documents: DataFrame) -> DataFrame:
-    """(doc_id, lang_pred, lang_score) — n-gram profile overlap, Arrow
-    batched."""
-    profiles = {k: frozenset(v) for k, v in _LANG_PROFILES.items()}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            preds, scores = [], []
-            for text in pdf["text"].astype(object):
-                s = (text or "")[:500]
-                grams = {s[i : i + 3] for i in range(max(len(s) - 2, 0))}
-                best, best_score = "und", 0.0
-                for lang, prof in profiles.items():
-                    score = len(grams & prof) / len(prof)
-                    if score > best_score:
-                        best, best_score = lang, score
-                preds.append(best)
-                scores.append(round(best_score, 4))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "lang_pred": preds, "lang_score": scores}
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        run,
-        schema=T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("lang_pred", T.StringType()),
-                T.StructField("lang_score", T.DoubleType()),
-            ]
-        ),
-    )
 
 
 def gopher_repetition(

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .grounding import matcher
@@ -451,60 +451,6 @@ FROM ranked WHERE rank <= 5
 """
 
 
-def q_pricing_summary(spark, sf_dir):
-    li = tp.load(spark, sf_dir, "lineitem")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = (F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)"))
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").cast("double").alias("sum_qty"),
-            F.sum(price * disc).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-SQL_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(l_quantity) AS DOUBLE) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-                (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-            AS DOUBLE) AS revenue,
-       count(*) AS n_rows
-FROM lineitem GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_distinct_parts_per_supplier(spark, sf_dir):
-    """Exact distinct aggregation (partial+final hash agg)."""
-    li = tp.load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_suppkey").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-SQL_DISTINCT_PARTS_PER_SUPPLIER = """
-SELECT l_suppkey, count(DISTINCT l_partkey) AS n_parts, count(*) AS n_rows
-FROM lineitem GROUP BY l_suppkey
-"""
-
-
-def q_rollup_counts(spark, sf_dir):
-    """ROLLUP grouping sets over lineitem flags."""
-    li = tp.load(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-
-
-SQL_ROLLUP_COUNTS = """
-SELECT l_returnflag, l_linestatus, count(*) AS n_rows
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
 def q_relation_counters(spark, sf_dir):
     rel = tp.relations_raw(spark, sf_dir)
     return rel.groupBy("relation_prefix", "relation_id").agg(
@@ -714,59 +660,6 @@ FROM syn GROUP BY lower(text)
 """
 
 
-def q_top_revenue_parts(spark, sf_dir):
-    """Top-3 parts by revenue per brand — window top-k over a join
-    (the engine's get_best_match pattern at analytics scale)."""
-    li = tp.load(spark, sf_dir, "lineitem")
-    p = tp.load(spark, sf_dir, "part")
-    rev = (
-        li.groupBy("l_partkey")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (F.lit(1).cast("decimal(18,2)")
-                   - F.col("l_discount").cast("decimal(18,2)"))
-            ).alias("rev_dec")
-        )
-    )
-    joined = rev.join(
-        F.broadcast(p.select("p_partkey", "p_brand")),
-        rev.l_partkey == F.col("p_partkey"),
-    )
-    w = Window.partitionBy("p_brand").orderBy(
-        F.desc("rev_dec"), F.asc("l_partkey")
-    )
-    return (
-        joined.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select(
-            "p_brand",
-            F.col("l_partkey").alias("partkey"),
-            F.col("rev_dec").cast("double").alias("revenue"),
-            F.col("rnk").cast("bigint").alias("rnk"),
-        )
-    )
-
-
-SQL_TOP_REVENUE_PARTS = """
-WITH rev AS (
-  SELECT l_partkey,
-         sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-             (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-           AS rev_dec
-  FROM lineitem GROUP BY l_partkey
-),
-ranked AS (
-  SELECT p.p_brand, r.l_partkey AS partkey,
-         CAST(r.rev_dec AS DOUBLE) AS revenue,
-         row_number() OVER (PARTITION BY p.p_brand
-                            ORDER BY r.rev_dec DESC, r.l_partkey) AS rnk
-  FROM rev r JOIN part p ON r.l_partkey = p.p_partkey
-)
-SELECT p_brand, partkey, revenue, rnk FROM ranked WHERE rnk <= 3
-"""
-
-
 def q_dictionary_skip_obsolete(spark, sf_dir):
     """skip_obsolete anti-join (api/names.py:332-341): dictionary rows
     whose owning term is obsolete are removed."""
@@ -843,124 +736,6 @@ des(node) AS (
 )
 SELECT prefix, identifier, text, predicate FROM syn
 WHERE identifier IN (SELECT node FROM des)
-"""
-
-
-def q_events_windowed(spark, sf_dir):
-    from .operators import events as ev
-
-    return ev.tumbling_window_counts(tp.load(spark, sf_dir, "events"))
-
-
-SQL_EVENTS_WINDOWED = """
-SELECT date_trunc('hour', ts) AS window_start, event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM events GROUP BY date_trunc('hour', ts), event_type
-"""
-
-
-def q_events_sessionize(spark, sf_dir):
-    from .operators import events as ev
-
-    out = ev.sessionize(tp.load(spark, sf_dir, "events"), gap_minutes=30)
-    return out.select(
-        "user_id",
-        F.col("session_seq").cast("bigint").alias("session_seq"),
-        "n_events",
-        "session_start",
-        "session_end",
-    )
-
-
-SQL_EVENTS_SESSIONIZE = """
-WITH ordered AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR date_diff('microseconds', lag(ts) OVER w, ts)
-                      > 1800000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-tagged AS (
-  SELECT user_id, ts,
-         sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS session_seq
-  FROM ordered
-)
-SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-       count(*) AS n_events,
-       min(ts) AS session_start, max(ts) AS session_end
-FROM tagged GROUP BY user_id, session_seq
-"""
-
-
-def q_events_sessionize_native(spark, sf_dir):
-    """Same session semantics via Spark's native session_window operator
-    (the idiomatic streaming-compatible form); oracle shared with the
-    lag+running-sum composition, minus the session_seq bookkeeping."""
-    from .operators import events as ev
-
-    return ev.sessionize_native(
-        tp.load(spark, sf_dir, "events"), gap_minutes=30
-    )
-
-
-SQL_EVENTS_SESSIONIZE_NATIVE = """
-WITH ordered AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR date_diff('microseconds', lag(ts) OVER w, ts)
-                      > 1800000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-tagged AS (
-  SELECT user_id, ts,
-         sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS session_seq
-  FROM ordered
-)
-SELECT user_id, count(*) AS n_events,
-       min(ts) AS session_start, max(ts) AS session_end
-FROM tagged GROUP BY user_id, session_seq
-"""
-
-
-def q_events_sliding(spark, sf_dir):
-    from .operators import events as ev
-
-    return ev.sliding_window_counts(
-        tp.load(spark, sf_dir, "events"), window_minutes=60, slide_minutes=30
-    )
-
-
-# sliding 60m/30m: each event belongs to the windows starting at
-# trunc30(ts) and trunc30(ts) - 30min — expressible as a 2-way union
-SQL_EVENTS_SLIDING = """
-WITH starts AS (
-  SELECT time_bucket(INTERVAL '30 minutes', ts) AS window_start,
-         event_type FROM events
-  UNION ALL
-  SELECT time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes',
-         event_type FROM events
-)
-SELECT window_start, event_type, count(*) AS n_events
-FROM starts GROUP BY window_start, event_type
-"""
-
-
-def q_salted_counts(spark, sf_dir):
-    from .operators import events as ev
-
-    li = tp.load(spark, sf_dir, "lineitem")
-    return ev.salted_counts(li, "l_suppkey", salt_source="l_orderkey")
-
-
-SQL_SALTED_COUNTS = """
-SELECT l_suppkey, count(*) AS n_rows FROM lineitem GROUP BY l_suppkey
 """
 
 
@@ -1240,51 +1015,6 @@ FROM documents
 """
 
 
-def q_pii_scrub(spark, sf_dir):
-    """PII redaction over a corpus with deterministically planted PII
-    (every 3rd doc gets an email, every 7th an IP)."""
-    docs = _docs_spread(spark, sf_dir).select("doc_id", "text")
-    planted = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(F.col("text"), F.lit(" contact user"),
-                     F.col("doc_id").cast("string"), F.lit("@example.com")),
-        )
-        .when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(F.col("text"), F.lit(" from 10.0.0."),
-                     (F.col("doc_id") % 255).cast("string")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    out = textstats.redact_pii(planted)
-    return out.select("doc_id", "text_redacted")
-
-
-SQL_PII_SCRUB = r"""
-WITH planted AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0
-              THEN concat(text, ' contact user', CAST(doc_id AS VARCHAR),
-                          '@example.com')
-              WHEN doc_id % 7 = 0
-              THEN concat(text, ' from 10.0.0.', CAST(doc_id % 255 AS VARCHAR))
-              ELSE text END AS text
-  FROM documents
-)
-SELECT doc_id,
-  regexp_replace(
-    regexp_replace(
-      regexp_replace(text,
-        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-      '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-    '\b\+?\d[\d\s()-]{7,}\d\b', '<PHONE>', 'g') AS text_redacted
-FROM planted
-"""
-
-
 def q_sssom_with_justification(spark, sf_dir):
     """SSSOM mapping rows with mapping_justification derived from the
     predicate family (struct_utils.py:800-818: xrefs are unspecified
@@ -1508,72 +1238,15 @@ def q_ngram_jaccard(spark, sf_dir):
     return dedup.ngram_jaccard_pairs(corpus, cands.select("doc_a", "doc_b"))
 
 
-def q_language_id(spark, sf_dir):
-    return textstats.language_id(_docs_spread(spark, sf_dir))
-
-
-def _lang_profiles_sql() -> str:
-    """Materialize the language trigram profiles as a VALUES clause so
-    the DuckDB oracle replicates the exact profile-overlap scoring
-    (ties break toward the earlier profile, matching dict order)."""
-    from .operators.textstats import _LANG_PROFILES
-
-    rows = []
-    for i, (lang, grams) in enumerate(_LANG_PROFILES.items()):
-        lit = ", ".join("'" + g.replace("'", "''") + "'" for g in grams)
-        rows.append(f"('{lang}', {i}, [{lit}])")
-    return ",\n       ".join(rows)
-
-
-SQL_LANGUAGE_ID = f"""
-WITH profiles(lang, ord, grams) AS (
-  VALUES {_lang_profiles_sql()}
-),
-docs AS (
-  SELECT doc_id, substr(coalesce(text, ''), 1, 500) AS s FROM documents
-),
-doc_grams AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(length(s) - 2, 0) + 1),
-           i -> substr(s, CAST(i AS INTEGER), 3)
-         )) AS g
-  FROM docs
-),
-scored AS (
-  SELECT doc_id, lang, ord,
-         CAST(length(list_intersect(g, p.grams)) AS DOUBLE)
-           / length(p.grams) AS score
-  FROM doc_grams CROSS JOIN profiles p
-),
-best AS (
-  SELECT doc_id, lang, score,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY score DESC, ord ASC) AS rn
-  FROM scored
-)
-SELECT doc_id,
-       CASE WHEN score > 0 THEN lang ELSE 'und' END AS lang_pred,
-       round(CASE WHEN score > 0 THEN score ELSE 0.0 END, 4) AS lang_score
-FROM best WHERE rn = 1
-"""
-
-
 def q_ann_cosine_lsh(spark, sf_dir):
-    emb_raw = tp.load(spark, sf_dir, "embeddings")
-    emb = spread_small_input(emb_raw)
-    # query side from the RAW scan: the vec_id filter pushes into
-    # parquet instead of scanning+shuffling the spread corpus
-    queries = emb_raw.where(F.col("vec_id") < 8)
+    emb = tp.load(spark, sf_dir, "embeddings")
+    queries = emb.where(F.col("vec_id") < 8)
     return similarity.cosine_topk_lsh(emb, queries, k=5)
 
 
 def q_ann_cosine_ivf(spark, sf_dir):
-    emb_raw = tp.load(spark, sf_dir, "embeddings")
-    emb = spread_small_input(emb_raw)
-    # query side from the RAW scan: the vec_id filter pushes into
-    # parquet instead of scanning+shuffling the spread corpus
-    queries = emb_raw.where(F.col("vec_id") < 8)
+    emb = tp.load(spark, sf_dir, "embeddings")
+    queries = emb.where(F.col("vec_id") < 8)
     return similarity.cosine_topk_ivf(emb, queries, k=5, n_probe=4)
 
 
@@ -1625,39 +1298,6 @@ def q_span_pipeline(spark, sf_dir):
     return matcher.detect_mentions(corpus, bc)
 
 
-def q_media_features(spark, sf_dir):
-    """Multimodal plumbing demo: synthesize binary media from doc text
-    bytes, run the (stubbed) feature extractor. The feature vector is
-    comma-joined to a string (round 4dp) so downstream tabular harnesses
-    (pandas sort/hash canonicalizers choke on list cells) can handle it
-    — which also makes it fully oracle-able: Spark stores the stub
-    features as float32 while DuckDB computes byte/255 doubles, but
-    round(·, 4) absorbs the quantization (byte/255 values sit ≥4.9e-7
-    from any 4dp rounding tie vs ≤6e-8 float32 error) and both engines
-    round half-up. Null text maps to ('', 'missing') on both sides."""
-    from .operators import multimodal
-
-    docs = _docs_spread(spark, sf_dir)
-    media = docs.select(
-        F.concat(F.lit("blob://"), F.col("doc_id").cast("string")).alias("media_ref"),
-        F.when(F.col("doc_id") % 2 == 0, "image").otherwise("audio").alias("kind"),
-        F.encode("text", "utf-8").alias("content"),
-        F.lit(None).cast("string").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("int").alias("duration_ms"),
-    )
-    feats = multimodal.extract_media_features(media)
-    return feats.select(
-        "media_ref",
-        "kind",
-        F.concat_ws(
-            ",", F.transform("feature", lambda f: F.round(f, 4).cast("string"))
-        ).alias("feature_csv"),
-        "decode_status",
-    )
-
-
 def q_ngram_jaccard_planted(spark, sf_dir):
     """Exact 3-gram Jaccard over DETERMINISTIC candidate pairs (each
     doc_id % 10 == 0 vs a planted twin missing the first word) — gives
@@ -1694,181 +1334,6 @@ SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              / length(list_distinct(list_concat(a.g, b.g))), 4) AS jaccard
 FROM grams a JOIN grams b ON b.doc_id = a.doc_id + 10000000
 WHERE a.doc_id % 10 = 0 AND a.doc_id < 10000000
-"""
-
-
-def q_media_digest(spark, sf_dir):
-    """Multimodal feature extraction with an exact oracle: the stubbed
-    decoder's features are sha256-byte/255 floats, so mapping them back
-    to integer bytes (round(f*255)) is engine-comparable against
-    DuckDB's sha256 hex."""
-    from .operators import multimodal
-
-    docs = _docs_spread(spark, sf_dir)
-    media = docs.select(
-        F.concat(F.lit("blob://"), F.col("doc_id").cast("string")).alias(
-            "media_ref"
-        ),
-        F.when(F.col("doc_id") % 2 == 0, "image").otherwise("audio").alias(
-            "kind"
-        ),
-        F.encode("text", "utf-8").alias("content"),
-        F.lit(None).cast("string").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("int").alias("duration_ms"),
-    )
-    feats = multimodal.extract_media_features(media)
-    # Hex-STRING output (not array<int>): the driver's pandas
-    # canonicalizer sort_values() cannot hash list cells, so the r01-r03
-    # array form crashed its harness before comparison. Mapping each
-    # feature float back to its source byte (round(f*255)) and hex-
-    # formatting gives the same engine-comparable digest as a scalar.
-    return feats.select(
-        "media_ref",
-        "kind",
-        F.concat_ws(
-            "",
-            F.transform(
-                "feature",
-                lambda f: F.lpad(
-                    F.lower(F.hex(F.round(f * 255).cast("int"))), 2, "0"
-                ),
-            ),
-        ).alias("digest_hex"),
-        "decode_status",
-    )
-
-
-def q_video_frames(spark, sf_dir):
-    """REAL video decode through the distributed frame sampler: every
-    doc gets a synthesized 2-frame 4x4 YUV4MPEG2 clip whose frame i is
-    the constant luma (doc_id*7 + i*13) % 256 — so the sampled per-frame
-    statistics are closed-form and DuckDB can state them exactly (a
-    constant plane has mean v/255 and std 0; v/255 never lands on a
-    6-dp decimal tie, so Python round == DuckDB half-up round). The y4m
-    container is built JVM-side (binary concat + unhex), the decode is
-    the same pure-numpy kernel the pytest goldens pin."""
-    from .operators import multimodal
-
-    docs = _docs_spread(spark, sf_dir).select("doc_id")
-
-    def frame(i: int):
-        v = ((F.col("doc_id") * 7 + i * 13) % 256).cast("int")
-        return F.concat(
-            F.lit(bytearray(b"FRAME\n")),
-            F.unhex(
-                F.concat(
-                    F.repeat(F.lpad(F.lower(F.hex(v)), 2, "0"), 16),
-                    F.lit("80" * 8),  # constant-gray 4:2:0 chroma
-                )
-            ),
-        )
-
-    media = docs.select(
-        F.concat(F.lit("blob://"), F.col("doc_id").cast("string")).alias(
-            "media_ref"
-        ),
-        F.lit("video").alias("kind"),
-        F.concat(
-            F.lit(bytearray(b"YUV4MPEG2 W4 H4 F10:1 C420\n")),
-            frame(0),
-            frame(1),
-        ).alias("content"),
-        F.lit(None).cast("string").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("int").alias("duration_ms"),
-    )
-    return multimodal.sample_video_frames(media, every_ms=100).select(
-        "media_ref",
-        "frame_idx",
-        "frame_ts_ms",
-        "mean_luma",
-        "std_luma",
-        "decode_status",
-    )
-
-
-SQL_VIDEO_FRAMES = """
-SELECT concat('blob://', CAST(doc_id AS VARCHAR)) AS media_ref,
-       CAST(t.i AS INTEGER) AS frame_idx,
-       CAST(t.i * 100 AS INTEGER) AS frame_ts_ms,
-       round(CAST((doc_id * 7 + t.i * 13) % 256 AS DOUBLE) / 255.0, 6)
-         AS mean_luma,
-       CAST(0.0 AS DOUBLE) AS std_luma,
-       'ok' AS decode_status
-FROM documents, (SELECT unnest([0, 1]) AS i) t
-"""
-
-
-def q_media_metadata(spark, sf_dir):
-    """Metadata backfill through the real decoder: even doc_ids carry a
-    decodable 1x1 PPM payload (probe fills mime + real dimensions), odd
-    doc_ids a JPEG-magic payload (sniff labels the mime, decode is
-    unsupported → dims stay null). Exercises probe_media_metadata's
-    full distributed path against constants DuckDB can state."""
-    from .operators import multimodal
-
-    docs = _docs_spread(spark, sf_dir)
-    ppm = F.concat(
-        F.lit(bytearray(b"P6\n1 1\n255\n")), F.encode(F.lit("abc"), "utf-8")
-    )
-    jpg = F.concat(
-        F.lit(bytearray(b"\xff\xd8\xff")), F.encode("text", "utf-8")
-    )
-    media = docs.select(
-        F.concat(F.lit("blob://"), F.col("doc_id").cast("string")).alias(
-            "media_ref"
-        ),
-        F.lit("image").alias("kind"),
-        F.when(F.col("doc_id") % 2 == 0, ppm).otherwise(jpg).alias("content"),
-        F.lit(None).cast("string").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("int").alias("duration_ms"),
-    )
-    return multimodal.probe_media_metadata(media).select(
-        "media_ref", "kind", "mime", "width", "height", "duration_ms"
-    )
-
-
-SQL_MEDIA_METADATA = """
-SELECT concat('blob://', CAST(doc_id AS VARCHAR)) AS media_ref,
-       'image' AS kind,
-       CASE WHEN doc_id % 2 = 0 THEN 'image/x-portable-pixmap'
-            WHEN text IS NULL THEN NULL          -- concat(magic, NULL)
-            ELSE 'image/jpeg' END AS mime,       -- gives NULL content
-       CASE WHEN doc_id % 2 = 0 THEN 1 END AS width,
-       CASE WHEN doc_id % 2 = 0 THEN 1 END AS height,
-       CAST(NULL AS INTEGER) AS duration_ms
-FROM documents
-"""
-
-
-SQL_MEDIA_FEATURES = """
-SELECT concat('blob://', CAST(doc_id AS VARCHAR)) AS media_ref,
-       CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-       CASE WHEN text IS NULL THEN '' ELSE array_to_string(
-         list_transform(range(0, 8),
-           i -> CAST(round(
-                  CAST(('0x' || substr(sha256(text), 1 + 2*i, 2)) AS INTEGER)
-                  / 255.0, 4) AS VARCHAR)),
-         ',') END AS feature_csv,
-       CASE WHEN text IS NULL THEN 'missing' ELSE 'ok_fake' END
-         AS decode_status
-FROM documents
-"""
-
-
-SQL_MEDIA_DIGEST = """
-SELECT concat('blob://', CAST(doc_id AS VARCHAR)) AS media_ref,
-       CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-       CASE WHEN text IS NULL THEN ''
-            ELSE substr(sha256(text), 1, 16) END AS digest_hex,
-       CASE WHEN text IS NULL THEN 'missing' ELSE 'ok_fake' END
-         AS decode_status
-FROM documents
 """
 
 
@@ -2421,29 +1886,20 @@ FROM parents
 # ---------------------------------------------------------------------------
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # ---- driver window (the correctness harness checks the FIRST 50
-    # entries): after the r01-r03 rotation achieved cumulative coverage
-    # (every oracle-backed query driver-green at least once except
-    # media_digest, fixed this round), round 4 composes the window as
-    # the engine's best 50 — ALL 50 entries are oracle-backed. Rows-only
-    # hash-family queries (minhash_near_duplicates, simhash,
-    # ngram_jaccard, ann_cosine_lsh, ann_cosine_ivf) live below the
-    # window; each kernel is driver-checked via its planted-twin oracle
-    # IN the window, and tests/parity.py still exercises ALL registry
-    # entries (rows-only included) each session. r05 rotation: the media
-    # pair (never driver-verified) replaces names/definitions (3× green).
-    "events_sessionize": q_events_sessionize,
+    # The correctness harness checks the first 50 entries against their
+    # DuckDB oracles, so all of them are oracle-backed
+    # (tests/test_driver_window.py pins the list). The rows-only
+    # hash-family queries come last: their outputs are engine-specific
+    # (xxhash64), and each kernel has a planted-twin oracle above.
+    # tests/parity.py runs every entry.
     "sssom_with_justification": q_sssom_with_justification,
     "semantic_mappings": q_semantic_mappings,
     "hierarchy_nodes": q_hierarchy_nodes,
     "ngram_jaccard_planted": q_ngram_jaccard_planted,
-    "media_digest": q_media_digest,
-    "events_sessionize_native": q_events_sessionize_native,
     "typedefs": q_typedefs,
     "references": q_references,
     "alts_grouped": q_alts_grouped,
     "provenance_routing": q_provenance_routing,
-    "language_id": q_language_id,
     "span_pipeline": q_span_pipeline,
     "minhash_planted": q_minhash_planted,
     "simhash_planted": q_simhash_planted,
@@ -2452,29 +1908,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_lsh_planted": q_ann_lsh_planted,
     "ann_ivf_planted": q_ann_ivf_planted,
     "embedding_near_dup_planted": q_embedding_near_dup_planted,
-    # r06 (late): near_dup_clusters_planted — NEW fuzzy-dedup clustering
-    # composition (pairs → CC → canonical keep), never driver-verified —
-    # replaces pricing_summary (driver-green r02 AND r05), displaced to
-    # the overflow; manifest updated in the same commit.
     "near_dup_clusters_planted": q_near_dup_clusters_planted,
-    # oracle-backed round-2 greens promoted into the window (replacing
-    # the rows-only hash-family entries, now in the overflow)
     "relation_counters": q_relation_counters,
-    # r06 rotation: video_frames (new y4m decode kernel, never
-    # driver-verified) replaces distinct_parts_per_supplier (driver-
-    # green r02 AND r05) — manifest updated in the same commit
-    # (tests/test_driver_window.py pins the composition).
-    "video_frames": q_video_frames,
-    # r05 rotation (VERDICT r04 #1): media_features / media_metadata are
-    # the only oracle-backed queries never driver-verified — promote them
-    # into the window, displacing names/definitions (driver-green r02,
-    # r03 AND r04) into the overflow.
-    "media_features": q_media_features,
-    "media_metadata": q_media_metadata,
-    # r06 (late) rotation: the NEW Gopher corpus-filter pair (top/dup
-    # n-gram repetition fractions; quality-rule verdict), never
-    # driver-verified, replaces obsoletes/species (driver-green in ALL
-    # FIVE prior rounds) — manifest updated in the same commit.
     "gopher_repetition": q_gopher_repetition,
     "gopher_quality": q_gopher_quality,
     "relations_typedef_filtered": q_relations_typedef_filtered,
@@ -2495,29 +1930,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_cosine_topk": q_ann_cosine_topk,
     "hierarchy_edges": q_hierarchy_edges,
     "clean_corpus": q_clean_corpus,
-    "pii_scrub": q_pii_scrub,
     "normalize_curies": q_normalize_curies,
     "obonet_links": q_obonet_links,
     "skos_triples": q_skos_triples,
-    "salted_counts": q_salted_counts,
-    # ---- overflow (below the 50-entry driver window; the oracle-backed
-    # entries here were all driver-green in r01-r03 and every entry —
-    # rows-only included — is still checked by tests/parity.py each
-    # session). The rows-only hash-family queries live here: their
-    # organic outputs are engine-specific (xxhash64), and each kernel
-    # has a driver-green planted-twin oracle in the window above.
-    # names/definitions moved here in r05 (driver-green r02/r03/r04) to
-    # make room for the media pair above; distinct_parts_per_supplier
-    # moved here in r06 (driver-green r02/r05) for video_frames.
-    "distinct_parts_per_supplier": q_distinct_parts_per_supplier,
-    "pricing_summary": q_pricing_summary,
     "obsoletes": q_obsoletes,
     "species": q_species,
-    "minhash_near_duplicates": q_minhash_near_duplicates,
-    "simhash": q_simhash,
     "names": q_names,
     "definitions": q_definitions,
-    "rollup_counts": q_rollup_counts,
     "descendants": q_descendants,
     "has_ancestor": q_has_ancestor,
     "subhierarchy": q_subhierarchy,
@@ -2529,15 +1948,14 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "relation_multimapping": q_relation_multimapping,
     "nodes_export": q_nodes_export,
     "grounder_index": q_grounder_index,
-    "top_revenue_parts": q_top_revenue_parts,
     "dictionary_skip_obsolete": q_dictionary_skip_obsolete,
     "species_remap": q_species_remap,
     "literal_mappings_subset": q_literal_mappings_subset,
     "embedding_near_dup": q_embedding_near_dup,
     "mention_canonicalized": q_mention_canonicalized,
     "token_counts_regex": q_token_counts_regex,
-    "events_windowed": q_events_windowed,
-    "events_sliding": q_events_sliding,
+    "minhash_near_duplicates": q_minhash_near_duplicates,
+    "simhash": q_simhash,
     "ngram_jaccard": q_ngram_jaccard,
     "ann_cosine_lsh": q_ann_cosine_lsh,
     "ann_cosine_ivf": q_ann_cosine_ivf,
@@ -2566,11 +1984,8 @@ ORACLES: dict[str, str] = {
     "token_stats": SQL_TOKEN_STATS,
     "doc_fingerprint": SQL_DOC_FINGERPRINT,
     "ann_cosine_topk": SQL_ANN_COSINE_TOPK,
-    "pricing_summary": SQL_PRICING_SUMMARY,
     "near_dup_clusters_planted": SQL_NEAR_DUP_CLUSTERS_PLANTED,
     "relation_counters": SQL_RELATION_COUNTERS,
-    "distinct_parts_per_supplier": SQL_DISTINCT_PARTS_PER_SUPPLIER,
-    "rollup_counts": SQL_ROLLUP_COUNTS,
     "descendants": SQL_DESCENDANTS,
     "has_ancestor": SQL_HAS_ANCESTOR,
     "subhierarchy": SQL_SUBHIERARCHY,
@@ -2582,31 +1997,19 @@ ORACLES: dict[str, str] = {
     "relation_multimapping": SQL_RELATION_MULTIMAPPING,
     "nodes_export": SQL_NODES_EXPORT,
     "grounder_index": SQL_GROUNDER_INDEX,
-    "top_revenue_parts": SQL_TOP_REVENUE_PARTS,
     "dictionary_skip_obsolete": SQL_DICTIONARY_SKIP_OBSOLETE,
     "species_remap": SQL_SPECIES_REMAP,
     "literal_mappings_subset": SQL_LITERAL_MAPPINGS_SUBSET,
-    "events_windowed": SQL_EVENTS_WINDOWED,
-    "events_sessionize": SQL_EVENTS_SESSIONIZE,
-    "events_sliding": SQL_EVENTS_SLIDING,
-    "salted_counts": SQL_SALTED_COUNTS,
     "normalize_curies": SQL_NORMALIZE_CURIES,
     "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
     "hierarchy_edges": SQL_HIERARCHY_EDGES,
     "clean_corpus": SQL_CLEAN_CORPUS,
     "mention_canonicalized": SQL_MENTION_CANONICALIZED,
     "token_counts_regex": SQL_TOKEN_COUNTS_REGEX,
-    "pii_scrub": SQL_PII_SCRUB,
     "sssom_with_justification": SQL_SSSOM_WITH_JUSTIFICATION,
     "semantic_mappings": SQL_SEMANTIC_MAPPINGS,
     "hierarchy_nodes": SQL_HIERARCHY_NODES,
-    "language_id": SQL_LANGUAGE_ID,
     "ngram_jaccard_planted": SQL_NGRAM_JACCARD_PLANTED,
-    "media_digest": SQL_MEDIA_DIGEST,
-    "media_features": SQL_MEDIA_FEATURES,
-    "media_metadata": SQL_MEDIA_METADATA,
-    "video_frames": SQL_VIDEO_FRAMES,
-    "events_sessionize_native": SQL_EVENTS_SESSIONIZE_NATIVE,
     "typedefs": SQL_TYPEDEFS,
     "references": SQL_REFERENCES,
     "alts_grouped": SQL_ALTS_GROUPED,

@@ -187,8 +187,8 @@ def stream_near_dedup(
     stamped with batch_id — parquet append is at-least-once, so a crash
     between the appends and the checkpoint commit replays the batch;
     duplicate INDEX rows are harmless (candidates are de-duplicated per
-    pair) and output replays are diagnosable via the stamp (same
-    contract as streaming/media.py).
+    pair) and output replays are diagnosable via the stamp (a consumer
+    drops replayed rows by keying on it).
 
     Scale: per batch the work is batch-sized signatures + one bucket
     join against the index (band bucket is the shuffle key; the index

@@ -56,82 +56,3 @@ def stream_mention_counts(
         .start()
     )
     q.awaitTermination()
-
-
-def stream_windowed_event_counts(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    checkpoint_dir: str,
-    output_dir: str,
-    window_minutes: int = 60,
-    watermark_minutes: int = 120,
-) -> None:
-    """Event-time windowed aggregation with a watermark: late events
-    beyond the watermark are dropped; windows emit (append mode) once the
-    watermark passes their end. availableNow → processes the backlog and
-    terminates; the checkpoint carries watermark + window state across
-    runs, so a later invocation continues with the same late-data
-    semantics (the engine's stateful-streaming path)."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    agg = (
-        stream.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy(F.window("ts", f"{window_minutes} minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stream_session_counts(
-    spark,
-    in_dir: str,
-    schema,
-    checkpoint: str,
-    out_dir: str,
-    gap_minutes: int = 30,
-    watermark: str = "1 hour",
-) -> None:
-    """Streaming gap-based sessionization: readStream → withWatermark →
-    groupBy(user_id, session_window) → append sink, availableNow.
-
-    The same session_window expression as the batch operator
-    (operators/events.py::sessionize_native) — watermark bounds state:
-    sessions whose end is older than the watermark are finalized and
-    emitted; state never grows past the active-session frontier. On a
-    real cluster this is the resumable form of session analytics over
-    the event stream."""
-    from pyspark.sql import functions as F
-
-    events = spark.readStream.schema(schema).parquet(in_dir)
-    sessions = (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("window_start"),
-            "n_events",
-        )
-    )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -48,8 +48,8 @@ def canon_rows(cols, rows):
 
 
 def _dtype_kinds(spark_df, rel) -> tuple[bool, str]:
-    """Driver hash is dtype-sensitive (the r02 events_sessionize HUGEINT
-    lesson): a DuckDB hugeint/decimal column hashes differently from a
+    """Driver hash is dtype-sensitive (a DuckDB sum over bigints is a
+    HUGEINT): a DuckDB hugeint/decimal column hashes differently from a
     Spark bigint even when every value is equal.  Compare the pandas
     dtypes both results materialize to and flag any kind mismatch."""
     import pandas as pd  # noqa: F401

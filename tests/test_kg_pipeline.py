@@ -198,9 +198,9 @@ def test_staged_pipeline_restart_resumes_and_matches(spark, tables, tmp_path):
         "components": False,
         "triples": False,
     }
-    # the parse stage's manifest carries the parse-status counters —
-    # the observability the one-shot pipeline returns as parse_lineage —
-    # and stage 4 consumed ok rows FROM this snapshot (single parse)
+    # the xrefs_parsed manifest carries the parse_status counter (rows
+    # per parse outcome), and stage 4 consumed ok rows FROM this
+    # snapshot (single parse)
     import json as _json
     meta = _json.loads(
         (Path(crash_root) / "xrefs_parsed" / "_MANIFEST.json")

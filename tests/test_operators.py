@@ -1,13 +1,13 @@
 """Unit tests for operators not covered by the oracle-parity suite:
 dedup planted-pair detection, LSH recall vs brute force, hierarchy
-helpers, pipeline checkpoint/resume, multimodal plumbing."""
+helpers, pipeline checkpoint/resume."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from pyobo_spark.operators import dedup, hierarchy, multimodal, similarity
+from pyobo_spark.operators import dedup, hierarchy, similarity
 
 
 def test_minhash_finds_planted_near_dups(spark):
@@ -279,324 +279,6 @@ def test_pipeline_checkpoint_resume(spark, tmp_path):
     assert calls["n"] == 2
 
 
-def test_media_feature_plumbing(spark):
-    media = spark.createDataFrame(
-        [("m1", "image", bytearray(b"xyz"), None, None, None, None),
-         ("m2", "audio", None, None, None, None, None)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    rows = {r["media_ref"]: r for r in
-            multimodal.extract_media_features(media, dim=4).collect()}
-    assert rows["m1"]["decode_status"] == "ok_fake"
-    assert len(rows["m1"]["feature"]) == 4
-    assert rows["m2"]["decode_status"] == "missing"
-    # deterministic: same bytes → same feature
-    again = {r["media_ref"]: r for r in
-             multimodal.extract_media_features(media, dim=4).collect()}
-    assert rows["m1"]["feature"] == again["m1"]["feature"]
-
-
-def _ppm_bytes(w=4, h=2):
-    # P6 with a comment line; pixels are (r, g, b) = (row, col, 7)
-    header = f"P6\n# fixture\n{w} {h}\n255\n".encode()
-    raster = bytes(
-        b for y in range(h) for x in range(w) for b in (y, x, 7)
-    )
-    return header + raster
-
-
-def _wav_bytes(rate=8000, n=800):
-    # 16-bit mono PCM square wave, alternating +/-16384 every 8 samples
-    import struct
-
-    samples = b"".join(
-        struct.pack("<h", 16384 if (i // 8) % 2 == 0 else -16384)
-        for i in range(n)
-    )
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(samples)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", len(samples)) + samples
-    )
-
-
-def test_media_real_decode_kernels():
-    import numpy as np
-
-    img, meta = multimodal._real_decode("image", _ppm_bytes())
-    assert img.shape == (2, 4, 3) and meta == {"width": 4, "height": 2}
-    assert img[1, 2].tolist() == [1, 2, 7]
-    audio, ameta = multimodal._real_decode("audio", _wav_bytes())
-    assert ameta["sample_rate"] == 8000 and ameta["duration_ms"] == 100
-    assert np.isclose(np.abs(audio).max(), 0.5)
-
-
-def test_media_real_decode_distributed(spark):
-    media = spark.createDataFrame(
-        [
-            ("img", "image", bytearray(_ppm_bytes()), None, None, None, None),
-            ("wav", "audio", bytearray(_wav_bytes()), None, None, None, None),
-            ("jpg", "image", bytearray(b"\xff\xd8\xff\xe0junk"), None, None,
-             None, None),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    rows = {
-        r["media_ref"]: r
-        for r in multimodal.extract_media_features(
-            media, dim=8, fake_decode=False
-        ).collect()
-    }
-    assert rows["img"]["decode_status"] == "ok"
-    # channel means of the (row, col, 7) raster: r=mean(0,1)=0.5/255
-    feats = rows["img"]["feature"]
-    assert len(feats) == 8
-    assert abs(feats[0] - 0.5 / 255) < 1e-4  # mean red
-    assert abs(feats[2] - 7 / 255) < 1e-4  # mean blue (constant 7)
-    assert abs(feats[6] - 2.0) < 1e-6  # aspect w/h = 4/2
-    assert rows["wav"]["decode_status"] == "ok"
-    assert abs(rows["wav"]["feature"][0] - 0.5) < 1e-3  # RMS of square wave
-    assert abs(rows["wav"]["feature"][3] - 0.1) < 1e-6  # duration sec
-    # unsupported container degrades per-row, doesn't kill the task
-    assert rows["jpg"]["decode_status"] == "unsupported"
-    assert rows["jpg"]["feature"] is None
-
-
-def test_media_corrupt_payloads_degrade(spark):
-    """Payloads with a valid magic but a broken body (bad header int,
-    truncated raster, short fmt chunk) must degrade to
-    decode_status='corrupt' per row — never abort the task."""
-    import struct
-
-    trunc_ppm = _ppm_bytes()[:-10]  # raster shorter than w*h*3
-    bad_header = b"P6\ngarbage here\n255\nxxx"
-    short_fmt = (
-        b"RIFF" + struct.pack("<I", 20) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 4) + b"\x01\x00\x01\x00"
-    )
-    media = spark.createDataFrame(
-        [
-            ("t", "image", bytearray(trunc_ppm), None, None, None, None),
-            ("b", "image", bytearray(bad_header), None, None, None, None),
-            ("w", "audio", bytearray(short_fmt), None, None, None, None),
-            ("ok", "image", bytearray(_ppm_bytes()), None, None, None, None),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    rows = {
-        r["media_ref"]: r
-        for r in multimodal.extract_media_features(
-            media, dim=8, fake_decode=False
-        ).collect()
-    }
-    assert rows["t"]["decode_status"] == "corrupt"
-    assert rows["b"]["decode_status"] == "corrupt"
-    assert rows["w"]["decode_status"] == "corrupt"
-    assert rows["ok"]["decode_status"] == "ok"  # good rows unaffected
-
-
-def test_probe_media_metadata(spark):
-    """Metadata backfill: magic-sniffed mime for every container,
-    real dims/duration for decodable ones, existing values preserved,
-    corrupt/unknown payloads degrade to null metadata."""
-    media = spark.createDataFrame(
-        [
-            ("ppm", "image", bytearray(_ppm_bytes()), None, None, None, None),
-            ("wav", "audio", bytearray(_wav_bytes()), None, None, None, None),
-            ("jpg", "image", bytearray(b"\xff\xd8\xff\xe0junk"), None,
-             None, None, None),
-            ("pre", "image", bytearray(_ppm_bytes()), "image/custom",
-             99, 98, None),
-            ("half", "image", bytearray(_ppm_bytes()), "image/custom",
-             99, None, None),
-            ("unk", "image", bytearray(b"????"), None, None, None, None),
-            ("nil", "image", None, None, None, None, None),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    rows = {
-        r["media_ref"]: r
-        for r in multimodal.probe_media_metadata(media).collect()
-    }
-    assert rows["ppm"]["mime"] == "image/x-portable-pixmap"
-    assert (rows["ppm"]["width"], rows["ppm"]["height"]) == (4, 2)
-    assert rows["wav"]["mime"] == "audio/wav"
-    assert rows["wav"]["duration_ms"] == 100
-    # compressed containers get labeled even though decode is oos
-    assert rows["jpg"]["mime"] == "image/jpeg"
-    assert rows["jpg"]["width"] is None
-    # pre-set metadata survives untouched
-    assert rows["pre"]["mime"] == "image/custom"
-    assert (rows["pre"]["width"], rows["pre"]["height"]) == (99, 98)
-    # PARTIAL metadata: null fields are filled, set fields preserved
-    assert rows["half"]["width"] == 99          # pre-set, kept
-    assert rows["half"]["height"] == 2          # filled from the header
-    assert rows["unk"]["mime"] == "application/octet-stream"
-    assert rows["nil"]["mime"] is None
-
-
-def test_frame_sample_plan(spark):
-    media = spark.createDataFrame(
-        [("v1", "video", None, None, None, None, 3500)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    ts = [r["frame_ts_ms"] for r in
-          multimodal.frame_sample_plan(media, every_ms=1000).collect()]
-    assert ts == [0, 1000, 2000, 3000]
-
-
-def _y4m_bytes(w=4, h=4, n_frames=20, fps=10, luma_step=10):
-    # YUV4MPEG2 C420: frame i's Y plane is the constant i*luma_step,
-    # chroma planes constant 128 (gray)
-    header = f"YUV4MPEG2 W{w} H{h} F{fps}:1 Ip A1:1 C420\n".encode()
-    chroma = bytes([128]) * (2 * (w // 2) * (h // 2))
-    frames = b"".join(
-        b"FRAME\n" + bytes([i * luma_step]) * (w * h) + chroma
-        for i in range(n_frames)
-    )
-    return header + frames
-
-
-def test_video_y4m_decode_kernel():
-    frames, meta = multimodal._real_decode("video", _y4m_bytes())
-    assert meta == {
-        "width": 4, "height": 4, "duration_ms": 2000,
-        "fps": 10.0, "n_frames": 20,
-    }
-    # 20 frames sampled at step ceil(20/8)=3 → indices 0,3,...,18
-    assert frames.shape == (7, 4, 4)
-    assert frames[1].min() == frames[1].max() == 30  # frame 3 luma
-    # colorspace we can't decode → unsupported, truncated frame → error
-    import pytest as _pytest
-
-    with _pytest.raises(multimodal.UnsupportedMediaError):
-        multimodal._real_decode(
-            "video", b"YUV4MPEG2 W4 H4 F10:1 C422\nFRAME\n" + b"\0" * 32
-        )
-    # 10-bit 4:2:0 is recognized-but-undecodable → 'unsupported', not
-    # 'corrupt': a prefix match on C420 would size frames as 8-bit and
-    # land mid-raster
-    with _pytest.raises(multimodal.UnsupportedMediaError):
-        multimodal._real_decode(
-            "video", b"YUV4MPEG2 W4 H4 F10:1 C420p10\nFRAME\n" + b"\0" * 48
-        )
-    with _pytest.raises(ValueError):
-        multimodal._real_decode("video", _y4m_bytes()[:-5])
-
-
-def test_video_y4m_probe_and_features(spark):
-    """All four media kinds now decode on the fake_decode=False path;
-    video metadata probes header-only and features carry frame count,
-    fps, duration, luma stats, and a motion proxy."""
-    media = spark.createDataFrame(
-        [
-            ("v", "video", bytearray(_y4m_bytes()), None, None, None, None),
-            ("mp4", "video", bytearray(b"\x00\x00\x00 ftypmp42"), None,
-             None, None, None),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    meta = {
-        r["media_ref"]: r
-        for r in multimodal.probe_media_metadata(media).collect()
-    }
-    assert meta["v"]["mime"] == "video/x-yuv4mpeg"
-    assert (meta["v"]["width"], meta["v"]["height"]) == (4, 4)
-    assert meta["v"]["duration_ms"] == 2000
-    assert meta["mp4"]["width"] is None  # compressed container: oos
-    rows = {
-        r["media_ref"]: r
-        for r in multimodal.extract_media_features(
-            media, dim=8, fake_decode=False
-        ).collect()
-    }
-    assert rows["v"]["decode_status"] == "ok"
-    f = rows["v"]["feature"]
-    assert f[0] == 20.0 and f[1] == 10.0 and abs(f[2] - 2.0) < 1e-9
-    assert abs(f[3] - 90 / 255) < 1e-4   # mean luma over sampled frames
-    assert abs(f[5] - 30 / 255) < 1e-4   # motion: 30-luma step between
-    assert abs(f[6] - 1.0) < 1e-9        # aspect  # sampled frames
-    assert rows["mp4"]["decode_status"] == "unsupported"
-
-
-def test_sample_video_frames(spark):
-    media = spark.createDataFrame(
-        [
-            ("v", "video", bytearray(_y4m_bytes()), None, None, None, None),
-            ("bad", "video", bytearray(b"\x00\x00\x00 ftypmp42"), None,
-             None, None, None),
-            ("nil", "video", None, None, None, None, None),
-            ("img", "image", bytearray(_ppm_bytes()), None, None, None,
-             None),  # non-video rows are ignored, not errored
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    out = multimodal.sample_video_frames(media, every_ms=500).collect()
-    by_ref: dict[str, list] = {}
-    for r in out:
-        by_ref.setdefault(r["media_ref"], []).append(r)
-    assert "img" not in by_ref
-    v = sorted(by_ref["v"], key=lambda r: r["frame_idx"])
-    # 100 ms/frame, ticks every 500 ms over 2000 ms → frames 0,5,10,15
-    assert [r["frame_idx"] for r in v] == [0, 5, 10, 15]
-    assert [r["frame_ts_ms"] for r in v] == [0, 500, 1000, 1500]
-    assert abs(v[1]["mean_luma"] - 50 / 255) < 1e-6
-    assert all(r["decode_status"] == "ok" for r in v)
-    assert by_ref["bad"][0]["decode_status"] == "unsupported"
-    assert by_ref["nil"][0]["decode_status"] == "missing"
-
-
-def test_media_table_decode(spark):
-    """kind='table' CSV payloads decode to cell grids with dims in the
-    image-compatible width/height terms; features carry rows/cols/
-    numeric stats; a CSV starting with 'P6' is still a table."""
-    csv_blob = b"P6,name,score\n1,a,0.5\n2,b,1.5\n"
-    cells, meta = multimodal._real_decode("table", csv_blob)
-    assert meta == {"width": 3, "height": 3}
-    assert cells[1][1] == "a"
-    media = spark.createDataFrame(
-        [
-            ("t1", "table", bytearray(csv_blob), None, None, None, None),
-            ("t2", "table", bytearray(b"\xff\xfebad"), None, None, None,
-             None),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    rows = {
-        r["media_ref"]: r
-        for r in multimodal.extract_media_features(
-            media, dim=4, fake_decode=False
-        ).collect()
-    }
-    assert rows["t1"]["decode_status"] == "ok"
-    f = rows["t1"]["feature"]
-    assert (f[0], f[1]) == (3.0, 3.0)          # rows, cols
-    assert abs(f[2] - 4 / 9) < 1e-6            # numeric-cell ratio
-    assert abs(f[3] - (1 + 2 + 0.5 + 1.5) / 4) < 1e-6
-    assert rows["t2"]["decode_status"] == "unsupported"  # not UTF-8
-    meta_rows = {
-        r["media_ref"]: r
-        for r in multimodal.probe_media_metadata(media).collect()
-    }
-    assert (meta_rows["t1"]["width"], meta_rows["t1"]["height"]) == (3, 3)
-    assert meta_rows["t1"]["mime"] == "text/csv"  # labeled on decode
-    # 'nan'/'inf' cells are excluded from the numeric feature stats
-    bad = spark.createDataFrame(
-        [("nan", "table", bytearray(b"NaN,1\ninf,3\n"), None, None,
-          None, None)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    frow = multimodal.extract_media_features(
-        bad, dim=4, fake_decode=False
-    ).collect()[0]
-    assert frow["decode_status"] == "ok"
-    import math
-
-    assert all(math.isfinite(x) for x in frow["feature"])
-    assert abs(frow["feature"][3] - 2.0) < 1e-6  # mean of finite {1,3}
-
-
 def test_cc_convergence_rounds_on_power_law_graph(spark):
     """VERDICT r04 #6 — empirical O(log n) convergence evidence at 10×
     the in-window CC fixture (sf0.01 cc_edges = 1,525; here 16,048):
@@ -666,24 +348,6 @@ def test_cc_convergence_rounds_on_power_law_graph(spark):
     assert sorted((r["curie"], r["component"]) for r in out_b) == sorted(
         (r["curie"], r["component"]) for r in out
     )
-
-
-def test_y4m_missing_frame_rate_is_unsupported():
-    """YUV4MPEG2 has no default frame rate: a clip without the F
-    parameter must degrade to 'unsupported' (r06 review) — every
-    time-derived output would be silently wrong under an invented
-    default."""
-    import pytest as _pytest
-
-    from pyobo_spark.operators import multimodal as M
-
-    no_f = b"YUV4MPEG2 W4 H4 C420\n" + b"FRAME\n" + bytes(24)
-    with _pytest.raises(M.UnsupportedMediaError):
-        M._parse_y4m_header(no_f)
-    # with F present the same payload parses fine
-    with_f = b"YUV4MPEG2 W4 H4 F10:1 C420\n"
-    w, h, num, den, pos, fsz = M._parse_y4m_header(with_f + b"FRAME\n" + bytes(24))
-    assert (w, h, num, den, fsz) == (4, 4, 10, 1, 24)
 
 
 def test_bench10x_fingerprint_invalidates_stale_corpus(tmp_path):

@@ -180,22 +180,6 @@ def test_serialization_sinks_are_map_only(spark):
         assert "Exchange" not in plan, f"{name} plan shuffles:\n{plan}"
 
 
-def test_video_frame_sampler_is_map_only(spark):
-    """sample_video_frames promises a scan→mapInPandas plan with ZERO
-    Exchange — per-clip frame sampling must never shuffle the blob
-    column (at 100 TB the media bytes are the dominant traffic; any
-    Exchange here would move them across the cluster)."""
-    from pyobo_spark.operators import multimodal
-
-    media = spark.createDataFrame(
-        [("m", "video", bytearray(b"YUV4MPEG2 W2 H2 F10:1 C420\n"),
-          None, None, None, None)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    plan = _formatted_plan(multimodal.sample_video_frames(media))
-    assert "Exchange" not in plan, plan
-
-
 def test_gopher_filters_are_map_only(spark):
     """The Gopher corpus filters are strictly per-document — both must
     plan as scan→(kernel|project) with ZERO Exchange. The repetition
@@ -245,22 +229,6 @@ def test_embedding_model_path_is_map_only(spark):
         E.term_embeddings(terms, dim=4, model=lambda ts: np.zeros((len(ts), 4)))
     )
     assert "Exchange" not in plan
-
-
-def test_media_decode_paths_are_map_only(spark):
-    """Both decode paths (fake digest / real numpy decoder) stay
-    shuffle-free."""
-    from pyobo_spark.operators import multimodal
-
-    media = spark.createDataFrame(
-        [("m", "image", bytearray(b"x"), None, None, None, None)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    for fake in (True, False):
-        plan = _formatted_plan(
-            multimodal.extract_media_features(media, dim=4, fake_decode=fake)
-        )
-        assert "Exchange" not in plan
 
 
 def test_special_stream_union_has_no_exchange(spark, tmp_path):
@@ -552,10 +520,9 @@ def test_resumed_stage_reads_back_without_a_job(spark, tmp_path):
 def test_ann_cosine_lsh_shuffle_budget(spark, sf_dir):
     """Multi-table hyperplane LSH must shuffle on exactly two HASH
     exchanges — candidate dedup (distinct) and the per-query top-k
-    window (skew-safe via WindowGroupLimit's map-side rank pruning) —
-    plus at most one round-robin exchange from the corpus-side
-    small-input spread (r7). Every join stays broadcast (query and
-    signature sides are small by construction): a third hash Exchange
+    window (skew-safe via WindowGroupLimit's map-side rank pruning).
+    Every join stays broadcast (query and signature sides are small by
+    construction): a third hash Exchange
     means a candidate join stopped broadcasting; a CartesianProduct
     means the bucket join degenerated to all-pairs. The top-k window
     must also be preceded by WindowGroupLimit so only k rows per query
@@ -569,6 +536,15 @@ def test_ann_cosine_lsh_shuffle_budget(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.parametrize("name", ["ann_cosine_lsh", "ann_cosine_ivf"])
+def test_ann_queries_have_no_round_robin_exchange(spark, sf_dir, name):
+    """The ANN queries read the embeddings as scanned: a round-robin
+    spread of the corpus adds an exchange that the bucket-candidate
+    kernels do not repay."""
+    plan = _formatted_plan(Q.QUERIES[name](spark, sf_dir))
+    assert "RoundRobinPartitioning" not in plan, plan
 
 
 def test_ofn_reader_families_are_map_only(spark, tmp_path):

@@ -90,108 +90,6 @@ def test_obo_escape_roundtrip(s):
     assert out == expected
 
 
-# ---- round-4 minimal media decoder (multimodal._real_decode) ----
-
-@given(
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=24),
-    st.randoms(use_true_random=False),
-)
-@settings(max_examples=60, deadline=None)
-def test_ppm_roundtrip_property(w, h, rnd):
-    """Any synthesized P6 raster decodes back to the exact pixels and
-    dimensions — whitespace/comment header variants included."""
-    import numpy as np
-
-    from pyobo_spark.operators import multimodal
-
-    raster = bytes(rnd.randrange(256) for _ in range(w * h * 3))
-    sep = rnd.choice([b"\n", b" ", b"\t"])
-    comment = b"# c\n" if rnd.random() < 0.5 else b""
-    blob = b"P6" + sep + comment + str(w).encode() + b" " + str(h).encode() \
-        + b"\n255\n" + raster
-    img, meta = multimodal._real_decode("image", blob)
-    assert meta == {"width": w, "height": h}
-    assert img.shape == (h, w, 3)
-    assert bytes(img.reshape(-1)) == raster
-    assert img.dtype == np.uint8
-
-
-@given(
-    st.integers(min_value=1, max_value=500),
-    st.sampled_from([8000, 16000, 44100]),
-    st.sampled_from([1, 2]),
-    st.randoms(use_true_random=False),
-)
-@settings(max_examples=60, deadline=None)
-def test_wav_roundtrip_property(n, rate, n_ch, rnd):
-    """Any 16-bit PCM WAV decodes to n samples (channel-mixed), values
-    in [-1, 1], duration consistent with the sample rate."""
-    import struct
-
-    from pyobo_spark.operators import multimodal
-
-    frames = b"".join(
-        struct.pack("<h", rnd.randrange(-32768, 32768))
-        for _ in range(n * n_ch)
-    )
-    fmt = struct.pack("<HHIIHH", 1, n_ch, rate, rate * 2 * n_ch, 2 * n_ch, 16)
-    blob = (
-        b"RIFF" + struct.pack("<I", 36 + len(frames)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", len(frames)) + frames
-    )
-    audio, meta = multimodal._real_decode("audio", blob)
-    assert len(audio) == n
-    assert abs(audio).max() <= 1.0
-    assert meta["sample_rate"] == rate
-    assert meta["duration_ms"] == int(n * 1000 / rate)
-
-
-@given(st.binary(min_size=0, max_size=64))
-@settings(max_examples=300, deadline=None)
-def test_decoder_never_hangs_or_corrupts_status(blob):
-    """Arbitrary bytes either decode (when they happen to form a valid
-    container) or raise a catchable exception — never loop forever or
-    return malformed output. Mirrors the per-row degrade contract."""
-    from pyobo_spark.operators import multimodal
-
-    try:
-        out, meta = multimodal._real_decode("image", blob)
-    except Exception:
-        pass  # any exception is caught per-row by extract_media_features
-    else:
-        # a successful decode must be WELL-FORMED, not just truthy:
-        # positive dims and a raster consistent with the header
-        if out.ndim == 3:  # image
-            h, w, c = out.shape
-            assert h > 0 and w > 0 and c == 3
-            assert meta["width"] == w and meta["height"] == h
-        else:  # audio
-            assert out.ndim == 1 and meta["sample_rate"] > 0
-
-
-@given(st.binary(min_size=0, max_size=96))
-@settings(max_examples=300, deadline=None)
-def test_y4m_header_parse_total(suffix):
-    """The y4m header parser is total over arbitrary bytes after the
-    magic: it returns consistent positive dimensions or raises exactly
-    ValueError (corrupt) / UnsupportedMediaError (legal-but-unhandled) —
-    never UnicodeDecodeError or anything the per-row degrade paths would
-    misclassify."""
-    from pyobo_spark.operators import multimodal as M
-
-    content = b"YUV4MPEG2 " + suffix
-    try:
-        w, h, num, den, pos, fsz = M._parse_y4m_header(content)
-    except M.UnsupportedMediaError:
-        return
-    except ValueError:
-        return
-    assert w > 0 and h > 0 and num > 0 and den > 0
-    assert fsz > 0 and 0 <= pos <= len(content)
-
-
 @given(
     st.lists(
         st.text(

@@ -93,97 +93,6 @@ def test_stateful_cumulative_totals(spark, tmp_path):
     assert best["total_mentions"] == 4  # resumed from 3, +1
 
 
-def test_streaming_windowed_watermark(spark, tmp_path):
-    """Windowed agg with watermark: closed windows emit in append mode;
-    a late event behind the watermark is dropped on the next run."""
-    import datetime as dt
-
-    from pyobo_spark.streaming.mentions import stream_windowed_event_counts
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-    in_dir = str(tmp_path / "ein")
-    out_dir = str(tmp_path / "eout")
-    ckpt = str(tmp_path / "eckpt")
-
-    t0 = dt.datetime(2024, 1, 1, 0, 30)
-    rows = [
-        (t0, "click"),
-        (t0 + dt.timedelta(minutes=5), "click"),
-        # an event far ahead advances the watermark past hour-0's window
-        (t0 + dt.timedelta(hours=10), "view"),
-    ]
-    spark.createDataFrame(rows, schema).write.mode("append").parquet(in_dir)
-    stream_windowed_event_counts(spark, in_dir, schema, ckpt, out_dir)
-
-    got = {
-        (str(r["window_start"]), r["event_type"]): r["n_events"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got.get(("2024-01-01 00:00:00", "click")) == 2  # window closed
-    assert ("2024-01-01 10:00:00", "view") not in got  # still open
-
-    # late event behind the watermark → dropped on the incremental run
-    spark.createDataFrame([(t0, "click")], schema).write.mode("append").parquet(
-        in_dir
-    )
-    stream_windowed_event_counts(spark, in_dir, schema, ckpt, out_dir)
-    after = {
-        (str(r["window_start"]), r["event_type"]): r["n_events"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert after.get(("2024-01-01 00:00:00", "click")) == 2  # unchanged
-
-
-def test_streaming_session_windows(spark, tmp_path):
-    """session_window under readStream + watermark (availableNow): gap
-    merging matches the batch operator; late state is bounded by the
-    watermark."""
-    import datetime as dt
-
-    from pyobo_spark.streaming.mentions import stream_session_counts
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            # watermarks require TIMESTAMP (LTZ) event time; the test
-            # session pins UTC so values are deterministic
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def t(minutes):
-        return base + dt.timedelta(minutes=minutes)
-
-    rows = [
-        (1, t(0)), (1, t(10)), (1, t(20)),   # one session (gaps 10m)
-        (1, t(120)), (1, t(125)),            # second session
-        (2, t(0)),                           # single-event session
-        # watermark advancer: append mode only emits sessions FINALIZED
-        # by the watermark (max event time - 1h); this event pushes the
-        # watermark past every session above, and its own in-flight
-        # session is correctly withheld
-        (99, t(600)),
-    ]
-    in_dir = str(tmp_path / "in")
-    spark.createDataFrame(rows, schema).write.mode("append").parquet(in_dir)
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stream_session_counts(spark, in_dir, schema, ckpt, out_dir)
-
-    got = {
-        (r["user_id"], r["window_start"], r["n_events"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == {(1, t(0), 3), (1, t(120), 2), (2, t(0), 1)}
-    # the advancer's own session is still open → not emitted
-    assert not any(u == 99 for u, _, _ in got)
-
-
 def test_streaming_exact_dedup_catchup(spark, tmp_path):
     """Incremental exact dedup against the materialized sink: re-posted
     content never re-enters, across separate availableNow runs."""
@@ -226,49 +135,6 @@ def test_streaming_exact_dedup_watermarked(spark, tmp_path):
     texts = [r["text"] for r in out.collect()]
     assert sorted(set(texts)) == ["other text", "same text"]
     assert len(texts) == 2
-
-
-def test_streaming_media_features_resume(spark, tmp_path):
-    """Streaming media stage (availableNow): features + sniffed
-    metadata per asset; checkpoint resume processes only new files."""
-    from pyobo_spark.operators import multimodal
-    from pyobo_spark.streaming.media import stream_media_features
-    from tests.test_operators import _ppm_bytes, _wav_bytes
-
-    in_dir = str(tmp_path / "media_in")
-    out_dir = str(tmp_path / "media_out")
-    ckpt = str(tmp_path / "media_ckpt")
-
-    spark.createDataFrame(
-        [("ppm1", "image", bytearray(_ppm_bytes()), None, None, None, None)],
-        multimodal.MEDIA_SCHEMA,
-    ).write.mode("append").parquet(in_dir)
-    stream_media_features(
-        spark, in_dir, ckpt, out_dir, dim=4, fake_decode=False
-    )
-    first = {r["media_ref"]: r for r in spark.read.parquet(out_dir).collect()}
-    assert first["ppm1"]["decode_status"] == "ok"
-    assert first["ppm1"]["mime"] == "image/x-portable-pixmap"
-    assert (first["ppm1"]["width"], first["ppm1"]["height"]) == (4, 2)
-    assert len(first["ppm1"]["feature"]) == 4
-
-    # new asset arrives; resume processes ONLY it
-    spark.createDataFrame(
-        [("wav1", "audio", bytearray(_wav_bytes()), None, None, None, None)],
-        multimodal.MEDIA_SCHEMA,
-    ).write.mode("append").parquet(in_dir)
-    stream_media_features(
-        spark, in_dir, ckpt, out_dir, dim=4, fake_decode=False
-    )
-    out = spark.read.parquet(out_dir)
-    rows = {r["media_ref"]: r for r in out.collect()}
-    assert set(rows) == {"ppm1", "wav1"}
-    assert rows["wav1"]["mime"] == "audio/wav"
-    assert rows["wav1"]["duration_ms"] == 100
-    # ppm1 appears exactly once → no reprocessing on resume
-    assert out.where("media_ref = 'ppm1'").count() == 1
-    # rows are batch-stamped for at-least-once replay dedup
-    assert rows["ppm1"]["batch_id"] != rows["wav1"]["batch_id"]
 
 
 def test_streaming_near_dedup_incremental(spark, tmp_path):

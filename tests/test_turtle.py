@@ -1,12 +1,16 @@
-"""Turtle-subset reader — golden-tested against the reference's own
-SKOS fixture (tests/test_struct/test_skos/test.ttl)."""
+"""Turtle-subset reader — golden-tested against a small SKOS
+vocabulary in tests/resources/hcrt_skos.ttl: two concepts, an object
+list of 26 top concepts, en/de/cs labels, escaped quotes and a
+prefixed-name datatype."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 from pyobo_spark.sources.ntriples import SKOS, skos_to_tables
 from pyobo_spark.sources.turtle import parse_turtle, read_turtle
 
-TTL = "/root/reference/tests/test_struct/test_skos/test.ttl"
+TTL = str(Path(__file__).parent / "resources" / "hcrt_skos.ttl")
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 BASE = "https://w3id.org/kim/hcrt/"
 
