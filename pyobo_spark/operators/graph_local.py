@@ -1,7 +1,9 @@
-"""Driver-side kernels for bounded graphs — one implementation shared by
-the rooted hierarchy sweep (:func:`hierarchy.reachable`, and the
-catalog's per-prefix hierarchy index in ``api.py``) and connected
-components (:func:`components.connected_components`).
+"""Kernels for bounded graphs — one implementation shared by the rooted
+hierarchy sweep (:func:`hierarchy.reachable`, and the catalog's
+per-prefix hierarchy index in ``api.py``), the all-pairs closure
+(:func:`hierarchy.ancestors` / ``descendants``, swept on the executors
+from a broadcast of the encoded graph) and connected components
+(:func:`components.connected_components`).
 
 Each collects a bounded table once, as Arrow (a capped collect that is
 also its size gate, :func:`collect_bounded`), and solves it here: endpoint
@@ -75,6 +77,15 @@ def csr(n_nodes: int, src: np.ndarray, dst: np.ndarray):
     return indptr, nbrs
 
 
+def gather(indptr: np.ndarray, nbrs: np.ndarray, frontier: np.ndarray):
+    """The adjacency slices of the ``frontier`` node ids, concatenated in
+    frontier order, and each slice's length: one vectorized step."""
+    starts = indptr[frontier]
+    cnt = indptr[frontier + 1] - starts
+    idx = np.repeat(starts - np.cumsum(cnt) + cnt, cnt)
+    return nbrs[idx + np.arange(len(idx))], cnt
+
+
 class Digraph:
     """The (src, dst) edge table ``tbl`` encoded once (:func:`encode`)
     with a CSR adjacency in each direction, so any number of rooted
@@ -110,14 +121,10 @@ class Digraph:
             reached = []
             frontier = np.array([] if rid is None else [rid], dtype=np.int64)
             for _ in range(levels):
-                starts = indptr[frontier]
-                cnt = indptr[frontier + 1] - starts
-                total = int(cnt.sum())
-                if not total:
+                nxt = gather(indptr, nbrs, frontier)[0]
+                if not len(nxt):
                     break
-                # concatenated adjacency slices of every frontier node
-                gather = np.repeat(starts - np.cumsum(cnt) + cnt, cnt)
-                nxt = np.unique(nbrs[gather + np.arange(total)])
+                nxt = np.unique(nxt)
                 nxt = nxt[~seen[nxt]]
                 if not len(nxt):
                     break
@@ -128,6 +135,34 @@ class Digraph:
             seen[hit] = False  # reset for the next root
             out.append(set(values(self.names.take(pa.array(hit)))))
         return out
+
+
+def closure(
+    indptr: np.ndarray, nbrs: np.ndarray, sources: np.ndarray, levels: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Multi-source level BFS over the CSR ``(indptr, nbrs)``: every
+    ``(source, node)`` pair with ``node`` reached from ``source`` within
+    ``levels`` levels, as two int64 arrays. The same semantics as
+    :meth:`Digraph.sweep` from each source, in one sweep for all of
+    them: the seen-set is a sorted int64 array of ``source * n + node``
+    keys, probed with ``searchsorted``, and the new keys are merged in
+    at the probed positions, so each level is a handful of vectorized
+    steps over the whole frontier of every source."""
+    n = len(indptr) - 1
+    src = node = np.asarray(sources, dtype=np.int64)
+    seen = np.empty(0, dtype=np.int64)
+    for _ in range(levels):
+        nxt, cnt = gather(indptr, nbrs, node)
+        keys = np.unique(np.repeat(src, cnt) * n + nxt)
+        pos = np.searchsorted(seen, keys)
+        old = pos < len(seen)
+        old[old] = seen[pos[old]] == keys[old]
+        keys = keys[~old]
+        if not len(keys):
+            break
+        seen = np.insert(seen, pos[~old], keys)  # a linear merge
+        src, node = np.divmod(keys, n)
+    return np.divmod(seen, n)
 
 
 def min_labels(n_nodes: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:

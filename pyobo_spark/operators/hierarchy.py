@@ -19,9 +19,11 @@ question are asked of it, and each has its own operator:
   encoded graph (:class:`graph_local.Digraph`) per prefix and sweeps it
   again on every lookup, with the same semantics.
 - **All-pairs** — the full closure, (identifier, ancestor) for every
-  node: :func:`ancestors` / :func:`descendants`. Bounded graphs take a
-  broadcast map-side closure (_ancestors_broadcast); larger ones an
-  iterative frontier self-join (BFS). Each BFS iteration
+  node: :func:`ancestors` / :func:`descendants`. Bounded graphs take
+  the same capped collect and encoding, then broadcast the encoded
+  graph and run a multi-source sweep (:func:`graph_local.closure`) per
+  batch of source ids on the executors (_closure_local); larger ones
+  an iterative frontier self-join (BFS). Each BFS iteration
   localCheckpoints to cut lineage (otherwise the plan doubles per hop
   and Catalyst analysis time blows up). Edge tables are re-used across
   iterations, so on a cluster you'd persist the
@@ -33,11 +35,13 @@ question are asked of it, and each has its own operator:
 Every path has the same semantics: a per-node level BFS with a
 seen-set, at most ``max_iter + 1`` levels deep. Duplicate edges and
 self-loops are absorbed; a node is its own ancestor only when a cycle
-leads back to it; a node with no outgoing edge has none.
+leads back to it; a node with no outgoing edge has none; an edge with
+a NULL endpoint is ignored.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -134,11 +138,12 @@ def curie_edges(parents: DataFrame, prefix: str | None = None) -> DataFrame:
 #: BOUNDED artifacts that do not scale with the document corpus (GO ~5e5
 #: edges; NCBITaxon, the largest OBO ontology, ~2.6e6): at 100 TB the
 #: corpus grows, the ontology does not — the same reasoning as the
-#: grounding dictionary's documented collect bound (dictionary.py). The
-#: CSR adjacency for 3e6 edges broadcasts at ~50 MB pickled / ~300 MB
-#: resident per Python worker; above the bound ancestors() falls back to
-#: the distributed frontier BFS unchanged. reachable() uses the same
-#: bound as its driver-side collect gate.
+#: grounding dictionary's documented collect bound (dictionary.py).
+#: Both ancestors() and reachable() gate on one capped collect of this
+#: many edges. Each Python worker of a bounded ancestors() receives the
+#: node names (an Arrow string array) and one CSR direction: 86 MB
+#: pickled for 3e6 edges over 2.6M 15-character CURIEs. Above the
+#: bound both fall back to the distributed frontier BFS.
 BROADCAST_CLOSURE_MAX_EDGES = 3_000_000
 
 
@@ -148,99 +153,33 @@ def _broadcast_bound() -> int:
     )
 
 
-def _ancestors_broadcast(
-    edges: DataFrame, max_iter: int
-) -> DataFrame:
-    """Map-side transitive closure: ship the (bounded, see
-    BROADCAST_CLOSURE_MAX_EDGES) edge set to every worker as a CSR
-    adjacency over integer node ids and compute each node's ancestor
-    set locally — a constant number of jobs, vs O(depth) shuffles of
-    the GROWING closure for the frontier BFS (guide §1.2: fix the
-    distributed algorithm first; only the closure output itself must be
-    materialized, so the theoretical plan is one pass over the nodes).
-
-    Strings never cross the Python driver boundary (measured: a
-    string-keyed variant spent ~25 s at 10x in driver collect /
-    np.unique / pickle-broadcast of 2M node strings): node ids are JVM
-    surrogate ids (monotonically_increasing_id pinned by an eager
-    localCheckpoint — the expression is plan-position dependent and
-    must never be recomputed), the driver sees only int64 edge pairs,
-    the Python broadcast is a numeric CSR, and id→string translation
-    is a JVM broadcast hash join at both ends.
-
-    Exact same result set as the frontier BFS: per-node level-BFS with
-    a seen-set (cycles terminate, a node reached around a cycle is its
-    own ancestor), capped at max_iter + 1 levels — the frontier form's
-    closure after max_iter join rounds likewise holds min-distances up
-    to max_iter + 1."""
-    import numpy as np
-    import pandas as pd
-
-    spark = edges.sparkSession
-    nodes = (
-        edges.select(F.col("child").alias("node"))
-        .unionByName(edges.select(F.col("parent").alias("node")))
-        .distinct()
-        .withColumn("gid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
-    cn = nodes.select(F.col("node").alias("_cn"), F.col("gid").alias("cgid"))
-    pn = nodes.select(F.col("node").alias("_pn"), F.col("gid").alias("pgid"))
-    e_idx = (
-        edges.join(F.broadcast(cn), edges.child == cn._cn)
-        .join(F.broadcast(pn), edges.parent == pn._pn)
-        .select("cgid", "pgid")
-    )
-    pdf = e_idx.toPandas()  # bounded ints: caller checked the edge count
-    cg = pdf["cgid"].to_numpy(dtype=np.int64)
-    pg = pdf["pgid"].to_numpy(dtype=np.int64)
-    uniq = np.unique(np.concatenate([cg, pg]))  # sorted gids → dense ids
-    c_idx = np.searchsorted(uniq, cg)
-    p_idx = np.searchsorted(uniq, pg).astype(np.int32)
-    order = np.argsort(c_idx, kind="stable")
-    nbrs = p_idx[order]
-    counts = np.bincount(c_idx[order], minlength=len(uniq))
-    indptr = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
-    bc = spark.sparkContext.broadcast((uniq, indptr, nbrs))
+def _closure_local(spark, tbl, max_iter: int) -> DataFrame:
+    """The all-pairs closure of the collected (child, parent) Arrow
+    table ``tbl`` on the executors: the graph is encoded once on the
+    driver (graph_local), and the node names (an Arrow string array)
+    and the child → parent CSR are broadcast. The output is not bounded
+    by the edge bound, so it is computed where it is consumed: a
+    ``range`` over the node ids, each Arrow batch of source ids swept
+    at once by graph_local.closure and decoded back to names."""
+    names, u, v = graph_local.encode(tbl)
+    adj = graph_local.csr(len(names), u, v)
+    bc = spark.sparkContext.broadcast((names, adj))
     levels = max_iter + 1
 
     def run(batches):
-        gids, iptr, nb = bc.value
+        names, (indptr, nbrs) = bc.value
         for b in batches:
-            dense = np.searchsorted(gids, b["gid"].to_numpy(dtype=np.int64))
-            out_id: list = []
-            out_anc: list = []
-            for node, i0 in zip(b["node"].tolist(), dense.tolist()):
-                if iptr[i0] == iptr[i0 + 1]:
-                    continue  # parent-only node: no outgoing edges
-                seen: set[int] = set()
-                frontier = [i0]
-                for _ in range(levels):
-                    nxt: list[int] = []
-                    for u in frontier:
-                        for v in nb[iptr[u]:iptr[u + 1]].tolist():
-                            if v not in seen:
-                                seen.add(v)
-                                nxt.append(v)
-                    if not nxt:
-                        break
-                    frontier = nxt
-                out_id.extend([node] * len(seen))
-                out_anc.extend(gids[list(seen)].tolist())
-            yield pd.DataFrame(
-                {
-                    "identifier": pd.Series(out_id, dtype=object),
-                    "_anc_gid": pd.Series(out_anc, dtype="int64"),
-                }
+            src, dst = graph_local.closure(
+                indptr, nbrs, b.column(0).to_numpy(), levels
+            )
+            yield pa.RecordBatch.from_arrays(
+                [names.take(src), names.take(dst)],
+                names=["identifier", "ancestor"],
             )
 
-    closure_idx = nodes.mapInPandas(
-        run, schema="identifier string, _anc_gid long"
+    return spark.range(len(names)).mapInArrow(
+        run, "identifier string, ancestor string"
     )
-    an = nodes.select(F.col("node").alias("ancestor"), F.col("gid"))
-    return closure_idx.join(
-        F.broadcast(an), closure_idx._anc_gid == an.gid
-    ).select("identifier", "ancestor")
 
 
 def ancestors(
@@ -249,11 +188,11 @@ def ancestors(
     broadcast_edge_bound: int | None = None,
 ) -> DataFrame:
     """Full transitive closure upward: (identifier, ancestor) for every
-    node with ≥1 edge. Broadcast map-side closure for bounded ontology
-    graphs (the default production case — see _ancestors_broadcast);
-    distributed frontier BFS over (child, parent) edges beyond the
-    bound (``broadcast_edge_bound``, default
-    BROADCAST_CLOSURE_MAX_EDGES; pass 0 to force the BFS).
+    node with ≥1 edge. Graphs whose raw edge count fits
+    ``broadcast_edge_bound`` (default BROADCAST_CLOSURE_MAX_EDGES; pass
+    0 to force the BFS) are collected once, as the size gate and the
+    input, and swept on the executors (_closure_local); larger ones run
+    the distributed frontier BFS over (child, parent) edges.
 
     Semantics match nx.descendants on the reference's child→parent graph
     (struct.py:1473-1476): the node itself is NOT included.
@@ -264,17 +203,14 @@ def ancestors(
         if broadcast_edge_bound is None
         else broadcast_edge_bound
     )
-    if bound > 0 and edges.count() <= bound:
-        # broadcast path works on the RAW edge rows: the kernel's
-        # seen-set absorbs duplicate edges, so the up-front distinct —
-        # a full shuffle of the string pairs — is pure overhead here
-        # (the count above is a scan-only job; the raw count
-        # over-estimates the distinct edge count, which only makes the
-        # bound more conservative)
+    tbl = graph_local.collect_bounded(edges, bound)
+    if tbl is not None:
         LAST_BFS_STATS.clear()
         LAST_BFS_STATS["mode"] = "broadcast"
-        return _ancestors_broadcast(edges, max_iter)
-    edges = edges.distinct()
+        return _closure_local(edges.sparkSession, tbl, max_iter)
+    # an edge with a NULL endpoint joins nothing; drop it before the
+    # distinct so the BFS, like the bounded path, ignores it
+    edges = edges.dropna().distinct()
     edges.persist()
     edges.count()  # materialize once; reused every iteration
     hop = edges.select(
@@ -377,8 +313,8 @@ def reachable(
         g = graph_local.Digraph(tbl)
         hits = g.sweep(g.node_ids(roots), max_iter + 1, reverse=down)
         return dict(zip(roots, hits))
-    # over the bound: the capped collect already proved it, so skip the
-    # closure's own count and go straight to the distributed BFS
+    # over the bound: the capped collect already proved it, so go
+    # straight to the distributed BFS instead of collecting again
     closure, col = (
         (descendants, "descendant") if down else (ancestors, "ancestor")
     )

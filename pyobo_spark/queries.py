@@ -1254,8 +1254,8 @@ def q_span_pipeline(spark, sf_dir):
     """The north-rule interleaved-spans path at benchmark scale: derive a
     spans corpus from the flat documents table (3 text spans per doc,
     media spans interleaved every other doc), posexplode → map-only
-    best-per-site matcher → mentions. Rows-only (span construction is
-    engine-internal)."""
+    best-per-site matcher → mentions. Oracle-backed: SQL_SPAN_PIPELINE
+    builds the same spans and matches them in DuckDB."""
     docs = _docs_spread(spark, sf_dir)
     third = F.expr("length(text) DIV 3")
     spans = F.when(
@@ -1485,116 +1485,6 @@ UNION ALL
 SELECT doc_id + 10000000 AS doc_id, doc_id AS cluster, FALSE AS keep FROM base
 UNION ALL
 SELECT doc_id + 20000000 AS doc_id, doc_id AS cluster, FALSE AS keep FROM base
-"""
-
-
-def q_gopher_repetition(spark, sf_dir):
-    """Gopher repetition-rule metrics (Rae et al. 2021 §A1.1) — top
-    2/3/4-gram and duplicated-5-gram character fractions per document
-    (operators/textstats.py::gopher_repetition). The >=5-token guard
-    keeps every n-level non-degenerate so the oracle's inner-join gram
-    pipeline produces exactly the same document set."""
-    docs = (
-        _docs_spread(spark, sf_dir)
-        .where(
-            F.col("text").isNotNull()
-            & (F.col("doc_id") % 5 == 0)
-            & (F.size(F.split(F.col("text"), " ")) >= 5)
-        )
-    )
-    return textstats.gopher_repetition(docs)
-
-
-SQL_GOPHER_REPETITION = """
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS t, length(text) AS n_chars
-  FROM documents
-  WHERE text IS NOT NULL AND doc_id % 5 = 0
-    AND len(string_split(text, ' ')) >= 5
-), grams AS (
-  SELECT b.doc_id, b.n_chars, ns.n,
-         unnest(list_transform(
-             range(1, len(t) - ns.n + 2),
-             i -> array_to_string(
-                 t[CAST(i AS INTEGER):CAST(i + ns.n - 1 AS INTEGER)], ' ')
-         )) AS gram
-  FROM base b, (SELECT unnest([2, 3, 4, 5]) AS n) ns
-), counts AS (
-  SELECT doc_id, n_chars, n, gram, count(*) AS cnt
-  FROM grams GROUP BY doc_id, n_chars, n, gram
-), per_n0 AS (
-  -- most frequent gram; ties on count break toward the longer gram
-  -- (struct max compares lexicographically: cnt first, then len)
-  SELECT doc_id, n_chars, n,
-         max({'cnt': cnt, 'len': length(gram)}) AS top_pair,
-         coalesce(sum(CASE WHEN cnt >= 2 THEN cnt * length(gram) END), 0)
-             AS dup_chars
-  FROM counts GROUP BY doc_id, n_chars, n
-), per_n AS (
-  SELECT doc_id, n_chars, n,
-         top_pair.cnt * top_pair.len AS top_chars, dup_chars
-  FROM per_n0
-)
-SELECT doc_id,
-  round(CAST(max(CASE WHEN n = 2 THEN top_chars END) AS DOUBLE) / n_chars, 4)
-      AS top_2gram_char_frac,
-  round(CAST(max(CASE WHEN n = 3 THEN top_chars END) AS DOUBLE) / n_chars, 4)
-      AS top_3gram_char_frac,
-  round(CAST(max(CASE WHEN n = 4 THEN top_chars END) AS DOUBLE) / n_chars, 4)
-      AS top_4gram_char_frac,
-  round(CAST(max(CASE WHEN n = 5 THEN dup_chars END) AS DOUBLE) / n_chars, 4)
-      AS dup_5gram_char_frac
-FROM per_n GROUP BY doc_id, n_chars
-"""
-
-
-def q_gopher_quality(spark, sf_dir):
-    """Gopher quality-rule metrics + combined verdict (Rae et al. 2021
-    §A1.1; operators/textstats.py::gopher_quality) — word-count band,
-    mean-word-length band, symbol ratio, alphabetic-word fraction,
-    stopword hits. Counts cast to bigint for the DuckDB compare."""
-    docs = _docs_spread(spark, sf_dir)
-    out = textstats.gopher_quality(docs)
-    return out.select(
-        "doc_id",
-        F.col("n_words").cast("bigint").alias("n_words"),
-        "mean_word_len",
-        "symbol_ratio",
-        "alpha_word_frac",
-        F.col("n_stopwords").cast("bigint").alias("n_stopwords"),
-        "passes",
-    )
-
-
-SQL_GOPHER_QUALITY = f"""
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS w, length(text) AS n_chars
-  FROM documents WHERE text IS NOT NULL AND length(text) > 0
-), m AS (
-  SELECT doc_id,
-    CAST(len(w) AS BIGINT) AS n_words,
-    n_chars,
-    CAST(len(list_filter(w, t -> t = '#' OR t = '...')) AS BIGINT)
-        AS n_symbol,
-    CAST(len(list_filter(w, t -> regexp_matches(t, '[a-zA-Z]'))) AS BIGINT)
-        AS n_alpha,
-    CAST(len(list_intersect(w, [{_STOP_SQL}]))
-         AS BIGINT) AS n_stopwords
-  FROM base
-)
-SELECT doc_id, n_words,
-  round((n_chars - (n_words - 1)) / CAST(n_words AS DOUBLE), 4)
-      AS mean_word_len,
-  round(n_symbol / CAST(n_words AS DOUBLE), 4) AS symbol_ratio,
-  round(n_alpha / CAST(n_words AS DOUBLE), 4) AS alpha_word_frac,
-  n_stopwords,
-  (n_words >= 50 AND n_words <= 100000
-   AND (n_chars - (n_words - 1)) / CAST(n_words AS DOUBLE) >= 3
-   AND (n_chars - (n_words - 1)) / CAST(n_words AS DOUBLE) <= 10
-   AND n_symbol / CAST(n_words AS DOUBLE) <= 0.1
-   AND n_alpha / CAST(n_words AS DOUBLE) >= 0.8
-   AND n_stopwords >= 2) AS passes
-FROM m
 """
 
 
@@ -1910,8 +1800,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embedding_near_dup_planted": q_embedding_near_dup_planted,
     "near_dup_clusters_planted": q_near_dup_clusters_planted,
     "relation_counters": q_relation_counters,
-    "gopher_repetition": q_gopher_repetition,
-    "gopher_quality": q_gopher_quality,
     "relations_typedef_filtered": q_relations_typedef_filtered,
     "filtered_relations_part_of": q_filtered_relations_part_of,
     "alt_upgrade": q_alt_upgrade,
@@ -1966,8 +1854,6 @@ ORACLES: dict[str, str] = {
     "definitions": SQL_DEFINITIONS,
     "obsoletes": SQL_OBSOLETES,
     "species": SQL_SPECIES,
-    "gopher_repetition": SQL_GOPHER_REPETITION,
-    "gopher_quality": SQL_GOPHER_QUALITY,
     "relations_typedef_filtered": SQL_RELATIONS_TYPEDEF_FILTERED,
     "filtered_relations_part_of": SQL_FILTERED_RELATIONS_PART_OF,
     "alt_upgrade": SQL_ALT_UPGRADE,

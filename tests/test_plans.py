@@ -180,25 +180,6 @@ def test_serialization_sinks_are_map_only(spark):
         assert "Exchange" not in plan, f"{name} plan shuffles:\n{plan}"
 
 
-def test_gopher_filters_are_map_only(spark):
-    """The Gopher corpus filters are strictly per-document — both must
-    plan as scan→(kernel|project) with ZERO Exchange. The repetition
-    metrics in particular have a tempting explode→groupBy formulation
-    that shuffles the corpus's gram multiset twice for a result that
-    never needed cross-partition data."""
-    from pyobo_spark.operators import textstats
-
-    docs = spark.createDataFrame(
-        [(1, "a b a b"), (2, "c d e f g h")], "doc_id long, text string"
-    )
-    for name, df in [
-        ("gopher_repetition", textstats.gopher_repetition(docs)),
-        ("gopher_quality", textstats.gopher_quality(docs)),
-    ]:
-        plan = _formatted_plan(df)
-        assert "Exchange" not in plan, f"{name} plan shuffles:\n{plan}"
-
-
 def test_nearest_terms_broadcasts_query_side(spark):
     """The query CURIE pickup and the top-k kernel both broadcast the
     tiny side; the only shuffle is the per-query window."""

@@ -4,7 +4,7 @@ covers every executor batch path."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pyobo_spark.grounding.dictionary import (
@@ -164,6 +164,44 @@ def test_rooted_reachable_equals_filtered_closure(spark, extra, roots, max_iter)
             assert got == want, (down, bound)
 
 
+@given(
+    extra=st.lists(
+        st.tuples(st.sampled_from(_NODES + [None]),
+                  st.sampled_from(_NODES + [None])),
+        max_size=30,
+    ),
+    max_iter=st.sampled_from([0, 1, 2, 50]),
+)
+@example(extra=[("n4", "n5"), ("n5", None), (None, "n4")], max_iter=50)
+@settings(max_examples=6, deadline=None)
+def test_bounded_closure_equals_frontier_bfs(spark, extra, max_iter):
+    """The bounded all-pairs closure (capped collect + executor sweep)
+    returns exactly the frontier BFS's rows, upward and downward, at
+    every level cap, with no duplicate rows — on graphs with cycles,
+    self-loops, duplicate edges, a hub, a disconnected part and edges
+    with a NULL endpoint, which both paths ignore."""
+    from pyobo_spark.operators import hierarchy as H
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 8
+    edges = spark.createDataFrame(
+        spark.sparkContext.parallelize(_FIXED_EDGES + extra, 3),
+        "child string, parent string",
+    )
+    assert edges.rdd.getNumPartitions() >= 2
+    for closure in (H.ancestors, H.descendants):
+        got = [tuple(r) for r in closure(edges, max_iter=max_iter).collect()]
+        assert H.LAST_BFS_STATS["mode"] == "broadcast"
+        want = {
+            tuple(r)
+            for r in closure(
+                edges, max_iter=max_iter, broadcast_edge_bound=0
+            ).collect()
+        }
+        assert H.LAST_BFS_STATS["mode"] == "bfs"
+        assert len(got) == len(set(got)), closure
+        assert set(got) == want, closure
+
+
 #: Mixed-case and non-ASCII curies: Spark orders strings by their UTF-8
 #: bytes, so "B" < "a", "Z" < "é", and U+FF21 < U+1D538 (UTF-16 order
 #: would put the surrogate pair first).
@@ -261,6 +299,55 @@ def test_min_labels_equal_union_find(n, data):
     v = np.array([b for _, b in edges], dtype=np.int64)
     got = graph_local.min_labels(n, u, v)
     assert got.tolist() == _min_labels_reference(n, edges)
+
+
+def _closure_reference(n, edges, sources, levels):
+    """(source, node) pairs of a per-source level BFS with a set."""
+    adj: dict[int, list[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, []).append(b)
+    out = set()
+    for s in sources:
+        seen: set[int] = set()
+        frontier = [s]
+        for _ in range(levels):
+            nxt = []
+            for u in frontier:
+                for v in adj.get(u, []):
+                    if v not in seen:
+                        seen.add(v)
+                        nxt.append(v)
+            if not nxt:
+                break
+            frontier = nxt
+        out |= {(s, v) for v in seen}
+    return out
+
+
+@given(
+    n=st.integers(1, 30),
+    levels=st.integers(0, 6),
+    data=st.data(),
+)
+@settings(max_examples=200, deadline=None)
+def test_closure_equals_per_source_bfs(n, levels, data):
+    """graph_local.closure, one sweep for all sources, gives the pairs of
+    a per-source Python BFS at every level cap, each pair once, for any
+    directed edge list (cycles, self-loops, duplicates)."""
+    import numpy as np
+
+    from pyobo_spark.operators import graph_local
+
+    node = st.integers(0, n - 1)
+    edges = data.draw(st.lists(st.tuples(node, node), max_size=60))
+    sources = data.draw(st.lists(node, unique=True, max_size=n))
+    u = np.array([a for a, _ in edges], dtype=np.int64)
+    v = np.array([b for _, b in edges], dtype=np.int64)
+    indptr, nbrs = graph_local.csr(n, u, v)
+    src, dst = graph_local.closure(indptr, nbrs, np.array(sources), levels)
+    got = list(zip(src.tolist(), dst.tolist()))
+    assert len(got) == len(set(got))
+    assert set(got) == _closure_reference(n, edges, sources, levels)
 
 
 def test_min_labels_long_path_and_cycle():
