@@ -5,9 +5,9 @@ closed-form alongside the inputs (planting is controlled). No external
 data. Generates plain python rows (converted to Spark or pandas/parquet
 by the caller) so it is engine-agnostic and usable from DuckDB tests too.
 
-Shapes mirror the reference's test fixtures
-(/root/reference/tests/resources/test_chebi.obo — 18-term ChEBI excerpt;
- /root/reference/tests/test_api.py:178-374 — in-memory 3-term ontology).
+Shapes mirror the ChEBI-style fixture tests/resources/test_chebi.obo
+(18 terms) and the reference's in-memory 3-term ontology
+(tests/test_api.py:178-374).
 """
 
 from __future__ import annotations

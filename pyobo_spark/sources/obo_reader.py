@@ -5,7 +5,8 @@ MultiDiGraph, then from_obonet builds the object model
 (/root/reference/src/pyobo/struct/obo/reader.py:65-263). We skip the
 graph intermediate and parse straight to the long tables of schemas.py.
 
-Grammar subset (what test_chebi.obo + the reader unit tests exercise —
+Grammar subset (what tests/resources/test_chebi.obo, a ChEBI-style
+excerpt, and the reference's reader unit tests exercise —
 reader.py:266-430, tests/test_obo_reader/test_reader.py):
   [Term]/[Typedef] stanzas; tags id, name, def, synonym, xref, is_a,
   alt_id, property_value, is_obsolete, subset, namespace; header tags

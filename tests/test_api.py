@@ -4,6 +4,8 @@ every function asserted against hand-computed outputs)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from pyobo_spark.api import OntologyCatalog
@@ -26,7 +28,7 @@ def test_catalog_from_obo(spark):
 
     cat = catalog_from_obo(
         spark,
-        [("chebi", open("/root/reference/tests/resources/test_chebi.obo").read())],
+        [("chebi", open(Path(__file__).parent / "resources" / "test_chebi.obo").read())],
     )
     m = cat.get_id_name_mapping("chebi")
     assert m["24431"] == "chemical entity"
@@ -117,7 +119,7 @@ def test_version_metadata_and_replacements(spark):
     from pyobo_spark.api import catalog_from_obo
 
     chebi_text = open(
-        "/root/reference/tests/resources/test_chebi.obo"
+        Path(__file__).parent / "resources" / "test_chebi.obo"
     ).read()
     inline = """format-version: 1.4
 ontology: tsto
@@ -226,7 +228,7 @@ def test_hierarchy_api_accepts_uppercase_curies(spark):
 
     cat = catalog_from_obo(
         spark,
-        [("chebi", open("/root/reference/tests/resources/test_chebi.obo").read())],
+        [("chebi", open(Path(__file__).parent / "resources" / "test_chebi.obo").read())],
     )
     assert cat.get_ancestors("chebi", "CHEBI:24870") == cat.get_ancestors(
         "chebi", "24870"
@@ -439,7 +441,7 @@ def test_from_obo_path(spark, tmp_path):
     from pyobo_spark.api import from_obo_path
 
     cat = from_obo_path(
-        spark, "/root/reference/tests/resources/test_chebi.obo", "chebi"
+        spark, str(Path(__file__).parent / "resources" / "test_chebi.obo"), "chebi"
     )
     assert cat.get_id_name_mapping("chebi")["24431"] == "chemical entity"
 

@@ -4,6 +4,9 @@ and the skew hub is present."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 from pyobo_spark.fixtures import generator
 
 
@@ -52,3 +55,20 @@ def test_media_interleaving():
     for d in fx.documents:
         offs = [s["offset"] for s in d["spans"]]
         assert offs == sorted(offs) and len(set(offs)) == len(offs)
+
+
+def test_tests_read_no_reference_snapshot_path():
+    """Tier-1 takes its fixture files from tests/resources: no test
+    module holds a string literal under the PyOBO reference snapshot's
+    directory, which a bare host does not have."""
+    # built from parts so that this module does not match itself
+    snapshot_dir = "/" + "/".join(("root", "reference")) + "/"
+    offenders = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(Path(__file__).parent.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith(snapshot_dir)
+    ]
+    assert not offenders, offenders

