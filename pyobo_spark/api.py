@@ -10,8 +10,8 @@ semantics; *_df variants return DataFrames (the scalable form),
 cached-mapping API (safe: per-ontology exports are dictionary-sized,
 never corpus-sized).
 
-Point lookups and mapping exports over terms, alts, xrefs and the
-is_a hierarchy answer from a per-(table, prefix) driver index (see
+Point lookups and mapping exports over terms, alts, xrefs, synonyms
+and the is_a hierarchy answer from a per-(table, prefix) driver index (see
 `OntologyCatalog`), built on first use from one capped Arrow collect
 and reused by every later call, so a repeated lookup runs no Spark job.
 
@@ -295,18 +295,35 @@ def _xrefs_index(tbl) -> dict:
     return out
 
 
+def _synonyms_index(tbl) -> dict:
+    """identifier -> its non-NULL texts in byte order, duplicates kept
+    (exports.synonyms_grouped_list): the rows sorted by pyarrow, then
+    one pass to group them. An identifier whose texts are all NULL maps
+    to an empty list, as collect_list gives."""
+    rows = tbl.sort_by([("identifier", "ascending"), ("text", "ascending")])
+    out: dict = {}
+    for i, t in zip(graph_local.values(rows.column("identifier")),
+                    graph_local.values(rows.column("text"))):
+        texts = out.setdefault(i, [])
+        if t is not None:
+            texts.append(t)
+    return out
+
+
 class _Hierarchy:
     """One prefix's CURIE edges (hierarchy.curie_edges) encoded once
-    (graph_local.Digraph), with a node-id dict so each lookup is a dict
-    probe and a sweep."""
+    (graph_local.Digraph), with a node-id dict over the graph's decoded
+    node values, so each lookup is a dict probe and a frontier-sized
+    sweep: a lookup that reaches a few nodes walks them in Python and
+    decodes them from the same list."""
 
     #: hierarchy.reachable's levels: its default max_iter=50, plus one
     LEVELS = 51
 
     def __init__(self, tbl):
         self.graph = graph_local.Digraph(tbl)
-        names = graph_local.values(self.graph.names)
-        self.ids = dict(zip(names, range(len(names))))
+        labels = self.graph.labels
+        self.ids = dict(zip(labels, range(len(labels))))
 
     def reach(self, roots: list[str], down: bool = False, levels: int = LEVELS):
         hits = self.graph.sweep(
@@ -335,6 +352,10 @@ _INDEXED = {
         ),
         _xrefs_index,
     ),
+    "synonyms": (
+        lambda df, p: df.where(F.col("prefix") == p).select("identifier", "text"),
+        _synonyms_index,
+    ),
     "parents": (hierarchy.curie_edges, _Hierarchy),
 }
 
@@ -344,14 +365,19 @@ class OntologyCatalog:
     """The lookup API over one set of long tables (see the module
     docstring).
 
-    **Driver index.** Lookups against terms, alts, xrefs and the is_a
-    hierarchy (parents) are answered from an index per (table, prefix),
-    held on the catalog like its grounders: terms become id -> name
-    plus the id set, alts alt_id -> identifier, xrefs id -> sorted
-    target CURIEs, and the prefix's CURIE edges one int32-encoded CSR
-    per direction (graph_local.Digraph). Each part costs ONE capped
-    Arrow collect, built on the first call that needs it; that collect
-    is both the size gate and the input (graph_local.collect_bounded).
+    **Driver index.** Lookups against terms, alts, xrefs, synonyms and
+    the is_a hierarchy (parents) are answered from an index per (table,
+    prefix), held on the catalog like its grounders: terms become id ->
+    name plus the id set, alts alt_id -> identifier, xrefs id -> sorted
+    target CURIEs, synonyms id -> texts in byte order, and the prefix's
+    CURIE edges one int32-encoded CSR per direction
+    (graph_local.Digraph). A hierarchy lookup is a dict probe plus a
+    frontier-sized sweep of that CSR: the few nodes of a typical
+    ancestor or child set are walked and decoded in Python at dict
+    speed, and only a large frontier takes a vectorized numpy step.
+    Each part costs ONE capped Arrow collect, built on the first call
+    that needs it; that collect is both the size gate and the input
+    (graph_local.collect_bounded).
     The bounds are the existing ones: ``max_collect_rows`` for the
     tables and ``BROADCAST_CLOSURE_MAX_EDGES``
     ($PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES) for the edges.
@@ -503,19 +529,24 @@ class OntologyCatalog:
         return exports.references(self.terms, prefix)
 
     def get_id_synonyms_mapping(self, prefix: str) -> dict[str, list[str]]:
-        """api/names.py:318-329 — sorted synonym lists (array-valued
-        aggregation: no delimiter round-trip, '|' in synonym text is
-        safe)."""
-        df = exports.synonyms_grouped_list(
-            self.synonyms.where(F.col("prefix") == prefix)
-        )
-        return {r["identifier"]: list(r["synonyms"]) for r in self._bounded_rows(df, "this mapping export")}
+        """api/names.py:318-329 — each identifier's synonyms in byte
+        order (exports.synonyms_grouped_list), from the synonyms
+        index."""
+        idx = self._indexed_export("synonyms", prefix, "this mapping export")
+        return {i: list(texts) for i, texts in idx.items()}
 
     def get_synonyms(self, prefix: str, identifier: str) -> list[str]:
         """api/names.py get_synonyms — one term's sorted synonyms."""
-        return self.get_id_synonyms_mapping(prefix.lower()).get(
-            identifier, []
-        )
+        idx = self._index("synonyms", prefix)
+        if idx is not None:
+            return list(idx.get(identifier, []))
+        rows = exports.synonyms_grouped_list(
+            self.synonyms.where(
+                (F.col("prefix") == prefix)
+                & (F.col("identifier") == identifier)
+            )
+        ).collect()
+        return list(rows[0]["synonyms"]) if rows else []
 
     #: dict-returning lookups collect whole per-ontology artifacts to
     #: the driver (the reference's cached-mapping API does the same via

@@ -8,13 +8,22 @@ from a broadcast of the encoded graph) and connected components
 Each collects a bounded table once, as Arrow (a capped collect that is
 also its size gate, :func:`collect_bounded`), and solves it here: endpoint
 values are dictionary-encoded to dense int32 ids once (pyarrow), the
-graph work is vectorized numpy over those ids, and only the answer is
-decoded back to values. Dense integer keys with vectorized probes
-instead of hashing strings per step (*Analyzing Vectorized Hash Tables
-Across CPU Architectures*, VLDB 2023).
+graph work runs over those ids, and only the answer is decoded back to
+values. Dense integer keys instead of hashing strings per step
+(*Analyzing Vectorized Hash Tables Across CPU Architectures*, VLDB 2023).
+
+The closure and CC kernels are vectorized numpy throughout: they touch
+every node. A rooted sweep usually touches a few, and a numpy call costs
+microseconds at its boundary whatever its size (*Accelerating Python
+UDFs in Vectorized Query Execution*, CIDR 2022), so
+:meth:`Digraph.sweep` sizes each BFS level to its frontier: a small
+frontier is walked in Python over zero-copy views of the CSR arrays, a
+large one is one vectorized step, both over one seen-buffer.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pyarrow as pa
@@ -86,6 +95,11 @@ def gather(indptr: np.ndarray, nbrs: np.ndarray, frontier: np.ndarray):
     return nbrs[idx + np.arange(len(idx))], cnt
 
 
+#: A BFS level whose frontier has at most this many nodes is walked in
+#: Python; a larger one is one vectorized gather step.
+SMALL_FRONTIER = 64
+
+
 class Digraph:
     """The (src, dst) edge table ``tbl`` encoded once (:func:`encode`)
     with a CSR adjacency in each direction, so any number of rooted
@@ -95,6 +109,14 @@ class Digraph:
         self.names, u, v = encode(tbl)
         n = len(self.names)
         self._adj = (csr(n, u, v), csr(n, v, u))
+        self._views = tuple(
+            (memoryview(ip), memoryview(nb)) for ip, nb in self._adj
+        )
+
+    @functools.cached_property
+    def labels(self) -> list:
+        """``names`` as a Python list, decoded once on first use."""
+        return values(self.names)
 
     def node_ids(self, nodes: list[str]) -> list[int | None]:
         """Node id of each of ``nodes`` (None: not a node), by one hash
@@ -109,30 +131,58 @@ class Digraph:
     ) -> list[set]:
         """Per-root level BFS along src → dst (dst → src with
         ``reverse``), at most ``levels`` levels: the set of values
-        reached from each root id. Each level gathers the frontier's
-        adjacency slices in one vectorized step. The seen-set starts
-        empty (a root enters it only around a cycle), so duplicate edges
-        and self-loops are absorbed and cycles terminate; a None root
-        reaches nothing."""
+        reached from each root id. The seen-set starts empty (a root
+        enters it only around a cycle), so duplicate edges and
+        self-loops are absorbed and cycles terminate; a None root
+        reaches nothing.
+
+        Each level is sized to its frontier. A frontier of at most
+        SMALL_FRONTIER nodes is walked in Python over zero-copy
+        memoryviews of the CSR arrays, so a lookup that reaches a few
+        nodes costs a few dict-speed steps, not a handful of numpy calls
+        per level; a larger one is one vectorized gather step. Both mark
+        one seen-buffer (a bytearray, viewed by numpy), reset after each
+        root. An answer reached by Python steps alone is decoded from
+        ``labels``, a larger one by one vectorized take."""
         indptr, nbrs = self._adj[reverse]
-        seen = np.zeros(len(self.names), dtype=bool)
+        ip, nb = self._views[reverse]
+        seen = bytearray(len(indptr) - 1)
+        seen_np = None  # numpy's view of seen, made on the first large step
         out: list[set] = []
         for rid in root_ids:
-            reached = []
-            frontier = np.array([] if rid is None else [rid], dtype=np.int64)
+            small: list[int] = []  # ids reached by Python steps
+            large: list[np.ndarray] = []  # ids reached by vectorized steps
+            frontier = [] if rid is None else [rid]
             for _ in range(levels):
-                nxt = gather(indptr, nbrs, frontier)[0]
+                if len(frontier) <= SMALL_FRONTIER:
+                    nxt = []
+                    for u in frontier:
+                        for w in nb[ip[u]:ip[u + 1]]:
+                            if not seen[w]:
+                                seen[w] = 1
+                                nxt.append(w)
+                    small += nxt
+                else:
+                    if seen_np is None:
+                        seen_np = np.frombuffer(seen, dtype=bool)
+                    nxt = gather(indptr, nbrs, np.asarray(frontier))[0]
+                    nxt = np.unique(nxt)
+                    nxt = nxt[~seen_np[nxt]]
+                    seen_np[nxt] = True
+                    large.append(nxt)
+                    if len(nxt) <= SMALL_FRONTIER:
+                        nxt = nxt.tolist()
                 if not len(nxt):
                     break
-                nxt = np.unique(nxt)
-                nxt = nxt[~seen[nxt]]
-                if not len(nxt):
-                    break
-                seen[nxt] = True
-                reached.append(nxt)
                 frontier = nxt
-            hit = np.concatenate(reached) if reached else np.empty(0, np.int32)
-            seen[hit] = False  # reset for the next root
+            if not large:
+                for w in small:  # reset for the next root
+                    seen[w] = 0
+                labels = self.labels
+                out.append({labels[w] for w in small})
+                continue
+            hit = np.concatenate([np.array(small, dtype=nbrs.dtype), *large])
+            seen_np[hit] = False  # reset for the next root
             out.append(set(values(self.names.take(pa.array(hit)))))
         return out
 

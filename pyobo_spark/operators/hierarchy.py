@@ -14,10 +14,13 @@ question are asked of it, and each has its own operator:
   $PYOBO_SPARK_BFS_BROADCAST_MAX_EDGES) it runs ONE capped Arrow
   collect of the edges — that collect is both the size gate and the
   input — and sweeps outward from each root over a driver-side CSR
-  adjacency. Above the bound it falls back to the all-pairs closure
-  below, filtered to the roots. ``OntologyCatalog`` keeps the same
-  encoded graph (:class:`graph_local.Digraph`) per prefix and sweeps it
-  again on every lookup, with the same semantics.
+  adjacency (:meth:`graph_local.Digraph.sweep`): each level is walked
+  in Python while its frontier is small, as it is for most rooted
+  questions, and takes one vectorized numpy step once it is large.
+  Above the bound it falls back to the all-pairs closure below,
+  filtered to the roots. ``OntologyCatalog`` keeps the same encoded
+  graph per prefix and sweeps it again on every lookup, with the same
+  semantics.
 - **All-pairs** — the full closure, (identifier, ancestor) for every
   node: :func:`ancestors` / :func:`descendants`. Bounded graphs take
   the same capped collect and encoding, then broadcast the encoded

@@ -319,6 +319,7 @@ def test_catalog_index_job_counts(spark, tmp_path):
         "alts": lambda: cat.get_primary_identifier("fixo", "8000007"),
         "xrefs": lambda: cat.get_xrefs("fixo", "0000002"),
         "parents": lambda: cat.get_children("fixo", "0000001"),
+        "synonyms": lambda: cat.get_synonyms("fixo", "0000001"),
     }
     for table, call in first.items():
         assert _jobs_in_group(spark, f"index_{table}", call)[1] == 1, table
@@ -351,6 +352,11 @@ def test_catalog_index_job_counts(spark, tmp_path):
                          True),
         "is_descendent": (
             lambda: cat.is_descendent("fixo", "0000001", "0000017"), True),
+        "get_synonyms": (lambda: cat.get_synonyms("FIXO", "0000002"),
+                         sorted([_label(2).upper(), "shared token"])),
+        "get_id_synonyms_mapping": (
+            lambda: cat.get_id_synonyms_mapping("fixo")["0000005"],
+            sorted([_label(5).upper(), _label(5).replace(" ", "-")])),
         "get_literal_mappings_subset": (
             lambda: type(cat.get_literal_mappings_subset("fixo", "0000009")),
             type(cat.terms)),

@@ -4,6 +4,7 @@ covers every executor batch path."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -14,6 +15,7 @@ from pyobo_spark.grounding.dictionary import (
 )
 from pyobo_spark.normalize.curie import parse_one
 from pyobo_spark.normalize.registry import Registry
+from pyobo_spark.operators.graph_local import SMALL_FRONTIER
 
 REG = Registry.default()
 
@@ -140,11 +142,16 @@ def test_rooted_reachable_equals_filtered_closure(spark, extra, roots, max_iter)
     """hierarchy.reachable (the rooted sweep, and its fallback with
     broadcast_edge_bound=0) equals the all-pairs closure filtered to
     the roots, upward and downward, at every level cap."""
+    import pandas as pd
+
     from pyobo_spark.operators import hierarchy as H
 
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 8
+    # from pandas through Arrow, dealt over the default parallelism: a
+    # scan runs no Python worker, as a parallelized Python RDD does, so
+    # each of the many small jobs below costs less
     edges = spark.createDataFrame(
-        spark.sparkContext.parallelize(_FIXED_EDGES + extra, 3),
+        pd.DataFrame(_FIXED_EDGES + extra, columns=["child", "parent"]),
         "child string, parent string",
     )
     assert edges.rdd.getNumPartitions() >= 2
@@ -350,6 +357,96 @@ def test_closure_equals_per_source_bfs(n, levels, data):
     assert set(got) == _closure_reference(n, edges, sources, levels)
 
 
+class _CountingView:
+    """A CSR array view that counts the adjacency slices read from it:
+    one per node a Python step of Digraph.sweep expands."""
+
+    def __init__(self, view):
+        self.view, self.reads = view, 0
+
+    def __getitem__(self, k):
+        self.reads += isinstance(k, slice)
+        return self.view[k]
+
+
+_T = SMALL_FRONTIER
+#: hub sizes around the sweep's frontier switch, and anything up to 3x it
+_FANOUT = st.one_of(st.sampled_from([_T, _T + 1]), st.integers(0, 3 * _T))
+_SWEEP_POOL = ["r", "a0", "a1", "b0", "b1", "c0", "ch0", "ch5", "x", "y"]
+
+
+@given(
+    hub=_FANOUT,
+    merge=st.integers(1, 3),
+    fan=_FANOUT,
+    back=st.booleans(),
+    chain=st.integers(0, 60),
+    extra=st.lists(
+        st.tuples(st.sampled_from(_SWEEP_POOL + [None]),
+                  st.sampled_from(_SWEEP_POOL + [None])),
+        max_size=12,
+    ),
+    dups=st.integers(0, 6),
+    roots=st.lists(st.sampled_from(_SWEEP_POOL + ["absent", None]),
+                   min_size=1, max_size=5),
+)
+@settings(max_examples=150, deadline=None)
+def test_sweep_equals_per_root_bfs(
+    hub, merge, fan, back, chain, extra, dups, roots
+):
+    """Digraph.sweep gives each root the nodes of a per-root set BFS, at
+    level caps 0, 1, 2 and 51 in both directions, on graphs whose
+    frontiers cross the Python/vectorized switch both ways: a hub
+    whose children reconverge on a few nodes that fan out again, a
+    long chain, an optional cycle back through the root, random extra
+    edges (self-loops, NULL endpoints), duplicated edges, and several
+    roots per call, unknown and None ones included. A Python step
+    expands each node at most once per root (the root twice, around
+    a cycle)."""
+    import pyarrow as pa
+
+    from pyobo_spark.operators import graph_local
+
+    edges = [("r", f"a{i}") for i in range(hub)]
+    edges += [(f"a{i}", f"b{i % merge}") for i in range(hub)]
+    edges += [("b0", f"c{i}") for i in range(fan)]
+    edges += [("c0", "r")] if back else []
+    edges += [(f"ch{i}", f"ch{i + 1}") for i in range(chain)] + [("r", "ch0")]
+    edges += extra
+    edges += edges[:dups]
+    g = graph_local.Digraph(pa.table(
+        {"s": [a for a, _ in edges], "d": [b for _, b in edges]},
+        schema=pa.schema([("s", pa.string()), ("d", pa.string())]),
+    ))
+    ids = g.node_ids(roots)
+    for reverse in (False, True):
+        ok = [(b, a) if reverse else (a, b) for a, b in edges
+              if a is not None and b is not None]
+        nodes = sorted({x for e in ok for x in e})
+        idx = {v: i for i, v in enumerate(nodes)}
+        for levels in (0, 1, 2, 51):
+            pairs = _closure_reference(
+                len(nodes), [(idx[a], idx[b]) for a, b in ok],
+                sorted({idx[r] for r in roots if r in idx}), levels,
+            )
+            want = [{nodes[v] for s, v in pairs if s == idx.get(r)}
+                    for r in roots]
+            assert g.sweep(ids, levels, reverse) == want, (reverse, levels)
+            views = g._views
+            for rid, reached in zip(ids, want):
+                ip, nb = views[reverse]
+                counted = _CountingView(nb)
+                g._views = tuple(
+                    (ip, counted) if d == reverse else v
+                    for d, v in enumerate(views)
+                )
+                try:
+                    assert g.sweep([rid], levels, reverse) == [reached]
+                finally:
+                    g._views = views
+                assert counted.reads <= len(reached) + 1, (reverse, levels)
+
+
 def test_min_labels_long_path_and_cycle():
     """A 200k-node path and cycle with shuffled ids converge in a few
     rounds. Hooking endpoints instead of roots moves a label one hop
@@ -393,16 +490,25 @@ _CAT_FIXED = {
         ("pb", "X", "pa", "1"),  # child in pb, parent in pa
     ],
 }
+#: synonyms of pa:1 and pb:1 in an order other than bytes, a duplicated
+#: text, a NULL text, and an identifier whose only text is NULL
+_SYN_FIXED = [
+    ("pa", "1", t, "oboInOwl:hasExactSynonym")
+    for t in ("é", "b", "B", "b", None)
+] + [("pb", "1", "a", "oboInOwl:hasExactSynonym"),
+     ("pa", "x", None, "oboInOwl:hasExactSynonym")]
 _PFX = st.sampled_from(["pa", "pb"])
 _LOC = st.sampled_from(_LOCALS)
 
 
 def _catalog_tables(spark, rows: dict) -> dict:
     """Canonical-schema tables over ``rows`` (only the indexed columns
-    set), each dealt round-robin over 3 partitions. Built from pandas,
-    so a scan is a local relation, not a Python RDD (~10x cheaper per
-    job)."""
+    set), each dealt round-robin over 3 partitions. Every column is
+    nullable, so a synonym text can be NULL, as a table from outside
+    the readers may hold. Built from pandas, so a scan is a local
+    relation, not a Python RDD (~10x cheaper per job)."""
     import pandas as pd
+    from pyspark.sql import types as T
 
     from pyobo_spark.sources.obo_reader import table_schemas
 
@@ -421,8 +527,11 @@ def _catalog_tables(spark, rows: dict) -> dict:
             [dict(zip(given_cols, r)).get(f) for f in fields]
             for r in _CAT_FIXED[name] + rows.get(name, [])
         ]
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in canon[name]]
+        )
         out[name] = spark.createDataFrame(
-            pd.DataFrame(full, columns=fields), canon[name]
+            pd.DataFrame(full, columns=fields), schema
         ).repartition(3)
     return out
 
@@ -437,6 +546,11 @@ def _catalog_tables(spark, rows: dict) -> dict:
         max_size=8,
     ),
     parents=st.lists(st.tuples(_PFX, _LOC, _PFX, _LOC), max_size=8),
+    synonyms=st.lists(
+        st.tuples(_PFX, _LOC, st.sampled_from(_NAMES),
+                  st.just("oboInOwl:hasExactSynonym")),
+        max_size=8,
+    ),
     probes=st.lists(
         st.tuples(st.sampled_from(["pa", "PA", "pb"]),
                   st.sampled_from(_LOCALS + ["a1", "absent"])),
@@ -445,21 +559,25 @@ def _catalog_tables(spark, rows: dict) -> dict:
 )
 @settings(max_examples=3, deadline=None)
 def test_catalog_index_equals_spark_path(
-    spark, terms, alts, xrefs, parents, probes
+    spark, terms, alts, xrefs, parents, synonyms, probes
 ):
     """Every lookup the catalog answers from its driver index equals
     the per-call Spark path (a catalog whose max_collect_rows is 0) and
     the rooted Spark formulation of the hierarchy lookups, on catalogs
     with duplicate keys, NULL names and target prefixes, an alt id that
     is also a primary id, self-loops, a cycle, a hub, two prefixes with
-    colliding local ids and uppercase arguments."""
+    colliding local ids and uppercase arguments; the synonym mapping
+    equals exports.synonyms_grouped_list, with NULL texts, duplicates
+    and byte order."""
     from pyspark.sql import functions as F
 
     from pyobo_spark.api import OntologyCatalog
+    from pyobo_spark.operators import exports
     from pyobo_spark.operators import hierarchy as H
 
     tables = _catalog_tables(spark, {"terms": terms, "alts": alts,
-                                     "xrefs": xrefs, "parents": parents})
+                                     "xrefs": xrefs, "parents": parents,
+                                     "synonyms": _SYN_FIXED + synonyms})
     assert min(t.rdd.getNumPartitions() for t in tables.values()) >= 2
     cat = OntologyCatalog(tables)
     spark_path = OntologyCatalog(tables)
@@ -477,6 +595,8 @@ def test_catalog_index_equals_spark_path(
         assert (cat.get_primary_reference(arg, ident)
                 == spark_path.get_primary_reference(arg, ident))
         assert cat.get_xrefs(arg, ident) == spark_path.get_xrefs(arg, ident)
+        assert (cat.get_synonyms(arg, ident)
+                == spark_path.get_synonyms(arg, ident))
 
         edges = H.curie_edges(tables["parents"], p)
         node = f"{p}:{ident}"
@@ -515,6 +635,14 @@ def test_catalog_index_equals_spark_path(
             i: n for i, n in names[p].items() if n is not None
         }
         assert cat.get_alts_to_id(arg) == primaries.get(p, {})
+        assert cat.get_id_synonyms_mapping(arg) == {
+            r["identifier"]: list(r["synonyms"])
+            for r in exports.synonyms_grouped_list(
+                tables["synonyms"].where(F.col("prefix") == p)
+            ).collect()
+        }
+        with pytest.raises(ValueError, match="max_collect_rows"):
+            spark_path.get_id_synonyms_mapping(arg)
 
 
 #: ties on score (a:0 / a:1), on score and length (b:1 "beta" vs b:3
