@@ -42,19 +42,12 @@ HEADLINE = [
     "relations_typedef_filtered",
     "alt_upgrade",              # broadcast dim join
     "sssom_mappings",
-    "minhash_near_duplicates",  # MinHash+LSH near-dup
-    "dedup_exact",
-    "token_stats",
-    "doc_fingerprint",
     "ann_cosine_topk",          # brute-force cosine top-k
     "ann_cosine_lsh",           # multi-table LSH ANN
     "descendants",              # reverse BFS closure
     "hierarchy_edges",          # predicate-union edge set
     "nodes_export",             # Neo4j nodes artifact (groupBy collect)
     "span_pipeline",            # interleaved spans: posexplode + matcher
-    "clean_corpus",             # quality filter + dedup keep-first
-    "simhash",                  # JVM xxhash64 tokens + numpy bit-majority
-    "ngram_jaccard_planted",    # exact n-gram verify kernel
     "semantic_mappings",        # full SSSOM column set projection
     "hierarchy_nodes",          # node-set + literal-property join
     "term_embeddings",          # map-only term embedding artifact

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .grounding import dictionary as _dict
 from .grounding import matcher as _matcher
+from .normalize.registry import default_reference  # noqa: F401 (public API)
 from .operators import exports, graph_local, hierarchy
 from .pipeline.kg_build import build_literal_mappings
 
@@ -196,22 +197,6 @@ def build_ontology(
         ),
     }
     return OntologyCatalog(tables)
-
-
-def default_reference(
-    prefix: str, identifier: str, name: str | None = None
-) -> tuple[str, str]:
-    """CURIE pair for an "unqualified" in-ontology reference — the
-    reference's ``default_reference`` (struct/reference.py:148-167):
-    a bare ``located_in`` inside ``chebi`` becomes
-    ``("obo", "chebi#located_in")``. ``name`` is accepted for signature
-    parity (the engine's long tables carry names separately)."""
-    if not identifier.strip():
-        raise ValueError("default identifier is empty")
-    from .normalize.registry import Registry
-
-    norm = Registry.default().normalize_prefix(prefix) or prefix.lower()
-    return ("obo", f"{norm}#{identifier}")
 
 
 def _fold_prefix_methods(cls):

@@ -99,6 +99,7 @@ RELATION_LABELS: dict[str, tuple[str, str]] = {
     "locatedin": ("RO", "0001025"),
     "derivesfrom": ("RO", "0001000"),
     "hasrole": ("RO", "0000087"),
+    "homologousto": ("RO", "HOM0000007"),
 }
 
 
@@ -164,6 +165,20 @@ class Registry:
             if uri.startswith(upfx):
                 return prefix, uri[len(upfx):]
         return None
+
+
+def default_reference(
+    prefix: str, identifier: str, name: str | None = None
+) -> tuple[str, str]:
+    """CURIE pair for an "unqualified" in-ontology reference — the
+    reference's ``default_reference`` (struct/reference.py:148-167):
+    a bare ``located_in`` inside ``chebi`` becomes
+    ``("obo", "chebi#located_in")``. ``name`` is accepted for signature
+    parity (the engine's long tables carry names separately)."""
+    if not identifier.strip():
+        raise ValueError("default identifier is empty")
+    norm = Registry.default().normalize_prefix(prefix) or prefix.lower()
+    return ("obo", f"{norm}#{identifier}")
 
 
 def parse_ec_transfer(value: str) -> list[str]:

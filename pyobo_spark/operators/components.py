@@ -28,11 +28,10 @@ from . import env_edge_bound, graph_local
 
 #: Collect bound for the driver-side union-find fast path (same
 #: reasoning — and same default — as hierarchy.BROADCAST_CLOSURE_MAX_
-#: EDGES): ontology xref/equivalence graphs are bounded artifacts that
-#: do not scale with the corpus, and the fuzzy-dedup candidate graph is
-#: the (small) LSH-survivor set, not the corpus. The collect is two
-#: Arrow string columns: with 12-character curies and 8-byte offsets,
-#: 40 B per edge, 120 MB at the bound. A graph above the bound pays
+#: EDGES): ontology xref/equivalence graphs, the KG build's components
+#: input, are bounded artifacts that do not scale with the corpus. The
+#: collect is two Arrow string columns: with 12-character curies and
+#: 8-byte offsets, 40 B per edge, 120 MB at the bound. A graph above the bound pays
 #: that collect too (bound + 1 rows, then dropped) before the
 #: alternating-star rounds below: about 3 s and 100 MB of driver
 #: memory at the default bound on 4 cores.

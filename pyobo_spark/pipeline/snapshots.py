@@ -175,12 +175,7 @@ class SnapshotTable:
         ptr = f"{self._meta_dir}/_last_id"
         return int(self._read_text(ptr).strip()) if self._exists(ptr) else 0
 
-    def _commit(
-        self,
-        df: DataFrame,
-        operation: str,
-        batch_tag: tuple[str, int] | None = None,
-    ) -> int:
+    def _commit(self, df: DataFrame, operation: str) -> int:
         parent = self.current_snapshot_id()
         # ids must NEVER be reused: not across rollbacks (parent+1 may
         # exist), not across crashed commits (orphan data dir at
@@ -212,10 +207,9 @@ class SnapshotTable:
         # r7 (VERDICT r06 "what's wrong" #3): the row count comes from
         # the parquet FOOTERS of the just-written files — a driver-side
         # metadata read — instead of a spark.read.parquet().count()
-        # executor job per commit. At streaming `append_batch` frequency
-        # that count job was the sink's dominant fixed cost; the footer
-        # sum is the same number (parquet footers are authoritative).
-        # Non-local filesystems fall back to the count job.
+        # executor job per commit; the footer sum is the same number
+        # (parquet footers are authoritative). Non-local filesystems
+        # fall back to the count job.
         footer = summarize_files(f["path"] for f in files)
         n_rows = (
             footer[0]
@@ -227,8 +221,6 @@ class SnapshotTable:
             files = parent_snap["files"] + files
             n_rows += parent_snap["summary"]["n_rows"]
         summary: dict[str, Any] = {"n_rows": n_rows, "n_files": len(files)}
-        if batch_tag is not None:
-            summary["batch_app"], summary["batch_id"] = batch_tag
         snap = {
             "snapshot_id": new_id,
             "parent_id": parent,
@@ -260,55 +252,6 @@ class SnapshotTable:
         parent's data files are REUSED in the new manifest — a
         micro-batch append to a huge table writes only the new files."""
         return self._commit(df, "append")
-
-    def append_batch(
-        self, df: DataFrame, batch_id: int, app_id: str = "default"
-    ) -> int | None:
-        """Idempotent append for Structured Streaming ``foreachBatch``:
-        commit ``df`` tagged ``(app_id, batch_id)`` unless the lineage's
-        most recent tag FOR THAT APP already covers it (batch ids from
-        one streaming checkpoint are monotonic) — a replayed batch
-        (foreachBatch is at-least-once: a crash between the sink write
-        and the checkpoint commit re-runs it) becomes a no-op instead of
-        duplicate rows. This turns the snapshot table into a
-        transactional sink: readers see each micro-batch exactly once,
-        which plain parquet appends can only approximate with stamp
-        columns and reader-side dedup. Returns the new snapshot id, or
-        None when the batch was already committed.
-
-        ``app_id`` scopes the replay check to one streaming query (the
-        same role as Delta's ``txnAppId``): without it, a SECOND query
-        writing to this table — or a checkpoint reset restarting batch
-        ids at 0 — would see its genuinely-new low batch ids judged
-        'already committed' and silently dropped. Use one app_id per
-        (query, checkpoint) pair; resetting a checkpoint to reprocess
-        from scratch requires a NEW app_id (or table), exactly as with
-        Delta's idempotent writes."""
-        # batch ids per app are MONOTONIC, so the check stops at the
-        # first snapshot tagged by THIS app — O(1) metadata reads per
-        # micro-batch for a single-writer stream (other apps' tags and
-        # untagged manual commits are walked past, bounded by the number
-        # of interleaved writers). A parent expired by expire_snapshots
-        # ends the walk: only the LAST batch can replay, and its
-        # snapshot is the head, which keep_last >= 1 always keeps.
-        sid = self.current_snapshot_id()
-        while sid is not None:
-            try:
-                snap = self._load_snapshot(sid)
-            except ValueError:
-                break  # lineage truncated by expire_snapshots
-            summ = snap["summary"]
-            tagged = summ.get("batch_id")
-            if tagged is not None and summ.get("batch_app", "default") == app_id:
-                if batch_id <= tagged:
-                    return None
-                break
-            sid = snap["parent_id"]
-        # the tag rides inside the snapshot JSON written BEFORE the
-        # pointer swap — tag and commit are one atomic unit, so a crash
-        # anywhere leaves either "batch absent" (replay re-commits) or
-        # "batch present and tagged" (replay no-ops), never duplicates
-        return self._commit(df, "append", batch_tag=(app_id, batch_id))
 
     def rollback(self, snapshot_id: int) -> None:
         """Point the table back at an earlier snapshot. Metadata-only;

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from .grounding import matcher
 from .grounding.dictionary import broadcast_matcher, build_matcher
-from .operators import dedup, exports, hierarchy, similarity, textstats
+from .operators import exports, hierarchy, similarity
 from .operators.components import connected_components
 from .sources import tpch_adapter as tp
 from .spread import spread_small_input
@@ -330,78 +330,6 @@ matches AS (
   JOIN dict d ON t.tok = d.tok
 )
 SELECT DISTINCT doc_id, matched_text, curie FROM matches WHERE rn = 1
-"""
-
-
-def q_dedup_exact(spark, sf_dir):
-    docs = tp.load(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", F.md5(F.col("text")).alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
-    )
-
-
-SQL_DEDUP_EXACT = """
-SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS n_dups
-FROM documents GROUP BY md5(text)
-"""
-
-
-def q_token_stats(spark, sf_dir):
-    docs = _docs_spread(spark, sf_dir)
-    out = textstats.token_stats(docs)
-    return out.select(
-        "doc_id",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.col("n_chars").cast("bigint").alias("n_chars"),
-        "avg_token_len",
-        "stopword_ratio",
-        "quality_score",
-    )
-
-
-_STOP_SQL = ", ".join(f"'{s}'" for s in textstats.STOPWORDS)
-SQL_TOKEN_STATS = f"""
-WITH base AS (
-  SELECT doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         CAST(length(text) AS BIGINT) AS n_chars,
-         CAST(len(list_filter(string_split(text, ' '),
-              x -> list_contains([{_STOP_SQL}], x))) AS BIGINT) AS n_stop
-  FROM documents
-)
-SELECT doc_id, n_tokens, n_chars,
-       round((n_chars - (n_tokens - 1)) / n_tokens, 4) AS avg_token_len,
-       round(n_stop / n_tokens, 4) AS stopword_ratio,
-       CAST(CASE WHEN n_tokens >= 10 AND n_tokens <= 400 THEN 0.5 ELSE 0.0 END +
-            CASE WHEN n_stop / n_tokens > 0.01 AND n_stop / n_tokens < 0.6
-                 THEN 0.5 ELSE 0.0 END AS DOUBLE) AS quality_score
-FROM base
-"""
-
-
-def q_doc_fingerprint(spark, sf_dir):
-    docs = _docs_spread(spark, sf_dir)
-    toks = F.split(F.col("text"), " ")
-    fp = F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * 31 + (F.length(t) + F.ascii(t)).cast("long"))
-        % F.lit(2147483648).cast("long"),
-    )
-    return docs.select("doc_id", fp.alias("fingerprint"))
-
-
-SQL_DOC_FINGERPRINT = """
-SELECT doc_id,
-       list_reduce(
-         list_prepend(CAST(0 AS BIGINT),
-           list_transform(string_split(text, ' '),
-                          t -> CAST(length(t) + ascii(t) AS BIGINT))),
-         (acc, x) -> (acc * 31 + x) % 2147483648
-       ) AS fingerprint
-FROM documents
 """
 
 
@@ -792,8 +720,8 @@ FROM raw
 
 
 def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs (exact, canonical a<b) —
-    the embedding leg of the dedup suite."""
+    """Embedding-cosine near-duplicate pairs (exact, canonical a<b):
+    every vector pair whose cosine is at least 0.8."""
     emb = spread_small_input(tp.load(spark, sf_dir, "embeddings"))
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
@@ -904,47 +832,6 @@ SELECT DISTINCT * FROM (
          concat(prefix, ':', identifier), 'RO:0002162^-1'
   FROM relations WHERE relation_prefix = 'RO' AND relation_id = '0002162'
 )
-"""
-
-
-def q_clean_corpus(spark, sf_dir):
-    """Training-corpus cleaning composition: quality filter (token stats)
-    + exact-dedup keep-first. The canonical pre-training data pipeline
-    over the documents table."""
-    docs = _docs_spread(spark, sf_dir)
-    stats = textstats.token_stats(docs)
-    keep = (
-        docs.select("doc_id", F.md5("text").alias("h"))
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("keep_id"))
-    )
-    good = stats.where(F.col("quality_score") >= 1.0).select(
-        "doc_id", F.col("n_tokens").cast("bigint").alias("n_tokens")
-    )
-    return good.join(
-        keep, good.doc_id == keep.keep_id, "left_semi"
-    ).select("doc_id", "n_tokens")
-
-
-_CLEAN_STOP = ", ".join(f"'{s}'" for s in textstats.STOPWORDS)
-SQL_CLEAN_CORPUS = f"""
-WITH stats AS (
-  SELECT doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         len(list_filter(string_split(text, ' '),
-             x -> list_contains([{_CLEAN_STOP}], x)))
-           / len(string_split(text, ' ')) AS stop_ratio
-  FROM documents
-),
-keep AS (
-  SELECT md5(text) AS h, min(doc_id) AS keep_id FROM documents
-  GROUP BY md5(text)
-)
-SELECT s.doc_id, s.n_tokens
-FROM stats s
-WHERE s.n_tokens BETWEEN 10 AND 400
-  AND s.stop_ratio > 0.01 AND s.stop_ratio < 0.6
-  AND s.doc_id IN (SELECT keep_id FROM keep)
 """
 
 
@@ -1203,41 +1090,6 @@ WHERE string_split(object_id, ':')[1] NOT IN
 
 # ----- non-SQL-expressible ops (driver records rows-only checks) -----------
 
-def _plant_near_duplicates(docs):
-    """Deterministic near-dup planting shared by the MinHash-LSH query
-    and its exact n-gram verification counterpart: a copy of each 10th
-    doc missing its first token, id shifted by 10_000_000. Returns
-    (corpus, candidate_pairs) — the scheme MUST stay identical in both
-    queries or the LSH path and its oracle-verified twin decouple."""
-    base = docs.where(F.col("doc_id") % 10 == 0)
-    planted = base.select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"),
-        F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-    )
-    corpus = docs.select("doc_id", "text").unionByName(planted)
-    pairs = base.select(
-        F.col("doc_id").alias("doc_a"),
-        (F.col("doc_id") + 10_000_000).alias("doc_b"),
-    )
-    return corpus, pairs
-
-
-def q_minhash_near_duplicates(spark, sf_dir):
-    corpus, _ = _plant_near_duplicates(tp.load(spark, sf_dir, "documents"))
-    return dedup.minhash_near_duplicates(corpus, threshold=0.5)
-
-
-def q_simhash(spark, sf_dir):
-    return dedup.simhash_fingerprints(tp.load(spark, sf_dir, "documents"))
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    corpus, _ = _plant_near_duplicates(tp.load(spark, sf_dir, "documents"))
-    sigs = dedup.minhash_signatures(corpus)
-    cands = dedup.minhash_lsh_candidates(sigs)
-    return dedup.ngram_jaccard_pairs(corpus, cands.select("doc_a", "doc_b"))
-
-
 def q_ann_cosine_lsh(spark, sf_dir):
     emb = tp.load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 8)
@@ -1298,45 +1150,6 @@ def q_span_pipeline(spark, sf_dir):
     return matcher.detect_mentions(corpus, bc)
 
 
-def q_ngram_jaccard_planted(spark, sf_dir):
-    """Exact 3-gram Jaccard over DETERMINISTIC candidate pairs (each
-    doc_id % 10 == 0 vs a planted twin missing the first word) — gives
-    the n-gram verify kernel a full DuckDB oracle, unlike the
-    LSH-candidate path (whose candidates come from xxhash64 MinHash and
-    are inherently engine-specific)."""
-    corpus, cands = _plant_near_duplicates(
-        tp.load(spark, sf_dir, "documents")
-    )
-    return dedup.ngram_jaccard_pairs(corpus, cands)
-
-
-SQL_NGRAM_JACCARD_PLANTED = """
-WITH base AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0
-),
-corpus AS (
-  SELECT doc_id, text FROM base
-  UNION ALL
-  SELECT doc_id + 10000000,
-         substring(text, instr(text, ' ') + 1)
-  FROM base
-),
-grams AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(length(text) - 2, 1) + 1),
-           i -> substr(text, CAST(i AS INTEGER), 3)
-         )) AS g
-  FROM corpus
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       round(CAST(length(list_intersect(a.g, b.g)) AS DOUBLE)
-             / length(list_distinct(list_concat(a.g, b.g))), 4) AS jaccard
-FROM grams a JOIN grams b ON b.doc_id = a.doc_id + 10000000
-WHERE a.doc_id % 10 = 0 AND a.doc_id < 10000000
-"""
-
-
 SQL_SPAN_PIPELINE = f"""
 WITH dict(tok, curie, score) AS (VALUES {_DICT_VALUES_SQL}),
 spans AS (
@@ -1374,117 +1187,6 @@ SELECT CAST(doc_id AS VARCHAR) AS doc_id,
        CAST(token_start + 1 AS INTEGER) AS token_end,
        tok AS matched_text, curie, CAST(score AS DOUBLE) AS score
 FROM best WHERE rn = 1
-"""
-
-
-def _planted_twin_corpus(spark, sf_dir):
-    """Base docs (doc_id % 10 == 0) plus EXACT-copy twins at
-    doc_id + 10_000_000 — the planted invariant both hash-family oracles
-    assert on: an identical pair MUST collide (all LSH bands equal /
-    simhash hamming 0), which DuckDB can state without replicating
-    xxhash64."""
-    base = (
-        tp.load(spark, sf_dir, "documents")
-        .where((F.col("doc_id") % 10 == 0) & F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    twins = base.select(
-        (F.col("doc_id") + 10000000).alias("doc_id"), "text"
-    )
-    return base.unionByName(twins)
-
-
-def q_minhash_planted(spark, sf_dir):
-    """Planted-twin oracle for the MinHash+LSH near-dup path (VERDICT
-    r02 #3): exact twins must survive the FULL pipeline (signatures →
-    banded candidates → estimate filter) with est_jaccard exactly 1.0.
-    Organic pairs are excluded by the doc_b = doc_a + 10^7 key so the
-    output is engine-independent."""
-    res = dedup.minhash_near_duplicates(_planted_twin_corpus(spark, sf_dir))
-    return res.where(F.col("doc_b") == F.col("doc_a") + 10000000).select(
-        "doc_a", "doc_b", "est_jaccard"
-    )
-
-
-SQL_MINHASH_PLANTED = """
-SELECT doc_id AS doc_a, doc_id + 10000000 AS doc_b,
-       CAST(1.0 AS DOUBLE) AS est_jaccard
-FROM documents WHERE doc_id % 10 = 0 AND text IS NOT NULL
-"""
-
-
-def q_simhash_planted(spark, sf_dir):
-    """Planted-twin oracle for SimHash: identical texts must fingerprint
-    identically, i.e. hamming distance 0 across every planted pair."""
-    fps = dedup.simhash_fingerprints(_planted_twin_corpus(spark, sf_dir))
-    a = fps.where(F.col("doc_id") < 10000000).select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a")
-    )
-    b = fps.where(F.col("doc_id") >= 10000000).select(
-        (F.col("doc_id") - 10000000).alias("doc_a"),
-        F.col("simhash").alias("sh_b"),
-    )
-    return a.join(b, on="doc_a").select(
-        "doc_a",
-        (F.col("doc_a") + 10000000).alias("doc_b"),
-        F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        .cast("bigint")
-        .alias("hamming"),
-    )
-
-
-SQL_SIMHASH_PLANTED = """
-SELECT doc_id AS doc_a, doc_id + 10000000 AS doc_b,
-       CAST(0 AS BIGINT) AS hamming
-FROM documents WHERE doc_id % 10 = 0 AND text IS NOT NULL
-"""
-
-
-def q_near_dup_clusters_planted(spark, sf_dir):
-    """Planted-cluster oracle for the full fuzzy-dedup pipeline
-    (minhash pairs → connected components → canonical keep,
-    operators/dedup.py::near_dup_clusters). The corpus synthesizes
-    pairwise-disjoint texts (every token embeds the doc_id, so
-    cross-document Jaccard is EXACTLY 0) plus two exact twins per
-    original at +1e7/+2e7 — each cluster must be exactly the triple
-    {orig, twin1, twin2} with cluster = orig id and keep only on the
-    original. Size-3 clusters prove the TRANSITIVE pooling (the
-    twin1-twin2 edge alone cannot produce cluster = orig id)."""
-    base = (
-        tp.load(spark, sf_dir, "documents")
-        .where((F.col("doc_id") % 10 == 0) & F.col("text").isNotNull())
-        .select("doc_id")
-    )
-    text = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(30)),
-            lambda i: F.concat(
-                F.lit("w"),
-                F.col("doc_id").cast("string"),
-                F.lit("_"),
-                i.cast("string"),
-            ),
-        ),
-    )
-    orig = base.select("doc_id", text.alias("text"))
-    corpus = orig.unionByName(
-        orig.select((F.col("doc_id") + 10000000).alias("doc_id"), "text")
-    ).unionByName(
-        orig.select((F.col("doc_id") + 20000000).alias("doc_id"), "text")
-    )
-    return dedup.near_dup_clusters(corpus).select("doc_id", "cluster", "keep")
-
-
-SQL_NEAR_DUP_CLUSTERS_PLANTED = """
-WITH base AS (
-  SELECT doc_id FROM documents WHERE doc_id % 10 = 0 AND text IS NOT NULL
-)
-SELECT doc_id, doc_id AS cluster, TRUE AS keep FROM base
-UNION ALL
-SELECT doc_id + 10000000 AS doc_id, doc_id AS cluster, FALSE AS keep FROM base
-UNION ALL
-SELECT doc_id + 20000000 AS doc_id, doc_id AS cluster, FALSE AS keep FROM base
 """
 
 
@@ -1778,27 +1480,24 @@ FROM parents
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # The correctness harness checks the first 50 entries against their
     # DuckDB oracles, so all of them are oracle-backed
-    # (tests/test_driver_window.py pins the list). The rows-only
-    # hash-family queries come last: their outputs are engine-specific
-    # (xxhash64), and each kernel has a planted-twin oracle above.
+    # (tests/test_driver_window.py pins the list). The rows-only ANN
+    # queries come last: their neighbour sets are approximate (the
+    # hyperplane-LSH buckets and IVF probes decide them), so no SQL
+    # restates them, and each index has a planted-twin oracle above.
     # tests/parity.py runs every entry.
     "sssom_with_justification": q_sssom_with_justification,
     "semantic_mappings": q_semantic_mappings,
     "hierarchy_nodes": q_hierarchy_nodes,
-    "ngram_jaccard_planted": q_ngram_jaccard_planted,
     "typedefs": q_typedefs,
     "references": q_references,
     "alts_grouped": q_alts_grouped,
     "provenance_routing": q_provenance_routing,
     "span_pipeline": q_span_pipeline,
-    "minhash_planted": q_minhash_planted,
-    "simhash_planted": q_simhash_planted,
     "term_embeddings": q_term_embeddings,
     "embedding_nearest_terms": q_embedding_nearest_terms,
     "ann_lsh_planted": q_ann_lsh_planted,
     "ann_ivf_planted": q_ann_ivf_planted,
     "embedding_near_dup_planted": q_embedding_near_dup_planted,
-    "near_dup_clusters_planted": q_near_dup_clusters_planted,
     "relation_counters": q_relation_counters,
     "relations_typedef_filtered": q_relations_typedef_filtered,
     "filtered_relations_part_of": q_filtered_relations_part_of,
@@ -1812,12 +1511,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "connected_components": q_connected_components,
     "mention_counts": q_mention_counts,
     "mention_best": q_mention_best,
-    "dedup_exact": q_dedup_exact,
-    "token_stats": q_token_stats,
-    "doc_fingerprint": q_doc_fingerprint,
     "ann_cosine_topk": q_ann_cosine_topk,
     "hierarchy_edges": q_hierarchy_edges,
-    "clean_corpus": q_clean_corpus,
     "normalize_curies": q_normalize_curies,
     "obonet_links": q_obonet_links,
     "skos_triples": q_skos_triples,
@@ -1842,9 +1537,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embedding_near_dup": q_embedding_near_dup,
     "mention_canonicalized": q_mention_canonicalized,
     "token_counts_regex": q_token_counts_regex,
-    "minhash_near_duplicates": q_minhash_near_duplicates,
-    "simhash": q_simhash,
-    "ngram_jaccard": q_ngram_jaccard,
     "ann_cosine_lsh": q_ann_cosine_lsh,
     "ann_cosine_ivf": q_ann_cosine_ivf,
 }
@@ -1866,11 +1558,7 @@ ORACLES: dict[str, str] = {
     "connected_components": SQL_CONNECTED_COMPONENTS,
     "mention_counts": SQL_MENTION_COUNTS,
     "mention_best": SQL_MENTION_BEST,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "token_stats": SQL_TOKEN_STATS,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
     "ann_cosine_topk": SQL_ANN_COSINE_TOPK,
-    "near_dup_clusters_planted": SQL_NEAR_DUP_CLUSTERS_PLANTED,
     "relation_counters": SQL_RELATION_COUNTERS,
     "descendants": SQL_DESCENDANTS,
     "has_ancestor": SQL_HAS_ANCESTOR,
@@ -1889,20 +1577,16 @@ ORACLES: dict[str, str] = {
     "normalize_curies": SQL_NORMALIZE_CURIES,
     "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
     "hierarchy_edges": SQL_HIERARCHY_EDGES,
-    "clean_corpus": SQL_CLEAN_CORPUS,
     "mention_canonicalized": SQL_MENTION_CANONICALIZED,
     "token_counts_regex": SQL_TOKEN_COUNTS_REGEX,
     "sssom_with_justification": SQL_SSSOM_WITH_JUSTIFICATION,
     "semantic_mappings": SQL_SEMANTIC_MAPPINGS,
     "hierarchy_nodes": SQL_HIERARCHY_NODES,
-    "ngram_jaccard_planted": SQL_NGRAM_JACCARD_PLANTED,
     "typedefs": SQL_TYPEDEFS,
     "references": SQL_REFERENCES,
     "alts_grouped": SQL_ALTS_GROUPED,
     "provenance_routing": SQL_PROVENANCE_ROUTING,
     "span_pipeline": SQL_SPAN_PIPELINE,
-    "minhash_planted": SQL_MINHASH_PLANTED,
-    "simhash_planted": SQL_SIMHASH_PLANTED,
     "term_embeddings": SQL_TERM_EMBEDDINGS,
     "embedding_nearest_terms": SQL_EMBEDDING_NEAREST_TERMS,
     "obonet_links": SQL_OBONET_LINKS,

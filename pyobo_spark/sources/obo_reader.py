@@ -23,6 +23,7 @@ repartition; not needed for any real ontology.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Iterator
 from dataclasses import dataclass, field
@@ -31,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..normalize.registry import default_reference, ground_relation
 
 _SYN_RE = re.compile(
     r'^"(?P<text>(?:[^"\\]|\\.)*)"'
@@ -124,6 +127,22 @@ def _split_curie(s: str) -> tuple[str, str]:
         p, i = s.split(":", 1)
         return p, i
     return "", s
+
+
+@functools.lru_cache(maxsize=1024)
+def _ground_pred(pred: str, ontology_prefix: str) -> tuple[str, str]:
+    """Predicate pair of a `relationship:` tag or a treat-xrefs-as-*
+    macro (reference: _obo_parse_identifier). A CURIE splits; an
+    unqualified label grounds to its typedef CURIE ('part_of' →
+    BFO:0000050, ground_relation, identifier_utils/relations/api.py:
+    66-72), and a label ground_relation does not know becomes the
+    ontology's default_reference ('is_conjugate_base_of' in chebi →
+    ('obo', 'chebi#is_conjugate_base_of')). Both parse paths call this,
+    so predicate-CURIE filters see one form."""
+    rp, ri = _split_curie(pred)
+    if rp:
+        return rp, ri
+    return ground_relation(pred) or default_reference(ontology_prefix, pred)
 
 
 def _strip_comment(line: str) -> str:
@@ -412,20 +431,14 @@ def parse_obo_text(text: str) -> ParsedOntology:
             prefix, local = _split_curie(cur["id"])
             parts = value.split()
             if len(parts) >= 2:
-                rp, ri = _split_curie(parts[0])
-                if not rp:
-                    # unqualified predicate label ('has_part') → ground to
-                    # its typedef CURIE (reference: ground_relation,
-                    # identifier_utils/relations/api.py:66-72)
-                    from ..normalize.registry import ground_relation
-
-                    hit = ground_relation(parts[0])
-                    rp, ri = hit if hit else ("", parts[0])
+                # a document without an `ontology:` header falls back to
+                # the term's own prefix for default_reference
+                rp, ri = _ground_pred(parts[0], po.prefix or prefix.lower())
                 tp, ti = _split_curie(parts[1])
                 po.relations.append(
                     {
                         "prefix": prefix.lower(), "identifier": local,
-                        "relation_prefix": rp or parts[0], "relation_id": ri,
+                        "relation_prefix": rp, "relation_id": ri,
                         "target_prefix": tp.lower(), "target_id": ti,
                     }
                 )
@@ -627,35 +640,21 @@ def parse_obo_text(text: str) -> ParsedOntology:
     if po.macros:
         equiv = {p.lower() for p in po.macros.get("equivalent", [])}
         isa = {p.lower() for p in po.macros.get("is_a", [])}
-        def _ground_pred(pred: str) -> tuple[str, str]:
-            """Split a predicate CURIE; ground unqualified labels
-            ('part_of') to their typedef CURIE, as the reference's
-            _obo_parse_identifier does for macro predicates."""
-            rp, ri = _split_curie(pred)
-            if not rp:
-                from ..normalize.registry import ground_relation
-
-                hit = ground_relation(pred)
-                if hit:
-                    return hit
-            # ungrounded bare label: same (label, label) encoding the
-            # direct `relationship:` tag handler uses — the two paths
-            # must agree or predicate-CURIE filters match only one form
-            return rp or pred, ri
-
         # 'PREFIX pred TARGET' → prefix ↦ (pred_ref, target_curie)
         # (reader.py:639-665; malformed lines are skipped, as in plana)
         genus_diff: dict[str, tuple[tuple[str, str], str]] = {}
         for line in po.macros.get("genus-differentia", []):
             parts = line.split()
             if len(parts) == 3:
-                genus_diff[parts[0].lower()] = (_ground_pred(parts[1]), parts[2])
+                genus_diff[parts[0].lower()] = (
+                    _ground_pred(parts[1], po.prefix), parts[2]
+                )
         # 'PREFIX pred' → prefix ↦ pred_ref (reader.py:667-685)
         rel_macro: dict[str, tuple[str, str]] = {}
         for line in po.macros.get("relationship", []):
             parts = line.split()
             if len(parts) == 2:
-                rel_macro[parts[0].lower()] = _ground_pred(parts[1])
+                rel_macro[parts[0].lower()] = _ground_pred(parts[1], po.prefix)
         remaining = []
         for x in po.xrefs:
             txp = x["target_prefix"]

@@ -4,8 +4,8 @@ Running cumulative mention totals per curie across micro-batches: the
 state (a running count + last-batch watermark) lives in Spark's state
 store keyed by curie, so a restart resumes exact totals from the
 checkpoint. This is the engine's template for any cross-batch stateful
-op (streaming dedup seen-sets, per-entity session state, incremental
-counters at 10^12-doc scale).
+op (per-entity session state, incremental counters at 10^12-doc
+scale).
 """
 
 from __future__ import annotations

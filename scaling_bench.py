@@ -7,10 +7,11 @@ in separate JVMs, and report throughput + efficiency:
 
   efficiency = throughput(4N) / (4 * throughput(N))
 
-Job = the corpus-bound stages (grounding mention_counts + token_stats +
-dedup_exact + doc_fingerprint over a corpus replicated REPLICATE× so the
-work is large enough to amortize fixed JVM/stage overhead — scaling
-efficiency is meaningless on sub-second stages).
+Job = the corpus-bound stages (grounding mention_counts, then an inline
+stats leg: per-document token count, content hash and rolling-hash
+fingerprint, grouped by the hash) over a corpus replicated REPLICATE×
+so the work is large enough to amortize fixed JVM/stage overhead —
+scaling efficiency is meaningless on sub-second stages.
 
 Usage: python scaling_bench.py [--n 4] [--fourn 16] [--sf-dir DIR]
 Child mode (internal): python scaling_bench.py --child CPUS SF_DIR REPLICATE

@@ -26,9 +26,10 @@ Replication is key-shifted so the derived KG plane keeps its shape:
   +10^7 convention). For rep>0 the TEXT is perturbed token-wise —
   token t gets a '~rep' suffix when (xxhash64(t)+rep) % 2 = 0 — so any
   two replicas share ≤ ~1/2 of their tokens (Jaccard ≤ ~1/3): the
-  replicas are NOT near-duplicates of each other and the MinHash/LSH
-  bench keeps its organic candidate-pair density instead of exploding
-  quadratically on 10 exact copies of every doc.
+  replicas are NOT near-duplicates of each other, so a query that
+  groups or compares documents by their text sees 10x distinct
+  documents, as a native 10x corpus would, not 10 exact copies of
+  every doc.
 - ``embeddings``: vec_id' = rep*10^9 + vec_id; for rep>0 the vector is
   ROTATED by rep positions — a rotation of a high-dimensional vector
   points in an unrelated direction (near-zero cosine), so ANN/near-dup

@@ -228,6 +228,28 @@ def test_all_four_xref_macros():
     assert any(x["target_prefix"] == "cas" for x in po.xrefs)
 
 
+def test_unknown_predicate_label_same_in_tag_and_macro():
+    """An unqualified predicate label that ground_relation does not know
+    parses to the ontology's default_reference on both paths: the
+    direct `relationship:` tag and the treat-xrefs-as-relationship
+    macro."""
+    po = parse_obo_text(
+        "format-version: 1.4\nontology: chebi\n"
+        "treat-xrefs-as-relationship: MA is_conjugate_base_of\n\n"
+        "[Term]\nid: CHEBI:1\n"
+        "relationship: is_conjugate_base_of CHEBI:2\n"
+        "xref: MA:3\n"
+    )
+    assert sorted(
+        (r["relation_prefix"], r["relation_id"], r["target_prefix"],
+         r["target_id"])
+        for r in po.relations
+    ) == [
+        ("obo", "chebi#is_conjugate_base_of", "chebi", "2"),
+        ("obo", "chebi#is_conjugate_base_of", "ma", "3"),
+    ]
+
+
 def test_comment_strip_respects_quotes():
     """An unescaped '!' inside a quoted def/synonym is NOT a comment
     delimiter (OBO spec: comments start at unquoted, unescaped '!')."""

@@ -1,81 +1,13 @@
 """Unit tests for operators not covered by the oracle-parity suite:
-dedup planted-pair detection, LSH recall vs brute force, hierarchy
-helpers, pipeline checkpoint/resume."""
+LSH recall vs brute force, hierarchy helpers, pipeline
+checkpoint/resume."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from pyobo_spark.operators import dedup, hierarchy, similarity
-
-
-def test_minhash_finds_planted_near_dups(spark):
-    base = [(i, " ".join(f"tok{j + i}" for j in range(40))) for i in range(30)]
-    dups = [(100 + i, " ".join(f"tok{j + i}" for j in range(1, 40)))
-            for i in range(10)]
-    docs = spark.createDataFrame(base + dups, "doc_id long, text string")
-    pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_near_duplicates(docs, threshold=0.5).collect()
-    }
-    planted = {(i, 100 + i) for i in range(10)}
-    found = planted & pairs
-    assert len(found) >= 9  # ≥90% recall on 39/40-token overlap pairs
-
-
-def test_near_dup_clusters_transitive_chain(spark):
-    """The hallmark of CC-based fuzzy dedup: A~B and B~C above threshold
-    pool {A,B,C} into ONE cluster even though the A-C pair itself falls
-    below threshold (so no A-C edge exists). Probed deterministically
-    (minhash is seed-free): est(A,B)=0.8125, est(B,C)=0.7031 >= 0.7,
-    est(A,C)=0.6094 < 0.7. D shares no token — a singleton that must
-    keep itself."""
-    base = [f"t{i}" for i in range(100)]
-    a = " ".join(base[:88] + [f"a{i}" for i in range(12)])
-    b = " ".join(base)
-    c = " ".join([f"c{i}" for i in range(12)] + base[12:])
-    d = " ".join(f"d{i}" for i in range(100))
-    docs = spark.createDataFrame(
-        [(1, a), (2, b), (3, c), (4, d)], "doc_id long, text string"
-    )
-    rows = {
-        r["doc_id"]: (r["cluster"], r["keep"])
-        for r in dedup.near_dup_clusters(docs, threshold=0.7).collect()
-    }
-    assert rows == {
-        1: (1, True),
-        2: (1, False),
-        3: (1, False),
-        4: (4, True),
-    }
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup.dedup_keep_canonical(
-            docs, dedup.near_dup_clusters(docs, threshold=0.7)
-        ).collect()
-    )
-    assert kept == [1, 4]
-
-
-def test_exact_duplicates(spark):
-    docs = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, "other")],
-        "doc_id long, text string",
-    )
-    out = dedup.exact_duplicates(docs).collect()
-    assert len(out) == 1
-    assert out[0]["keep_id"] == 1 and out[0]["n_dups"] == 2
-
-
-def test_simhash_identical_texts_equal(spark):
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "x y z")],
-        "doc_id long, text string",
-    )
-    fps = {r["doc_id"]: r["simhash"] for r in
-           dedup.simhash_fingerprints(docs).collect()}
-    assert fps[1] == fps[2] != fps[3]
+from pyobo_spark.operators import hierarchy, similarity
 
 
 def test_lsh_topk_recall_vs_bruteforce(spark, sf_dir):

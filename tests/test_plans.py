@@ -117,37 +117,6 @@ def test_hierarchy_edges_single_relations_scan(spark, sf_dir):
     assert n_lineitem_scans <= 2, plan  # forward/reverse split allowed
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Same-bucketed tables join with ZERO Exchange (the co-located-join
-    strategy for repeated corpus-plane joins at 100 TB)."""
-    from pyobo_spark.operators import bucketing
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    stats = docs.selectExpr("doc_id", "length(text) AS n_chars")
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # at test scale the planner would broadcast the small side and
-        # skip bucketing entirely; disable broadcast to exercise the
-        # co-located SortMergeJoin path that matters at corpus scale
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        bucketing.write_bucketed(docs, "b_docs", ("doc_id",), n_buckets=4)
-        bucketing.write_bucketed(stats, "b_stats", ("doc_id",), n_buckets=4)
-        joined = bucketing.bucketed_join(
-            spark, "b_docs", "b_stats", on=["doc_id"]
-        )
-        plan = _formatted_plan(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        assert joined.count() == docs.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS b_docs")
-        spark.sql("DROP TABLE IF EXISTS b_stats")
-
-
 def test_serialization_sinks_are_map_only(spark):
     """SKOS / OBO-Graph / OFN / term-embedding exports promise a
     scan→project→union plan with ZERO Exchange — the property that lets

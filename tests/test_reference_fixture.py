@@ -97,6 +97,20 @@ def test_unqualified_relationship_predicate(po):
     assert hp[0]["target_id"] == "17051"
 
 
+def test_unknown_unqualified_predicate_is_default_reference(po):
+    # 'relationship: is_conjugate_base_of CHEBI:29228' on CHEBI:17051 —
+    # a label ground_relation does not know becomes PyOBO's
+    # default_reference in the ontology's own space
+    from pyobo_spark.api import default_reference
+
+    rel = [r for r in po.relations if r["target_id"] == "29228"]
+    assert [(r["identifier"], r["relation_prefix"], r["relation_id"])
+            for r in rel] == [("17051", "obo", "chebi#is_conjugate_base_of")]
+    assert default_reference("chebi", "is_conjugate_base_of") == (
+        "obo", "chebi#is_conjugate_base_of"
+    )
+
+
 def test_spark_exports_roundtrip(spark, po):
     """Feed the parsed fixture through the Spark export operators."""
     from pyobo_spark.operators import exports
