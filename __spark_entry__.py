@@ -5,8 +5,7 @@ entry(spark)    — flagship KG-construction query over sf0.001: grounds the
                   materializes (subj, pred, obj) triples unioned with
                   typedef-filtered ontology edges.
 queries()       — one callable per implemented SURVEY.md §2 operator.
-oracle_sql()    — DuckDB twins (omitted for hash-family/UDF-internal ops,
-                  which get rows-only checks).
+oracle_sql()    — one DuckDB twin per query.
 """
 
 from __future__ import annotations

@@ -43,7 +43,6 @@ HEADLINE = [
     "alt_upgrade",              # broadcast dim join
     "sssom_mappings",
     "ann_cosine_topk",          # brute-force cosine top-k
-    "ann_cosine_lsh",           # multi-table LSH ANN
     "descendants",              # reverse BFS closure
     "hierarchy_edges",          # predicate-union edge set
     "nodes_export",             # Neo4j nodes artifact (groupBy collect)

@@ -1192,7 +1192,9 @@ class OntologyCatalog:
         rel_ok = exports.relations_typedef_filtered(
             self.relations.where(F.col("prefix") == prefix), typedefs
         )
-        return exports.edges(rel_ok, self.parents, prefix=prefix)
+        return exports.edges(
+            rel_ok, self.parents.where(F.col("child_prefix") == prefix)
+        )
 
     # ---- grounding / NER (pyobo.ground, ner/) ----
     def get_literal_mappings_df(

@@ -30,7 +30,9 @@ Scale notes:
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Iterator
+from itertools import repeat
 
 import pandas as pd
 import pyarrow as pa
@@ -195,53 +197,35 @@ COUNT_SCHEMA = T.StructType(
 def match_mention_counts(
     text_spans: DataFrame, matcher_broadcast, fold: bool = True
 ) -> DataFrame:
-    """Map-side-combined mention counting: the UDF emits (doc_id, curie,
-    partial_count) instead of one row per occurrence — the partial
-    aggregation happens INSIDE the Arrow batch (classic map-side combine),
-    so the shuffle carries ~|distinct (doc, curie)| rows, not |mentions|.
-    Finish with groupBy(doc_id, curie).sum. Identical results to
-    match_text_spans + groupBy count, at a fraction of the transfer and
-    shuffle volume — this is the hot path for corpus-scale counter
-    stages (db_output_helper counters, getters.py:477-571)."""
-    partial = match_mention_counts_partial(text_spans, matcher_broadcast, fold)
-    return partial.groupBy("doc_id", "curie").agg(F.sum("n").alias("n_mentions"))
-
-
-def match_mention_counts_partial(
-    text_spans: DataFrame, matcher_broadcast, fold: bool = True
-) -> DataFrame:
-    """The map-only partial stage of match_mention_counts: (doc_id,
-    curie, n) with per-document combine inside the Arrow batch and NO
-    aggregation — streaming stateful consumers (applyInPandasWithState)
-    take this directly, since Structured Streaming forbids an agg before
-    the stateful operator."""
+    """Map-side-combined mention counting over (doc_id, text) rows: the
+    UDF runs :func:`match_rows` (every candidate, no best-per-site) and
+    emits (doc_id, curie, partial_count) instead of one row per
+    occurrence — the partial aggregation happens INSIDE the Arrow batch
+    (classic map-side combine), so the shuffle carries ~|distinct (doc,
+    curie)| rows, not |mentions|. Finish with groupBy(doc_id, curie).sum.
+    Identical results to match_text_spans + groupBy count, at a fraction
+    of the transfer and shuffle volume — this is the hot path for
+    corpus-scale counter stages (db_output_helper counters,
+    getters.py:477-571)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ac = matcher_broadcast.value
-        search = ac.search
-        do_fold = fold
         for pdf in batches:
-            doc_ids: list = []
-            curies: list = []
-            ns: list = []
-            for doc_id, text in zip(
-                pdf["doc_id"].tolist(), pdf["text"].tolist()
-            ):
-                if not text:
-                    continue
-                tokens = (fold_text(text) if do_fold else text).split(" ")
-                cnt: dict[str, int] = {}
-                for _, _, curie, _ in search(tokens):
-                    cnt[curie] = cnt.get(curie, 0) + 1
-                if cnt:
-                    doc_ids.extend([doc_id] * len(cnt))
-                    curies.extend(cnt.keys())
-                    ns.extend(cnt.values())
-            yield pd.DataFrame({"doc_id": doc_ids, "curie": curies, "n": ns})
+            rows = zip(pdf["doc_id"].tolist(), repeat(0), pdf["text"].tolist())
+            cols = match_rows(rows, ac, fold, best_per_site=False)
+            counts = Counter(zip(cols["doc_id"], cols["curie"]))
+            yield pd.DataFrame(
+                {
+                    "doc_id": [doc_id for doc_id, _ in counts],
+                    "curie": [curie for _, curie in counts],
+                    "n": list(counts.values()),
+                }
+            )
 
-    return text_spans.select(
+    partial = text_spans.select(
         F.col("doc_id").cast("string"), "text"
     ).mapInPandas(run, schema=COUNT_SCHEMA)
+    return partial.groupBy("doc_id", "curie").agg(F.sum("n").alias("n_mentions"))
 
 
 def best_match(mentions: DataFrame) -> DataFrame:

@@ -18,8 +18,8 @@ call changes one expression.
 
 Scale notes: embedding computation is map-only (no shuffle); similarity
 lookups broadcast the (tiny) query side and reuse
-``similarity.cosine_topk_bruteforce`` / ``cosine_topk_lsh`` so the
-corpus side is never collected.
+``similarity.cosine_topk_bruteforce`` so the corpus side is never
+collected.
 """
 
 from __future__ import annotations

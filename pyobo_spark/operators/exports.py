@@ -195,10 +195,12 @@ def filtered_xrefs(xrefs: DataFrame, target_prefix: str) -> DataFrame:
     ).select("subject_id", "object_id")
 
 
-def edges(relations_ok: DataFrame, parents: DataFrame, prefix: str) -> DataFrame:
+def edges(relations_ok: DataFrame, parents: DataFrame) -> DataFrame:
     """Triple materialization — union of predicate-tagged selects
     (struct_utils.py:768-785: relations ∪ parents ∪ ...). Each leg is a
-    scan-project; the union is free (no shuffle)."""
+    scan-project; the union is free (no shuffle). Every row of both
+    inputs becomes a triple: a caller scoped to one ontology filters
+    its inputs first."""
     rel_edges = relations_ok.select(
         F.concat(F.col("prefix"), F.lit(":"), F.col("identifier")).alias(
             "subject_curie"
@@ -210,7 +212,7 @@ def edges(relations_ok: DataFrame, parents: DataFrame, prefix: str) -> DataFrame
             "object_curie"
         ),
     )
-    isa_edges = parents.where(F.col("child_prefix") == prefix).select(
+    isa_edges = parents.select(
         F.concat("child_prefix", F.lit(":"), "child").alias("subject_curie"),
         F.lit("rdfs:subClassOf").alias("predicate_curie"),
         F.concat("parent_prefix", F.lit(":"), "parent").alias("object_curie"),

@@ -1,24 +1,17 @@
-"""Similarity search over an embedding column (array<float>) —
-brute-force cosine top-k baseline + an LSH-bucketed scale path.
+"""Similarity search over an embedding column (array<float>): exact
+brute-force cosine top-k, PyOBO's pairwise cosine over term embeddings.
 
-Brute force: broadcast the (small) query set, JVM-side arithmetic only —
+Broadcast the (small) query set, JVM-side arithmetic only —
 F.zip_with/F.aggregate compile to whole-stage-codegen'd expressions, no
 Python in the hot path. At 100 TB the corpus side streams through a
 map-only stage; the per-query top-k is a single shuffle on query_id
 bounded by k × n_queries.
-
-LSH path: random-hyperplane (sign) signatures with a fixed seed →
-bucket-join; probes only matching buckets, trading recall for a
-~(2^bits)× candidate reduction.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _norm_expr(vec: str):
@@ -106,242 +99,6 @@ def cosine_topk_bruteforce(
     scored = (
         c.join(F.broadcast(q))
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", dot / (F.col("qnorm") * F.col("cnorm")))
-    )
-    return _topk_per_query(scored, k)
-
-
-def hyperplane_signatures(
-    embeddings: DataFrame,
-    n_bits: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH signature (int bucket id) per vector.
-
-    Hyperplanes are generated deterministically on the driver and inlined
-    as literal arrays → the sign computation stays JVM-side (no UDF)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_bits, dim))
-    sig = None
-    for b in range(n_bits):
-        lit_plane = F.array(*[F.lit(float(x)) for x in planes[b]])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), lit_plane, lambda a, p: a.cast("double") * p),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(dot > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sig = bit if sig is None else (sig + bit)
-    return embeddings.select(
-        F.col(id_col), F.col(vec_col), sig.alias("bucket")
-    )
-
-
-def multitable_signatures(
-    embeddings: DataFrame,
-    n_bits: int = 4,
-    n_tables: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All L hash-table signatures in ONE vectorized Arrow pass:
-    batch matrix multiply (n_rows × dim) · (dim × L*b) in numpy, then
-    bit-pack per table. Replaces L×b separate JVM aggregate expressions,
-    whose literal-array plan trees were the bottleneck. Returns
-    (vec_id, table, bucket)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_tables * n_bits))
-    weights = (1 << np.arange(n_bits, dtype=np.int64))
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": [], "table": [], "bucket": []})
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            bits = (mat @ planes > 0).reshape(len(pdf), n_tables, n_bits)
-            buckets = (bits * weights).sum(axis=2)  # (n_rows, n_tables)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf[id_col].to_numpy(), n_tables),
-                    "table": np.tile(np.arange(n_tables), n),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
-
-    return embeddings.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        run,
-        schema=T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("table", T.IntegerType()),
-                T.StructField("bucket", T.LongType()),
-            ]
-        ),
-    )
-
-
-def ivf_assignments(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    dim: int = 64,
-    lloyd_iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """IVF index build: deterministic seed centroids (the n_centroids
-    lowest vec_ids), optionally refined with Lloyd iterations where the
-    ASSIGN step is a distributed numpy Arrow pass and the UPDATE step is
-    a posexplode + groupBy(centroid, dim) mean — both shuffle-bounded by
-    n_centroids × dim, never by corpus size.
-
-    Returns (assignments DataFrame(vec_id, centroid_id), centroids np.ndarray).
-    """
-    seed_rows = (
-        embeddings.orderBy(id_col).limit(n_centroids).select(vec_col).collect()
-    )
-    centroids = np.asarray([list(r[0]) for r in seed_rows], dtype=np.float64)
-    centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
-
-    def assign_fn(cents: np.ndarray):
-        def run(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    yield pd.DataFrame({"vec_id": [], "centroid_id": []})
-                    continue
-                mat = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-                cid = (mat @ cents.T).argmax(axis=1)
-                yield pd.DataFrame(
-                    {"vec_id": pdf[id_col].to_numpy(), "centroid_id": cid}
-                )
-        return run
-
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("centroid_id", T.IntegerType()),
-        ]
-    )
-    assigns = None
-    for it in range(max(lloyd_iters, 0) + 1):
-        assigns = embeddings.select(id_col, vec_col).mapInPandas(
-            assign_fn(centroids.copy()), schema=out_schema
-        )
-        if it == max(lloyd_iters, 0):
-            break
-        # UPDATE: mean per (centroid, dim) — bounded shuffle
-        joined = embeddings.select(id_col, vec_col).join(assigns, on="vec_id")
-        dims = joined.select(
-            "centroid_id", F.posexplode(vec_col).alias("d", "x")
-        )
-        means = (
-            dims.groupBy("centroid_id", "d")
-            .agg(F.avg(F.col("x").cast("double")).alias("m"))
-            .collect()
-        )
-        for r in means:
-            centroids[r["centroid_id"], r["d"]] = r["m"]
-        norms = np.linalg.norm(centroids, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        centroids = centroids / norms
-    return assigns, centroids
-
-
-def cosine_topk_ivf(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """IVF search: probe only the n_probe closest centroid buckets per
-    query, exact cosine within them. The candidate join key is
-    centroid_id (bounded fan-out n_probe × bucket size)."""
-    assigns, centroids = ivf_assignments(
-        embeddings, n_centroids=n_centroids, dim=dim
-    )
-    spark = embeddings.sparkSession
-    qrows = queries.select("vec_id", "embedding").collect()
-    probe_rows = []
-    for r in qrows:
-        v = np.asarray(r["embedding"], dtype=np.float64)
-        v = v / (np.linalg.norm(v) or 1.0)
-        top = np.argsort(-(centroids @ v))[:n_probe]
-        probe_rows.extend((int(r["vec_id"]), int(c)) for c in top)
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, centroid_id int"
-    )
-    cand = (
-        assigns.join(F.broadcast(probes), on="centroid_id")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    c = _with_norm(
-        embeddings.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
-        ),
-        "cvec",
-    ).withColumnRenamed("_norm", "cnorm")
-    q = _with_norm(
-        queries.select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-        ),
-        "qvec",
-    ).withColumnRenamed("_norm", "qnorm")
-    dot = _dot_expr("qvec", "cvec")
-    scored = (
-        cand.join(c, on="neighbor_id").join(F.broadcast(q), on="query_id")
-        .withColumn("cosine", dot / (F.col("qnorm") * F.col("cnorm")))
-    )
-    return _topk_per_query(scored, k)
-
-
-def cosine_topk_lsh(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_bits: int = 4,
-    n_tables: int = 8,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate top-k via MULTI-TABLE hyperplane LSH: L independent
-    hash tables; candidates = union of per-table bucket matches (standard
-    recall amplification: hit prob 1-(1-p^b)^L). The candidate join key is
-    (table, bucket) — high cardinality, skew-free; exact cosine is then
-    computed only on candidates."""
-    c = embeddings.select(F.col("vec_id").alias("neighbor_id"),
-                          F.col("embedding").alias("cvec"))
-    q = queries.select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qvec"))
-    c_sig = multitable_signatures(
-        embeddings, n_bits=n_bits, n_tables=n_tables, dim=dim
-    ).withColumnRenamed("vec_id", "neighbor_id")
-    q_sig = multitable_signatures(
-        queries, n_bits=n_bits, n_tables=n_tables, dim=dim
-    ).withColumnRenamed("vec_id", "query_id")
-    cand = (
-        c_sig.join(F.broadcast(q_sig), on=["table", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    c = _with_norm(c, "cvec").withColumnRenamed("_norm", "cnorm")
-    q = _with_norm(q, "qvec").withColumnRenamed("_norm", "qnorm")
-    dot = _dot_expr("qvec", "cvec")
-    scored = (
-        cand.join(c, on="neighbor_id").join(F.broadcast(q), on="query_id")
         .withColumn("cosine", dot / (F.col("qnorm") * F.col("cnorm")))
     )
     return _topk_per_query(scored, k)

@@ -129,7 +129,6 @@ def build_triples(
     spark: SparkSession,
     tables: dict[str, DataFrame],
     mentions_canonical: DataFrame,
-    prefix: str = "fixo",
 ) -> DataFrame:
     """Stage body: mention triples ∪ typedef-filtered ontology edges."""
     typedefs = spark.createDataFrame(
@@ -137,7 +136,7 @@ def build_triples(
         "typedef_prefix string, typedef_id string",
     )
     rel_ok = exports.relations_typedef_filtered(tables["relations"], typedefs)
-    onto_edges = exports.edges(rel_ok, tables["parents"], prefix=prefix)
+    onto_edges = exports.edges(rel_ok, tables["parents"])
     mention_triples = matcher.mention_triples(
         mentions_canonical.select("doc_id", F.col("canonical").alias("curie"))
     )

@@ -214,7 +214,7 @@ def q_edges(spark, sf_dir):
     rel_ok = exports.relations_typedef_filtered(
         tp.relations_raw(spark, sf_dir), _typedefs_df(spark)
     )
-    return exports.edges(rel_ok, tp.parents(spark, sf_dir), prefix="fixp")
+    return exports.edges(rel_ok, tp.parents(spark, sf_dir))
 
 
 SQL_EDGES = f"""
@@ -1088,20 +1088,6 @@ WHERE string_split(object_id, ':')[1] NOT IN
 """
 
 
-# ----- non-SQL-expressible ops (driver records rows-only checks) -----------
-
-def q_ann_cosine_lsh(spark, sf_dir):
-    emb = tp.load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 8)
-    return similarity.cosine_topk_lsh(emb, queries, k=5)
-
-
-def q_ann_cosine_ivf(spark, sf_dir):
-    emb = tp.load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 8)
-    return similarity.cosine_topk_ivf(emb, queries, k=5, n_probe=4)
-
-
 def q_span_pipeline(spark, sf_dir):
     """The north-rule interleaved-spans path at benchmark scale: derive a
     spans corpus from the flat documents table (3 text spans per doc,
@@ -1336,60 +1322,6 @@ FROM embeddings WHERE vec_id % 10 = 0 AND vec_id < 10000000
 """
 
 
-def _planted_embedding_corpus(spark, sf_dir):
-    emb = tp.load(spark, sf_dir, "embeddings")
-    base = emb.where(
-        (F.col("vec_id") % 10 == 0) & (F.col("vec_id") < 10000000)
-    ).select("vec_id", "embedding")
-    twins = base.select(
-        (F.col("vec_id") + 10000000).alias("vec_id"), "embedding"
-    )
-    return base, base.unionByName(twins)
-
-
-def q_ann_lsh_planted(spark, sf_dir):
-    """Planted-twin oracle for the multi-table hyperplane LSH path:
-    an exact vector copy shares every table's bucket, so the FULL
-    pipeline (signatures → bucket join → exact re-rank) must return it
-    at rank 1 with cosine 1.0 for every planted query."""
-    base, corpus = _planted_embedding_corpus(spark, sf_dir)
-    res = similarity.cosine_topk_lsh(corpus, base, k=3)
-    return res.where(
-        F.col("neighbor_id") == F.col("query_id") + 10000000
-    ).select(
-        "query_id", "neighbor_id", "cosine",
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-
-
-SQL_ANN_LSH_PLANTED = """
-SELECT vec_id AS query_id, vec_id + 10000000 AS neighbor_id,
-       CAST(1.0 AS DOUBLE) AS cosine, CAST(1 AS BIGINT) AS rank
-FROM embeddings WHERE vec_id % 10 = 0 AND vec_id < 10000000
-"""
-
-
-def q_ann_ivf_planted(spark, sf_dir):
-    """Planted-twin oracle for the IVF path: an exact copy lands in the
-    query's own centroid bucket (always probed), so retrieval at rank 1
-    with cosine 1.0 is guaranteed through coarse quantization."""
-    base, corpus = _planted_embedding_corpus(spark, sf_dir)
-    res = similarity.cosine_topk_ivf(corpus, base, k=3, n_probe=2)
-    return res.where(
-        F.col("neighbor_id") == F.col("query_id") + 10000000
-    ).select(
-        "query_id", "neighbor_id", "cosine",
-        F.col("rank").cast("bigint").alias("rank"),
-    )
-
-
-SQL_ANN_IVF_PLANTED = """
-SELECT vec_id AS query_id, vec_id + 10000000 AS neighbor_id,
-       CAST(1.0 AS DOUBLE) AS cosine, CAST(1 AS BIGINT) AS rank
-FROM embeddings WHERE vec_id % 10 = 0 AND vec_id < 10000000
-"""
-
-
 def q_obonet_links(spark, sf_dir):
     """to_obonet link list (struct.py:1550-1561): is_a + relationship
     edges as CURIE triples (operators/obonet_export.py)."""
@@ -1479,12 +1411,8 @@ FROM parents
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # The correctness harness checks the first 50 entries against their
-    # DuckDB oracles, so all of them are oracle-backed
-    # (tests/test_driver_window.py pins the list). The rows-only ANN
-    # queries come last: their neighbour sets are approximate (the
-    # hyperplane-LSH buckets and IVF probes decide them), so no SQL
-    # restates them, and each index has a planted-twin oracle above.
-    # tests/parity.py runs every entry.
+    # DuckDB oracles (tests/test_driver_window.py pins the list). Every
+    # entry has an oracle in ORACLES; tests/parity.py runs them all.
     "sssom_with_justification": q_sssom_with_justification,
     "semantic_mappings": q_semantic_mappings,
     "hierarchy_nodes": q_hierarchy_nodes,
@@ -1495,8 +1423,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "span_pipeline": q_span_pipeline,
     "term_embeddings": q_term_embeddings,
     "embedding_nearest_terms": q_embedding_nearest_terms,
-    "ann_lsh_planted": q_ann_lsh_planted,
-    "ann_ivf_planted": q_ann_ivf_planted,
     "embedding_near_dup_planted": q_embedding_near_dup_planted,
     "relation_counters": q_relation_counters,
     "relations_typedef_filtered": q_relations_typedef_filtered,
@@ -1537,8 +1463,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embedding_near_dup": q_embedding_near_dup,
     "mention_canonicalized": q_mention_canonicalized,
     "token_counts_regex": q_token_counts_regex,
-    "ann_cosine_lsh": q_ann_cosine_lsh,
-    "ann_cosine_ivf": q_ann_cosine_ivf,
 }
 
 ORACLES: dict[str, str] = {
@@ -1592,6 +1516,4 @@ ORACLES: dict[str, str] = {
     "obonet_links": SQL_OBONET_LINKS,
     "skos_triples": SQL_SKOS_TRIPLES,
     "embedding_near_dup_planted": SQL_EMBEDDING_NEAR_DUP_PLANTED,
-    "ann_lsh_planted": SQL_ANN_LSH_PLANTED,
-    "ann_ivf_planted": SQL_ANN_IVF_PLANTED,
 }

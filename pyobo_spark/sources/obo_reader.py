@@ -131,14 +131,15 @@ def _split_curie(s: str) -> tuple[str, str]:
 
 @functools.lru_cache(maxsize=1024)
 def _ground_pred(pred: str, ontology_prefix: str) -> tuple[str, str]:
-    """Predicate pair of a `relationship:` tag or a treat-xrefs-as-*
-    macro (reference: _obo_parse_identifier). A CURIE splits; an
-    unqualified label grounds to its typedef CURIE ('part_of' →
+    """Predicate pair of a `relationship:` tag, an `intersection_of:`
+    differentia or a treat-xrefs-as-* macro (reference:
+    _obo_parse_identifier). A CURIE splits; an unqualified label
+    grounds to its typedef CURIE ('part_of' →
     BFO:0000050, ground_relation, identifier_utils/relations/api.py:
     66-72), and a label ground_relation does not know becomes the
     ontology's default_reference ('is_conjugate_base_of' in chebi →
-    ('obo', 'chebi#is_conjugate_base_of')). Both parse paths call this,
-    so predicate-CURIE filters see one form."""
+    ('obo', 'chebi#is_conjugate_base_of')). Every parse path calls
+    this, so predicate-CURIE filters see one form."""
     rp, ri = _split_curie(pred)
     if rp:
         return rp, ri
@@ -452,7 +453,7 @@ def parse_obo_text(text: str) -> ParsedOntology:
                     rp, ri = "", ""
                     tp_, ti = _split_curie(parts[0])
                 else:
-                    rp, ri = _split_curie(parts[0])
+                    rp, ri = _ground_pred(parts[0], po.prefix or prefix.lower())
                     tp_, ti = _split_curie(parts[1])
                 po.intersections.append(
                     {"prefix": prefix.lower(), "identifier": local,

@@ -7,11 +7,10 @@ in separate JVMs, and report throughput + efficiency:
 
   efficiency = throughput(4N) / (4 * throughput(N))
 
-Job = the corpus-bound stages (grounding mention_counts, then an inline
-stats leg: per-document token count, content hash and rolling-hash
-fingerprint, grouped by the hash) over a corpus replicated REPLICATE×
-so the work is large enough to amortize fixed JVM/stage overhead —
-scaling efficiency is meaningless on sub-second stages.
+Job = the corpus-bound grounding stage (mention counts through the
+matcher kernel) over a corpus replicated REPLICATE× so the work is large
+enough to amortize fixed JVM/stage overhead — scaling efficiency is
+meaningless on sub-second stages.
 
 Usage: python scaling_bench.py [--n 4] [--fourn 16] [--sf-dir DIR]
 Child mode (internal): python scaling_bench.py --child CPUS SF_DIR REPLICATE
@@ -113,7 +112,7 @@ def child(cpus: int, sf_dir: str, replicate: int) -> None:
      .mapInPandas(_warm, schema="id long, text string")
      .write.format("noop").mode("overwrite").save())
 
-    def run_once() -> tuple[float, float, float, float, float]:
+    def run_once() -> tuple[float, float, float]:
         st0 = _steal_ticks()
         canary = _canary_gbps()
         t0 = time.time()
@@ -124,35 +123,17 @@ def child(cpus: int, sf_dir: str, replicate: int) -> None:
         )
         m = matcher.match_mention_counts(spans, bc, fold=False)
         m.write.format("noop").mode("overwrite").save()
-        t1 = time.time()
-
-        toks = F.split(F.col("text"), " ")
-        stats = corpus.select(
-            "doc_id",
-            F.size(toks).alias("n_tokens"),
-            F.md5("text").alias("h"),
-            F.aggregate(
-                toks, F.lit(0).cast("long"),
-                lambda acc, t: (acc * 31 + (F.length(t) + F.ascii(t)).cast("long"))
-                % F.lit(2147483648).cast("long"),
-            ).alias("fp"),
-        )
-        stats.groupBy("h").count().write.format("noop").mode("overwrite").save()
-        t2 = time.time()
-        return (t2 - t0, t1 - t0, t2 - t1,
-                _steal_pct(st0, _steal_ticks()), canary)
+        return (time.time() - t0, _steal_pct(st0, _steal_ticks()), canary)
 
     # best-of-3: the first runs pay JVM JIT warmup, and the sandbox host
     # oversubscribes vCPUs (nonzero steal time) so single samples are
     # unreliable; min-of-R reflects achievable steady-state throughput
     runs = [run_once() for _ in range(3)]
-    wall, g_sec, s_sec, steal, canary = min(runs, key=lambda r: r[0])
+    wall, steal, canary = min(runs, key=lambda r: r[0])
     print(json.dumps({"cpus": cpus, "wall_sec": round(wall, 3),
-                      "grounding_sec": round(g_sec, 3),
-                      "stats_sec": round(s_sec, 3),
                       "all_walls": [round(r[0], 3) for r in runs],
-                      "all_steal_pct": [r[3] for r in runs],
-                      "all_canary_gbps": [r[4] for r in runs],
+                      "all_steal_pct": [r[1] for r in runs],
+                      "all_canary_gbps": [r[2] for r in runs],
                       "steal_pct": steal,
                       "canary_gbps": canary,
                       "n_docs": n_docs,

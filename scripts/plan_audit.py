@@ -29,12 +29,11 @@ sys.path.insert(0, _REPO)
 
 # (query, pattern) pairs adjudicated as intentional, with the reason.
 # Verified minimal: stripping this set flags EXACTLY these three and
-# nothing else (the LSH/banded/planted kernels all plan as equi-joins).
+# nothing else (the planted kernels all plan as equi-joins).
 ALLOWED = {
-    # brute-force cosine baselines: the nested loop IS the contract —
-    # a broadcast query side (bounded small by construction, see
-    # similarity.py's max_collect guard) probed against every corpus
-    # row; the LSH/IVF variants are the scale path
+    # exact cosine (PyOBO's pairwise similarity): the nested loop IS the
+    # contract — a broadcast query side, small by construction, probed
+    # against every corpus row
     ("ann_cosine_topk", "BroadcastNestedLoopJoin"),
     ("embedding_nearest_terms", "BroadcastNestedLoopJoin"),
     ("embedding_near_dup", "BroadcastNestedLoopJoin"),

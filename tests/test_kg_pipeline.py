@@ -372,3 +372,39 @@ def test_stage_manifest_contract(spark, tables, tmp_path, monkeypatch):
         assert meta["n_rows"] == fresh[name]["n_rows"], name
         assert meta["counters"] == fresh[name]["counters"], name
         assert 0 < len(meta["sample"]) <= 10
+
+
+def test_staged_build_keeps_every_ontologys_hierarchy(spark, tmp_path):
+    """A build from a real OBO file (not the generator's fixo) emits one
+    rdfs:subClassOf triple per parents row: the triples stage must not
+    scope the hierarchy to a default prefix."""
+    from pathlib import Path
+
+    from pyobo_spark import schemas
+    from pyobo_spark.sources.obo_reader import parse_obo_files
+
+    obo = (Path(__file__).parent / "resources" / "test_chebi.obo").read_text()
+    tables = parse_obo_files(spark, [("chebi", obo)])
+    tables["documents"] = spark.createDataFrame(
+        [("d1", [("text", "an ion is a molecular entity", None, 0)])],
+        schemas.DOCUMENTS,
+    )
+    root = str(tmp_path / "chebi_build")
+    runner = kg_build.run_kg_pipeline_staged(spark, tables, root)
+    triples = spark.read.parquet(f"{runner.results[-1].path}/data")
+
+    sub_class = {
+        (r["subject_curie"], r["object_curie"])
+        for r in triples.where(F.col("predicate_curie") == "rdfs:subClassOf")
+        .collect()
+    }
+    parents = {
+        (f"{r['child_prefix']}:{r['child']}", f"{r['parent_prefix']}:{r['parent']}")
+        for r in tables["parents"].collect()
+    }
+    assert len(parents) == 22
+    assert sub_class == parents
+    assert ("chebi:24870", "chebi:23367") in sub_class  # ion → molecular entity
+    assert {o for s, o in sub_class if s == "chebi:24867"} == {
+        "chebi:24870", "chebi:33238"
+    }  # monoatomic ion → ion, monoatomic entity

@@ -250,6 +250,25 @@ def test_unknown_predicate_label_same_in_tag_and_macro():
     ]
 
 
+def test_intersection_differentia_label_grounds_like_relationship():
+    """An unqualified differentia predicate grounds the way a
+    `relationship:` line does: 'part_of' is BFO:0000050 on both, so an
+    intersections filter on BFO:0000050 sees hand-written differentiae."""
+    po = parse_obo_text(
+        "[Term]\nid: GO:1\n"
+        "intersection_of: GO:2\n"
+        "intersection_of: part_of GO:3\n"
+        "relationship: part_of GO:3\n"
+    )
+    assert [
+        (i["relation_prefix"], i["relation_id"], i["target_prefix"],
+         i["target_id"])
+        for i in po.intersections
+    ] == [("", "", "go", "2"), ("BFO", "0000050", "go", "3")]
+    assert [(r["relation_prefix"], r["relation_id"]) for r in po.relations] \
+        == [("BFO", "0000050")]
+
+
 def test_comment_strip_respects_quotes():
     """An unescaped '!' inside a quoted def/synonym is NOT a comment
     delimiter (OBO spec: comments start at unquoted, unescaped '!')."""

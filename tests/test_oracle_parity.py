@@ -21,14 +21,3 @@ def test_oracle_parity(name, spark, sf_dir, con):
     ok, msg = compare(df, con, Q.ORACLES[name])
     assert ok, msg
 
-
-@pytest.mark.parametrize(
-    "name", sorted(set(Q.QUERIES) - set(Q.ORACLES))
-)
-def test_rows_only_queries_execute(name, spark, sf_dir):
-    """Rows-only queries (no SQL twin) must still RUN end-to-end — a
-    crash regression in an un-oracled kernel must not ship silently
-    (r03 review: rotated-out rows-only entries had no automated
-    execution)."""
-    n = Q.QUERIES[name](spark, sf_dir).count()
-    assert n >= 0

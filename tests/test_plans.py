@@ -473,36 +473,6 @@ def test_resumed_stage_reads_back_without_a_job(spark, tmp_path):
     assert inferred.count() == 50
 
 
-def test_ann_cosine_lsh_shuffle_budget(spark, sf_dir):
-    """Multi-table hyperplane LSH must shuffle on exactly two HASH
-    exchanges — candidate dedup (distinct) and the per-query top-k
-    window (skew-safe via WindowGroupLimit's map-side rank pruning).
-    Every join stays broadcast (query and signature sides are small by
-    construction): a third hash Exchange
-    means a candidate join stopped broadcasting; a CartesianProduct
-    means the bucket join degenerated to all-pairs. The top-k window
-    must also be preceded by WindowGroupLimit so only k rows per query
-    per map partition cross the exchange."""
-    from pyobo_spark import queries as Q
-
-    plan = _formatted_plan(Q.QUERIES["ann_cosine_lsh"](spark, sf_dir))
-    assert plan.count("Arguments: hashpartitioning") == 2, plan
-    assert plan.count("Arguments: roundrobinpartitioning") <= 1, plan
-    assert "WindowGroupLimit" in plan, plan
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-@pytest.mark.parametrize("name", ["ann_cosine_lsh", "ann_cosine_ivf"])
-def test_ann_queries_have_no_round_robin_exchange(spark, sf_dir, name):
-    """The ANN queries read the embeddings as scanned: a round-robin
-    spread of the corpus adds an exchange that the bucket-candidate
-    kernels do not repay."""
-    plan = _formatted_plan(Q.QUERIES[name](spark, sf_dir))
-    assert "RoundRobinPartitioning" not in plan, plan
-
-
 def test_ofn_reader_families_are_map_only(spark, tmp_path):
     """Every OFN axiom family except terms/typedefs (which join their
     label/definition assertions) must plan as scan -> regexp filter ->

@@ -754,3 +754,66 @@ def test_driver_grounding_equals_map_in_pandas(
         [dict(r, note="x") for r in records], schema=to_arrow_schema(wide_t)))
     on_driver = matcher.detect_mentions(wide, bc)
     assert on_driver.isLocal() and rows(on_driver) == got
+
+
+_COUNT_WORDS = ["alpha", "Alpha", "ALPHA", "α", "beta", "β", "gamma",
+                "beta-gamma", "Gamma–delta", "delta", "x"]
+_count_entry = st.tuples(
+    st.lists(st.sampled_from(["alpha", "beta", "gamma", "delta", "x"]),
+             min_size=1, max_size=3).map(" ".join),
+    st.sampled_from(["c:1", "c:2", "c:3"]),
+    st.sampled_from(["rdfs:label", "oboInOwl:hasExactSynonym",
+                     "oboInOwl:hasRelatedSynonym"]),
+)
+_count_text = st.one_of(
+    st.none(),
+    st.just(""),
+    st.lists(st.sampled_from(_COUNT_WORDS), max_size=10).flatmap(
+        lambda words: st.sampled_from([" ", "  ", "-"]).map(
+            lambda sep: sep.join(words))),
+)
+
+
+@given(
+    entries=st.lists(_count_entry, max_size=6),
+    rows=st.lists(
+        st.tuples(st.sampled_from(["d0", "d1", "d2"]), _count_text),
+        max_size=12,
+    ),
+    fold=st.booleans(),
+)
+@settings(max_examples=6, deadline=None)
+def test_mention_counts_equal_span_matches_counted(spark, entries, rows, fold):
+    """match_mention_counts (map-side combine, then a sum) equals every
+    match_text_spans candidate counted by a Spark groupBy. The fixed
+    entries overlap ("alpha beta" / "beta gamma"), repeat a token
+    ("alpha alpha"), tie on score ("alpha" as c:1 and c:2) and list one
+    text twice for one curie; rows repeat doc_ids across >= 2 partitions,
+    so per-batch partial counts must add up after the shuffle."""
+    from pyobo_spark.grounding import matcher
+
+    fixed = [
+        ("alpha", "c:1", "rdfs:label"),
+        ("Alpha", "c:2", "rdfs:label"),
+        ("alpha beta", "c:3", "oboInOwl:hasExactSynonym"),
+        ("beta gamma", "c:1", "oboInOwl:hasExactSynonym"),
+        ("alpha alpha", "c:2", "oboInOwl:hasRelatedSynonym"),
+        ("gamma", "c:3", "rdfs:label"),
+        ("gamma", "c:3", "oboInOwl:hasExactSynonym"),
+    ]
+    bc = spark.sparkContext.broadcast(build_matcher(fixed + entries))
+    fixed_rows = [("d0", None), ("d1", ""), ("d0", "alpha alpha beta gamma"),
+                  ("d1", "Alpha-Beta γ gamma"), ("d0", "alpha")]
+    spans = spark.createDataFrame(
+        [(d, i, t) for i, (d, t) in enumerate(fixed_rows + rows)],
+        "doc_id string, span_idx int, text string",
+    ).repartition(3)
+    assert spans.rdd.getNumPartitions() >= 2
+
+    got = sorted(
+        tuple(r) for r in matcher.match_mention_counts(spans, bc, fold)
+        .select("doc_id", "curie", "n_mentions").collect())
+    want = sorted(
+        tuple(r) for r in matcher.match_text_spans(spans, bc, fold)
+        .groupBy("doc_id", "curie").count().collect())
+    assert got == want
