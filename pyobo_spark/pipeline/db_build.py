@@ -12,17 +12,14 @@ getters.py:477-571) as a Spark job:
 
 from __future__ import annotations
 
-import json
 import time
-import traceback
 from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .footers import written_stats
-from .stages import counters as stage_counters
+from .footers import write_json, write_parquet
 
 
 def build_artifact(
@@ -46,7 +43,6 @@ def build_artifact(
             if strict:
                 raise
             failures[prefix] = f"{type(e).__name__}: {e}"
-            traceback.format_exc()  # formatted for the report only
     if not frames:
         raise ValueError(f"every source failed for artifact {artifact!r}")
 
@@ -55,30 +51,26 @@ def build_artifact(
         df = df.unionByName(f)
 
     path = Path(out_dir) / artifact
-    data_path = str(path / "data")
     t0 = time.time()
     # global sort = the reference's deterministic-output contract
-    # (utils/io.py:134); sort keys are all columns
-    df.na.drop(how="all").orderBy(*df.columns).write.mode("overwrite").parquet(
-        data_path
+    # (utils/io.py:134); sort keys are all columns. Counted by the first
+    # column, the source prefix: one value per source, so no limit
+    col = df.columns[0]
+    _, stats = write_parquet(
+        df.na.drop(how="all").orderBy(*df.columns), str(path / "data"),
+        (col,), limit=None,
     )
-    out = spark.read.schema(df.schema).parquet(data_path)
-    n_rows, sample = written_stats(out, data_path)
-    # counted by the first column, the source prefix: one value per
-    # source, so no limit
-    counters = stage_counters(out, (df.columns[0],), limit=None)[df.columns[0]]
     report = {
         "artifact": artifact,
-        "n_rows": n_rows,
+        "n_rows": stats["n_rows"],
         "n_prefixes_ok": len(frames),
         "failures": failures,
-        "counters": counters,
-        "sample": sample,
+        "counters": stats["counters"][col],
+        "sample": stats["sample"],
         "wall_sec": round(time.time() - t0, 3),
         "built_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    (path / "_METADATA.json").parent.mkdir(parents=True, exist_ok=True)
-    (path / "_METADATA.json").write_text(json.dumps(report, default=str, indent=1))
+    write_json(path / "_METADATA.json", report)
     return report
 
 

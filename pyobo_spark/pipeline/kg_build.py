@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..grounding import dictionary, matcher
 from ..normalize.curie import normalize_curies
 from ..operators import components, exports
+from .footers import write_json
 
 
 def build_literal_mappings(terms: DataFrame, synonyms: DataFrame) -> DataFrame:
@@ -176,19 +177,20 @@ def run_kg_pipeline_staged(
     Every inter-stage input goes through the snapshot: a restarted
     process reconstructs nothing from memory.
 
-    ``snapshot_table``: when set, every run that actually REBUILDS the
-    triples stage (not a skipped resume) also commits the triples into
-    an Iceberg-style :class:`~pyobo_spark.pipeline.snapshots.SnapshotTable`
-    at that root — each pipeline run becomes one immutable snapshot, so
-    downstream consumers get time travel across runs and a rollback
-    path when a bad build ships (the north rule's "Iceberg-snapshot
-    checkpoints" as the output contract, not just the resume contract).
-    The commit is recorded in a ``_SNAPSHOT_ID`` marker next to the
-    stage manifest, so a crash between the stage's manifest commit and
-    the snapshot commit is healed on resume (the skipped stage's bytes
-    are committed then) instead of skipping the snapshot forever. A
-    resume also recommits when ``expire_snapshots`` has dropped the
-    marker's snapshot (:func:`committed_snapshot_id`).
+    ``snapshot_table``: when set, every run that REBUILDS the triples
+    stage (not a skipped resume) also commits the triples as one
+    immutable snapshot of an Iceberg-style
+    :class:`~pyobo_spark.pipeline.snapshots.SnapshotTable` at that root
+    (time travel across runs and a rollback path when a bad build
+    ships: the north rule's "Iceberg-snapshot checkpoints" as the output
+    contract). The snapshot adopts the stage's parquet files by hard
+    link (``SnapshotTable.adopt``), so the triples are written once;
+    where hard links are not available it rewrites them. A
+    ``_SNAPSHOT_ID`` marker next to the stage manifest records the
+    commit, so a resume commits the skipped stage's files when a crash
+    came between the manifest and the snapshot, or when
+    ``expire_snapshots`` has dropped the marker's snapshot
+    (:func:`committed_snapshot_id`).
 
     ``_fail_before`` simulates a crash (test hook): raise just before
     the named stage, AFTER earlier stages committed.
@@ -234,16 +236,19 @@ def run_kg_pipeline_staged(
         ),
         counter_cols=("predicate_curie",),
     )
-    if snapshot_table is not None:
-        _commit_triples_snapshot(
-            spark, triples, root, snapshot_table,
-            rebuilt=not runner.results[-1].skipped,
-        )
+    stage = runner.results[-1]
+    if snapshot_table is not None and (
+        not stage.skipped
+        or committed_snapshot_id(spark, root, snapshot_table) is None
+    ):
+        from .snapshots import SnapshotTable
+
+        # marker after the commit: a crash between the two costs a
+        # duplicate snapshot of the same rows on resume, never a lost one
+        table = SnapshotTable(spark, snapshot_table)
+        sid = table.adopt(f"{stage.path}/data", triples)
+        write_json(Path(root) / "triples" / "_SNAPSHOT_ID", sid)
     return runner
-
-
-def _marker(root: str) -> Path:
-    return Path(root) / "triples" / "_SNAPSHOT_ID"
 
 
 def committed_snapshot_id(
@@ -254,29 +259,9 @@ def committed_snapshot_id(
     ``expire_snapshots`` has since dropped that snapshot."""
     from .snapshots import SnapshotTable
 
-    marker = _marker(root)
+    marker = Path(root) / "triples" / "_SNAPSHOT_ID"
     if not marker.exists():
         return None
     sid = int(marker.read_text())
     tbl = SnapshotTable(spark, snapshot_table)
     return sid if tbl._exists(tbl._snapshot_path(sid)) else None
-
-
-def _commit_triples_snapshot(
-    spark, triples, root: str, snapshot_table: str, rebuilt: bool
-) -> None:
-    """Commit the triples stage's bytes as one SnapshotTable snapshot,
-    at most once per rebuild. The marker is written AFTER the snapshot
-    commit, so the crash cases resolve to: crash before the snapshot →
-    resume recommits (marker absent); crash between snapshot and marker
-    → resume commits a duplicate snapshot of identical content (benign
-    — snapshots are cheap and immutable) rather than ever LOSING one.
-    A resume whose recorded snapshot was expired recommits too."""
-    from .snapshots import SnapshotTable
-
-    if not rebuilt and committed_snapshot_id(
-        spark, root, snapshot_table
-    ) is not None:
-        return
-    sid = SnapshotTable(spark, snapshot_table).overwrite(triples)
-    _marker(root).write_text(str(sid))

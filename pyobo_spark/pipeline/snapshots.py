@@ -8,39 +8,37 @@ three load-bearing semantics of its format (spec: iceberg.apache.org,
 v2 table spec) directly over parquet + a JSON metadata log:
 
 1. **File-manifest reads.** A snapshot is an immutable list of data
-   FILES (path, size, row count). Readers plan scans from the manifest
-   — never from directory listings, which at 100 TB / millions of
-   files is the difference between a millisecond plan and a minutes-long
-   S3 LIST storm. Orphan files from crashed commits are simply absent
-   from every manifest and therefore invisible.
-2. **Atomic pointer swap.** A commit writes its data files, then its
-   immutable snapshot JSON, and only then swaps ``metadata/_current``
-   via a Hadoop-FS rename (atomic on HDFS and local file systems). A
-   reader sees the old table or the new table, never a torn mix; a
-   crash at ANY point before the swap leaves the table unchanged.
+   FILES (path, size, row count). Readers plan scans from the manifest,
+   never from directory listings (at millions of files, a millisecond
+   plan instead of a minutes-long S3 LIST storm). Orphan files from
+   crashed commits are absent from every manifest, hence invisible.
+2. **Atomic pointer swap.** A commit puts its data files into a fresh
+   ``data/snap-N``, writes its immutable snapshot JSON, and only then
+   swaps ``metadata/_current`` via a Hadoop-FS rename (atomic on HDFS
+   and local file systems). A reader sees the old table or the new
+   one; a crash at ANY point before the swap leaves the table unchanged.
 3. **Time travel + rollback.** Every snapshot stays readable by id
-   (``read(snapshot_id=N)``) until expired by ``expire_snapshots`` —
-   the module's one destructive maintenance op; ``rollback(N)`` is just
-   a new pointer swap to an old snapshot — no data is rewritten, and
-   the rolled-over snapshots remain readable (until expired).
+   (``read(snapshot_id=N)``) until ``expire_snapshots`` (the one
+   destructive op) drops it; ``rollback(N)`` is a pointer swap to an
+   old snapshot, no data rewritten.
 
-Scale notes: all metadata operations are driver-side on KB-sized JSON
-(Iceberg's own model — manifests are metadata, data moves only through
-executors); ``append`` reuses the parent's file list, so committing a
-micro-batch to a billion-row table costs the new files plus one small
-JSON, not a rewrite. Data files are immutable once committed — the
-parquet writers here write into a fresh per-snapshot directory, so
-concurrent readers of older snapshots are never disturbed.
+A commit's files come from one of three places: ``overwrite`` and
+``append`` write a DataFrame (``append`` also reuses the parent's file
+list, so a micro-batch costs its new files plus one small JSON);
+``adopt`` takes parquet files another writer already wrote (a pipeline
+stage's) by HARD LINK, so nothing is rewritten. The snapshot's link and
+the writer's name share the bytes: a later rewrite of the writer's
+directory unlinks only its own names, ``expire_snapshots`` only the
+snapshot's. Where no hard link can be made (another device, a non-local
+URI) ``adopt`` falls back to rewriting the rows through ``overwrite``.
 
 **Single-writer assumption.** Commits are crash-safe but not
 concurrency-safe: two drivers committing to the same root can race the
-id probe. Real Iceberg serializes commits through a catalog
-compare-and-swap; this module targets the pipeline's model of one
-driver per table (the staged runner), and multi-driver deployments
-must add an external lock or catalog. Readers are safe against
-COMMITS — they only ever follow the atomically-swapped pointer to
-immutable files; ``expire_snapshots`` is the one op that deletes files
-and must not run under live time-travel readers of expired snapshots.
+id probe (Iceberg serializes commits through a catalog
+compare-and-swap; a multi-driver deployment needs a lock or catalog).
+Readers only follow the atomically-swapped pointer to immutable files,
+so commits never disturb them; ``expire_snapshots`` must not run under
+live time-travel readers of the snapshots it expires.
 
 Reference anchor: the reference's resumability is per-artifact
 ``path.is_file()`` checks (struct.py:1354, getters.py:166-176); this is
@@ -49,13 +47,34 @@ the same contract lifted to versioned-table semantics.
 
 from __future__ import annotations
 
+import errno
 import json
+import os
+import shutil
 import time
-from typing import Any
+from pathlib import Path
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .footers import summarize_files
+from .footers import data_files, local_path, summarize_files
+
+
+def _link_files(paths: list[str], directory: str) -> None:
+    """Hard-link each of ``paths`` into the new directory ``directory``.
+    OSError where that cannot be done (another device, a non-local
+    URI); a directory made for it is removed again."""
+    local = local_path(directory)
+    if "://" in local:
+        raise OSError(errno.EXDEV, "not a local path", directory)
+    target = Path(local)
+    target.mkdir(parents=True)
+    try:
+        for p in paths:
+            os.link(p, target / Path(p).name)
+    except OSError:
+        shutil.rmtree(target)
+        raise
 
 
 class SnapshotTable:
@@ -65,8 +84,7 @@ class SnapshotTable:
         self.spark = spark
         self.root = root.rstrip("/")
         self._meta_dir = f"{self.root}/metadata"
-        jvm = spark._jvm
-        self._jvm = jvm
+        self._jvm = jvm = spark._jvm
         self._Path = jvm.org.apache.hadoop.fs.Path
         conf = spark._jsc.hadoopConfiguration()
         self._fs = self._Path(self.root).getFileSystem(conf)
@@ -75,36 +93,34 @@ class SnapshotTable:
         # delete-then-rename opens a window where a crash loses the
         # pointer and a reader sees a missing file
         self._fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(conf)
-        gw = spark.sparkContext._gateway
-        self._overwrite_opt = gw.new_array(
-            jvm.org.apache.hadoop.fs.Options.Rename, 1
-        )
-        self._overwrite_opt[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+        rename = jvm.org.apache.hadoop.fs.Options.Rename
+        self._overwrite_opt = spark.sparkContext._gateway.new_array(rename, 1)
+        self._overwrite_opt[0] = rename.OVERWRITE
 
     # ------------------------------------------------------ fs helpers --
     def _exists(self, path: str) -> bool:
         return bool(self._fs.exists(self._Path(path)))
 
+    def _ls(self, directory: str) -> list:
+        """Hadoop statuses of ``directory``'s entries, markers and
+        checksums (``_*``, ``.*``) left out."""
+        return [
+            st for st in self._fs.listStatus(self._Path(directory))
+            if not st.getPath().getName().startswith(("_", "."))
+        ]
+
     def _read_text(self, path: str) -> str:
         stream = self._fs.open(self._Path(path))
         try:
-            data = bytes(
-                self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    stream
-                )
-            )
-            return data.decode("utf-8")
+            io = self._jvm.org.apache.commons.io.IOUtils
+            return bytes(io.toByteArray(stream)).decode("utf-8")
         finally:
             stream.close()
 
     def _write_text_atomic(self, path: str, text: str) -> None:
         """Write to a temp sibling then overwrite-rename — the commit
-        point. FileContext.rename(..., Rename.OVERWRITE) is a single
-        atomic operation on HDFS and local file systems, so there is no
-        delete window in which a crash could lose the pointer or a
-        reader could observe a missing file; on object stores an
-        Iceberg deployment swaps through a catalog instead — same
-        contract, different backend."""
+        point, one atomic operation on HDFS and local file systems (on
+        object stores an Iceberg deployment swaps through a catalog)."""
         tmp = f"{path}.tmp-{int(time.time() * 1000)}"
         stream = self._fs.create(self._Path(tmp), True)
         try:
@@ -119,24 +135,23 @@ class SnapshotTable:
     def _snapshot_path(self, snapshot_id: int) -> str:
         return f"{self._meta_dir}/snap-{snapshot_id:08d}.json"
 
+    def _snapshot_ids(self) -> list[int]:
+        """Ids of every snapshot JSON in the metadata log."""
+        names = [st.getPath().getName() for st in self._ls(self._meta_dir)]
+        return [
+            int(n[5:-5]) for n in names
+            if n.startswith("snap-") and n.endswith(".json")
+        ]
+
     def current_snapshot_id(self) -> int | None:
         ptr = f"{self._meta_dir}/_current"
         if self._exists(ptr):
             return int(self._read_text(ptr).strip())
-        # pointer missing but committed snapshots exist → recover to the
-        # LATEST committed snapshot by scanning the metadata log (the
-        # same version-hint fallback Iceberg's HadoopTableOperations
-        # uses). With the atomic overwrite-rename above this path only
-        # triggers for a table whose pointer file was externally
-        # removed; the data is never lost with it.
+        # pointer externally removed → recover to the LATEST committed
+        # snapshot from the metadata log (Iceberg's version-hint fallback)
         if not self._exists(self._meta_dir):
             return None
-        best = None
-        for st in self._fs.listStatus(self._Path(self._meta_dir)):
-            name = st.getPath().getName()
-            if name.startswith("snap-") and name.endswith(".json"):
-                best = max(best or 0, int(name[5:-5]))
-        return best
+        return max(self._snapshot_ids(), default=None)
 
     def _load_snapshot(self, snapshot_id: int) -> dict[str, Any]:
         path = self._snapshot_path(snapshot_id)
@@ -175,41 +190,31 @@ class SnapshotTable:
         ptr = f"{self._meta_dir}/_last_id"
         return int(self._read_text(ptr).strip()) if self._exists(ptr) else 0
 
-    def _commit(self, df: DataFrame, operation: str) -> int:
+    def _commit(self, operation: str, fill: Callable[[str], None]) -> int:
+        """Commit one snapshot: mint its id, have ``fill`` put its data
+        files into the fresh directory ``data/snap-N``, then publish the
+        files that are there. An error of ``fill`` propagates before
+        any metadata is written."""
         parent = self.current_snapshot_id()
-        # ids must NEVER be reused: not across rollbacks (parent+1 may
-        # exist), not across crashed commits (orphan data dir at
-        # parent+1 would die on mode('error') forever), and not after
-        # expire_snapshots deletes both artifacts of a rolled-over id —
-        # a reused id would silently resolve stored references (markers,
+        # ids are NEVER reused (across rollbacks, crashed commits and
+        # expiry): a reused id would resolve stored references (markers,
         # noted time-travel ids) to DIFFERENT content. The _last_id
         # high-water mark survives expiry; the existence probes cover
-        # pre-high-water-mark tables and crash leftovers.
+        # older tables and crash leftovers.
         new_id = max((parent or 0), self._last_minted_id()) + 1
         while self._exists(self._snapshot_path(new_id)) or self._exists(
             f"{self.root}/data/snap-{new_id:08d}"
         ):
             new_id += 1
         data_dir = f"{self.root}/data/snap-{new_id:08d}"
-        df.write.mode("error").parquet(data_dir)
-        files = []
-        n_rows = 0
-        for st in self._fs.listStatus(self._Path(data_dir)):
-            name = st.getPath().getName()
-            if name.startswith(("_", ".")):
-                continue
-            files.append(
-                {
-                    "path": f"{data_dir}/{name}",
-                    "size_bytes": int(st.getLen()),
-                }
-            )
-        # r7 (VERDICT r06 "what's wrong" #3): the row count comes from
-        # the parquet FOOTERS of the just-written files — a driver-side
-        # metadata read — instead of a spark.read.parquet().count()
-        # executor job per commit; the footer sum is the same number
-        # (parquet footers are authoritative). Non-local filesystems
-        # fall back to the count job.
+        fill(data_dir)
+        files = [
+            {"path": f"{data_dir}/{st.getPath().getName()}",
+             "size_bytes": int(st.getLen())}
+            for st in self._ls(data_dir)
+        ]
+        # the row count comes from the files' parquet FOOTERS (driver-side
+        # metadata, no job); non-local filesystems fall back to a count
         footer = summarize_files(f["path"] for f in files)
         n_rows = (
             footer[0]
@@ -220,16 +225,13 @@ class SnapshotTable:
             parent_snap = self._load_snapshot(parent)
             files = parent_snap["files"] + files
             n_rows += parent_snap["summary"]["n_rows"]
-        summary: dict[str, Any] = {"n_rows": n_rows, "n_files": len(files)}
         snap = {
             "snapshot_id": new_id,
             "parent_id": parent,
             "operation": operation,
             "files": files,
-            "summary": summary,
-            "committed_at": time.strftime(
-                "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-            ),
+            "summary": {"n_rows": n_rows, "n_files": len(files)},
+            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         # high-water mark first (a crash after this merely skips ids),
         # snapshot JSON second (immutable), pointer swap LAST — the only
@@ -238,20 +240,30 @@ class SnapshotTable:
         self._write_text_atomic(
             self._snapshot_path(new_id), json.dumps(snap, indent=1)
         )
-        self._write_text_atomic(
-            f"{self._meta_dir}/_current", str(new_id)
-        )
+        self._write_text_atomic(f"{self._meta_dir}/_current", str(new_id))
         return new_id
 
     def overwrite(self, df: DataFrame) -> int:
         """Commit ``df`` as the table's new full contents."""
-        return self._commit(df, "overwrite")
+        return self._commit("overwrite", df.write.mode("error").parquet)
 
     def append(self, df: DataFrame) -> int:
         """Commit ``df``'s rows on top of the current snapshot. The
         parent's data files are REUSED in the new manifest — a
         micro-batch append to a huge table writes only the new files."""
-        return self._commit(df, "append")
+        return self._commit("append", df.write.mode("error").parquet)
+
+    def adopt(self, directory: str, df: DataFrame) -> int:
+        """Commit the parquet files of ``directory``, which ``df`` reads,
+        as the table's new full contents without rewriting them: each
+        data file is hard-linked into the snapshot's directory. Where
+        no hard link can be made (another device, a non-local URI),
+        ``df`` is rewritten through :meth:`overwrite` instead."""
+        try:
+            files = data_files(directory)
+            return self._commit("overwrite", lambda d: _link_files(files, d))
+        except OSError:
+            return self.overwrite(df)
 
     def rollback(self, snapshot_id: int) -> None:
         """Point the table back at an earlier snapshot. Metadata-only;
@@ -259,29 +271,22 @@ class SnapshotTable:
         subsequent ``expire_snapshots`` drops them)."""
         if not self._exists(self._snapshot_path(snapshot_id)):
             raise ValueError(f"unknown snapshot {snapshot_id}")
-        self._write_text_atomic(
-            f"{self._meta_dir}/_current", str(snapshot_id)
-        )
+        self._write_text_atomic(f"{self._meta_dir}/_current", str(snapshot_id))
 
     def expire_snapshots(self, keep_last: int = 2) -> dict[str, int]:
         """Iceberg's table-maintenance op: drop all snapshots except the
         last ``keep_last`` of the CURRENT lineage (the current snapshot
-        is always kept), deleting data files that no surviving snapshot
-        references. Because ``append`` shares files across snapshots, a
-        file is reclaimed only when every snapshot naming it is expired
-        — the same reference-counting contract as Iceberg's
-        expire_snapshots. Rollback branches outside the kept set are
-        expired too. Returns counts for observability.
+        is always kept; rollback branches outside the kept set go too),
+        deleting the data files no surviving snapshot names. ``append``
+        shares files across snapshots, so a file is reclaimed only once
+        every snapshot naming it is expired (Iceberg's reference
+        counting); an adopted file loses only the snapshot's hard link.
+        Returns counts for observability.
 
-        At 100 TB this is the difference between a table whose storage
-        is bounded by its live contents and one that grows by a full
-        copy per overwrite-rebuild forever.
-
-        This is the module's ONE destructive operation: a concurrent
-        reader holding a time-travel DataFrame on an expired snapshot
-        fails mid-scan (Iceberg's expire has the identical caveat) —
-        run maintenance when no time-travel readers are live. Readers
-        of KEPT snapshots are unaffected."""
+        The module's ONE destructive operation: a concurrent reader
+        holding a time-travel DataFrame on an expired snapshot fails
+        mid-scan (as with Iceberg's) — run it when no time-travel
+        readers are live."""
         if keep_last < 1:
             # [-0:] would slice to the FULL history (keeping everything)
             # and negative values expire from the wrong end — both are
@@ -292,18 +297,13 @@ class SnapshotTable:
             return {"expired_snapshots": 0, "deleted_files": 0}
         keep_ids = {h["snapshot_id"] for h in self.history()[-keep_last:]}
         keep_ids.add(current)
-        all_ids = []
-        for st in self._fs.listStatus(self._Path(self._meta_dir)):
-            name = st.getPath().getName()
-            if name.startswith("snap-") and name.endswith(".json"):
-                all_ids.append(int(name[5:-5]))
         kept_files = set()
         for sid in keep_ids:
             kept_files.update(
                 f["path"] for f in self._load_snapshot(sid)["files"]
             )
         n_expired = n_deleted = 0
-        for sid in sorted(all_ids):
+        for sid in sorted(self._snapshot_ids()):
             if sid in keep_ids:
                 continue
             snap_dirs = set()
@@ -315,10 +315,7 @@ class SnapshotTable:
             # drop data dirs left with no visible files (write markers
             # like _SUCCESS only) — kept-file dirs are left alone
             for d in snap_dirs:
-                if self._exists(d) and not any(
-                    not st.getPath().getName().startswith(("_", "."))
-                    for st in self._fs.listStatus(self._Path(d))
-                ):
+                if self._exists(d) and not self._ls(d):
                     self._fs.delete(self._Path(d), True)
             # data files first, JSON last: a crash mid-expire leaves a
             # snapshot whose manifest names missing files (unreadable,

@@ -13,6 +13,7 @@ protocol).
 from __future__ import annotations
 
 import json
+import shutil
 import time
 from dataclasses import dataclass
 from pathlib import Path
@@ -22,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .footers import written_stats
+# ``counters`` is imported by name from here too
+from .footers import counters, write_json, write_parquet  # noqa: F401
 
 
 @dataclass
@@ -34,55 +36,29 @@ class StageResult:
     wall_sec: float
 
 
-#: Most distinct values one counter column reports (smallest first).
-COUNTER_LIMIT = 1000
-
-
-def counters(
-    df: DataFrame, cols: tuple[str, ...], limit: int | None = COUNTER_LIMIT
-) -> dict[str, dict]:
-    """{col: {value: rows}} for each of ``cols``, values ascending (nulls
-    first), at most ``limit`` per column: one aggregate per column."""
-    out = {}
-    for col in cols:
-        q = df.groupBy(col).agg(F.count(F.lit(1)).alias("n")).orderBy(col)
-        rows = (q if limit is None else q.limit(limit)).collect()
-        out[col] = {r[col]: r["n"] for r in rows}
-    return out
-
-
 class PipelineRunner:
     """Run named stages; each writes parquet plus a ``_MANIFEST.json``
-    (the reference's db_output_helper Counter/sample/metadata trio).
-
-    Where each manifest field comes from, for a stage that runs:
-
-    - ``n_rows``: the parquet footers of the written data files, read
-      on the driver (:mod:`.footers`) — no count job;
-    - ``sample``: the first ≤10 rows of those files, read with pyarrow;
-    - ``counters``: one aggregate per counter column over the written
-      snapshot (:func:`counters`), ≤ ``COUNTER_LIMIT`` values per
-      column — the only Spark jobs a stage adds to its write;
-    - ``n_partitions``: the read-back's scan planning (no job);
-    - ``wall_sec`` / ``committed_at``: the driver clock.
-
-    The read-back is planned with the built DataFrame's schema, so it
-    skips the schema-inference job. When pyarrow cannot open the files
-    (a non-local filesystem), ``n_rows`` and ``sample`` fall back to a
-    ``count()`` and a ``limit(10)`` collect.
+    (the reference's db_output_helper Counter/sample/metadata trio)
+    through :func:`.footers.write_parquet`, the step build reports
+    share: ``n_rows`` and ``sample`` come from the written files'
+    parquet footers (a ``count()`` and a ``limit(10)`` collect where
+    pyarrow cannot open them), ``counters`` from one aggregate per
+    counter column (≤ ``COUNTER_LIMIT`` values) — the only Spark jobs a
+    stage adds to its write — and ``n_partitions`` from the read-back's
+    scan planning. The manifest is published last, atomically
+    (:func:`.footers.write_json`).
 
     A stage whose manifest exists is skipped: its data is read back
-    with the manifest's ``schema`` (the built DataFrame's; no inference
-    job) and its manifest's ``n_rows`` reported."""
+    with the manifest's ``schema`` (no inference job) and its
+    manifest's ``n_rows`` reported. A stage that runs first removes its
+    directory, so no mark of an earlier build outlives the data its
+    write replaces."""
 
     def __init__(self, spark: SparkSession, root: str, force: bool = False):
         self.spark = spark
         self.root = Path(root)
         self.force = force
         self.results: list[StageResult] = []
-
-    def _manifest_path(self, name: str) -> Path:
-        return self.root / name / "_MANIFEST.json"
 
     def stage(
         self,
@@ -91,7 +67,7 @@ class PipelineRunner:
         counter_cols: tuple[str, ...] = (),
     ) -> DataFrame:
         out_dir = self.root / name
-        manifest = self._manifest_path(name)
+        manifest = out_dir / "_MANIFEST.json"
         if manifest.exists() and not self.force:
             meta = json.loads(manifest.read_text())
             reader = self.spark.read
@@ -103,29 +79,26 @@ class PipelineRunner:
             )
             return df
 
+        # unpublish an earlier build (its manifest, ``_SNAPSHOT_ID``)
+        # before the write replaces its data
+        shutil.rmtree(out_dir, ignore_errors=True)
         t0 = time.time()
         df = build()
-        data_path = str(out_dir / "data")
-        df.write.mode("overwrite").parquet(data_path)
-        out = self.spark.read.schema(df.schema).parquet(data_path)
-        n_rows, sample = written_stats(out, data_path)
+        out, stats = write_parquet(df, str(out_dir / "data"), counter_cols)
         meta = {
             "stage": name,
-            "n_rows": n_rows,
+            **stats,
             "n_partitions": out.rdd.getNumPartitions(),
             "schema": df.schema.jsonValue(),
-            "counters": counters(out, counter_cols),
-            "sample": sample,
             "wall_sec": round(time.time() - t0, 3),
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        manifest.parent.mkdir(parents=True, exist_ok=True)
-        # commit-then-mark: manifest written only after a successful write,
-        # so a crashed stage re-runs from scratch (no torn snapshots)
-        manifest.write_text(json.dumps(meta, default=str, indent=1))
-        self.results.append(
-            StageResult(name, str(out_dir), False, n_rows, meta["wall_sec"])
-        )
+        # commit-then-mark: the manifest is published only after the
+        # write succeeded, so a crashed stage re-runs from scratch
+        write_json(manifest, meta)
+        self.results.append(StageResult(
+            name, str(out_dir), False, meta["n_rows"], meta["wall_sec"]
+        ))
         return out
 
     def write_partitioned(

@@ -408,3 +408,181 @@ def test_staged_build_keeps_every_ontologys_hierarchy(spark, tmp_path):
     assert {o for s, o in sub_class if s == "chebi:24867"} == {
         "chebi:24870", "chebi:33238"
     }  # monoatomic ion → ion, monoatomic entity
+
+
+def test_torn_manifest_does_not_block_resume(spark, tmp_path, monkeypatch):
+    """A crash half-way through writing a stage's ``_MANIFEST.json``
+    must not leave a mark that a resume takes for a commit: the re-run
+    rebuilds the stage and leaves a parseable manifest."""
+    import json
+    from pathlib import Path
+
+    from pyobo_spark.pipeline.stages import PipelineRunner
+
+    src = spark.range(20).selectExpr("id", "cast(id % 3 AS string) AS a")
+    root = str(tmp_path / "stages")
+    write_text = Path.write_text
+
+    def torn(self, text, *args, **kwargs):
+        if "_MANIFEST.json" in self.name:
+            write_text(self, text[: len(text) // 2], *args, **kwargs)
+            raise OSError("crash mid-write")
+        return write_text(self, text, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(Path, "write_text", torn)
+        with pytest.raises(OSError, match="crash mid-write"):
+            PipelineRunner(spark, root).stage("one", lambda: src, ("a",))
+
+    runner = PipelineRunner(spark, root)
+    out = runner.stage("one", lambda: src, ("a",))
+    assert not runner.results[0].skipped
+    meta = json.loads((tmp_path / "stages" / "one" / "_MANIFEST.json").read_text())
+    assert meta["n_rows"] == out.count() == 20
+    assert meta["counters"]["a"] == {"0": 7, "1": 7, "2": 6}
+
+
+def test_crashed_forced_rebuild_is_not_resumed(spark, tmp_path):
+    """A forced rebuild that crashes mid-write (after Spark has replaced
+    the stage's data) must not leave the earlier build's manifest
+    behind: the next run rebuilds the stage instead of skipping it over
+    missing rows."""
+    from pyobo_spark.pipeline.stages import PipelineRunner
+
+    src = spark.range(20).selectExpr("id")
+    root = str(tmp_path / "stages")
+    PipelineRunner(spark, root).stage("one", lambda: src)
+    bad = src.select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        PipelineRunner(spark, root, force=True).stage("one", lambda: bad)
+
+    runner = PipelineRunner(spark, root)
+    out = runner.stage("one", lambda: src)
+    assert not runner.results[0].skipped
+    assert out.count() == runner.results[0].n_rows == 20
+
+
+def test_triples_snapshot_crash_windows(spark, tables, tmp_path, monkeypatch):
+    """The two crash windows around the triples snapshot. A crash in the
+    snapshot commit after the triples stage committed: the resume
+    commits the stage's triples. A crash writing ``_SNAPSHOT_ID`` after
+    the snapshot commit: the resume may commit a second snapshot of the
+    same rows, but never leaves the table without one."""
+    from collections import Counter
+    from pathlib import Path
+
+    from pyobo_spark.pipeline.snapshots import SnapshotTable
+
+    root, tbl_root = str(tmp_path / "stages"), str(tmp_path / "tbl")
+    tbl = SnapshotTable(spark, tbl_root)
+
+    def build(**kwargs):
+        return kg_build.run_kg_pipeline_staged(
+            spark, tables, root, snapshot_table=tbl_root, **kwargs
+        )
+
+    def current_holds_stage_triples():
+        stage = spark.read.parquet(f"{root}/triples/data").collect()
+        return Counter(tbl.read().collect()) == Counter(stage)
+
+    swap = SnapshotTable._write_text_atomic
+
+    def crash_at_swap(self, path, text):
+        if path.endswith("/_current"):
+            raise RuntimeError("crash in the snapshot commit")
+        return swap(self, path, text)
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "_write_text_atomic", crash_at_swap)
+        with pytest.raises(RuntimeError, match="snapshot commit"):
+            build()
+    assert (Path(root) / "triples" / "_MANIFEST.json").exists()
+    assert kg_build.committed_snapshot_id(spark, root, tbl_root) is None
+    runner = build()
+    assert all(r.skipped for r in runner.results)
+    first = kg_build.committed_snapshot_id(spark, root, tbl_root)
+    assert first == tbl.current_snapshot_id()
+    assert current_holds_stage_triples()
+
+    write_text = Path.write_text
+
+    def crash_at_marker(self, *args, **kwargs):
+        if "_SNAPSHOT_ID" in self.name:
+            raise RuntimeError("crash writing the marker")
+        return write_text(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(Path, "write_text", crash_at_marker)
+        with pytest.raises(RuntimeError, match="marker"):
+            build(force=True)
+    committed = tbl.current_snapshot_id()
+    assert committed > first
+    assert current_holds_stage_triples()
+    runner = build()
+    assert all(r.skipped for r in runner.results)
+    assert tbl.current_snapshot_id() >= committed
+    assert current_holds_stage_triples()
+
+
+@pytest.mark.parametrize("hard_links", [True, False])
+def test_triples_snapshot_adopts_stage_files(
+    spark, tables, tmp_path, monkeypatch, hard_links
+):
+    """The triples snapshot hard-links the stage's data files (each
+    shares its inode with the stage file) instead of rewriting them.
+    Where no hard link can be made (EXDEV), the rows are rewritten.
+    Either way snapshot 1 stays readable after a forced rebuild and
+    after ``expire_snapshots`` drops the other snapshots, and the
+    stage keeps its files."""
+    import errno
+    import os
+    from collections import Counter
+    from pathlib import Path
+
+    from pyobo_spark.pipeline.snapshots import SnapshotTable
+
+    if not hard_links:
+        def exdev(src, dst, *args, **kwargs):
+            raise OSError(errno.EXDEV, "Invalid cross-device link", src)
+
+        monkeypatch.setattr(os, "link", exdev)
+    root, tbl_root = str(tmp_path / "stages"), str(tmp_path / "tbl")
+    data = Path(root) / "triples" / "data"
+
+    def rows(df):
+        return Counter(df.collect())
+
+    kg_build.run_kg_pipeline_staged(spark, tables, root, snapshot_table=tbl_root)
+    tbl = SnapshotTable(spark, tbl_root)
+    triples = rows(spark.read.parquet(str(data)))
+    assert rows(tbl.read(snapshot_id=1)) == triples
+    if hard_links:
+        inodes = {f.name: os.stat(f).st_ino for f in data.glob("part-*")}
+        snap_files = [f["path"] for f in tbl._load_snapshot(1)["files"]]
+        assert {Path(p).name: os.stat(p).st_ino for p in snap_files} == inodes
+
+    kg_build.run_kg_pipeline_staged(
+        spark, tables, root, force=True, snapshot_table=tbl_root
+    )
+    assert tbl.current_snapshot_id() == 2
+    assert rows(tbl.read(snapshot_id=1)) == triples
+    tbl.rollback(1)
+    tbl.expire_snapshots(keep_last=1)
+    assert [h["snapshot_id"] for h in tbl.history()] == [1]
+    assert rows(tbl.read(snapshot_id=1)) == triples
+    assert rows(spark.read.parquet(str(data))) == triples
+
+
+def test_adoption_refuses_a_non_local_table(tmp_path, monkeypatch):
+    """Hard links need a local table root: for another URI scheme the
+    link step raises OSError (adoption then rewrites the rows) and
+    makes no directory, not even a relative one named after the URI."""
+    from pyobo_spark.pipeline.snapshots import _link_files
+
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(OSError):
+        _link_files([], "hdfs://namenode:8020/tbl/data/snap-00000001")
+    assert not any(tmp_path.iterdir())
